@@ -112,7 +112,12 @@ object CommitBench {
       CommitLogIngest.liveFiles(spark, table, latest); ()
     })
     val resolveFullS = minOf2(() => {
-      graft.sources.TimeTravel.snapshotFiles(spark, s"$table/log", latest)
+      spark.read.parquet(s"$table/log")
+        .filter(col("version") <= latest)
+        .groupBy(col("path"))
+        .agg(max_by(col("action"), col("version")).as("last"))
+        .filter(col("last") === "add")
+        .select("path").collect()
       ()
     })
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{HttpReceiver, RequestSource}
+import graft.sources.{FastHttpReceiver, RequestSource}
 import graft.streaming.IngestPipeline
 
 /** Sustained HTTP-ingest throughput — the same measurement the reference
@@ -18,9 +18,9 @@ import graft.streaming.IngestPipeline
   *
   * This main drives the REAL edge-to-sink path: N keep-alive HTTP clients
   * POST `(<i>)` bodies against 3 rotating tables (the reference's
-  * bench_test.go:13-37 workload shape) into [[HttpReceiver]] (8 server
-  * threads, like the reference's 8-CPU run), the drop-directory file
-  * stream feeds [[IngestPipeline]] (2 s micro-batches — the reference's
+  * bench_test.go:13-37 workload shape) into [[FastHttpReceiver]] (one
+  * thread per connection), the drop-directory file stream feeds
+  * [[IngestPipeline]] (2 s micro-batches — the reference's
   * `syncsec` default), and a counting sink acks every aggregated group.
   * Two numbers come out:
   *
@@ -36,9 +36,9 @@ import graft.streaming.IngestPipeline
   * local-mode (sends execute in this JVM) — cluster instrumentation
   * would use the pipeline's observe() metrics instead.
   *
-  * Usage: `sbt "runMain graft.IngestBench [nReqs] [concurrency] [edge]"`
-  * with edge `jdk` (default) or `fast` ([[graft.sources.FastHttpReceiver]])
-  * — prints one JSON line on stdout (saved as BENCH_STREAM.json).
+  * Usage: `sbt "runMain graft.IngestBench [nReqs] [concurrency] [sink]"`
+  * with sink `count` (default) or `lake` — prints one JSON line on stdout
+  * (saved as BENCH_STREAM.json).
   */
 object IngestBench {
 
@@ -53,13 +53,12 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val nReqs = args.headOption.map(_.toInt).getOrElse(100000)
     val conc = args.lift(1).map(_.toInt).getOrElse(10)
-    val edge = args.lift(2).getOrElse("jdk")
     // sink `count` = the reference-comparable ACK sink; `lake` = the
     // full proxy-on-lakehouse path (round-13 verdict task 7): the edge
     // stream lands in a commit-log TABLE through the exactly-once
     // streaming sink, so "delivered" means a committed, queryable
     // version — the number also reports the commit cadence
-    val sinkMode = args.lift(3).getOrElse("count")
+    val sinkMode = args.lift(2).getOrElse("count")
     val warmupReqs = math.min(5000, nReqs / 2)
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -77,12 +76,8 @@ object IngestBench {
     val ckptDir = Files.createTempDirectory("ingestbench-ckpt").toString
     // queue cap above nReqs: the bench measures the pipeline, not the
     // receiver's 503 backpressure (that path has its own spec)
-    val rx = (edge match {
-      case "fast" => new graft.sources.FastHttpReceiver(dropDir,
-        rollMillis = 100, maxQueued = nReqs + warmupReqs)
-      case _ => new HttpReceiver(dropDir, rollMillis = 100,
-        maxQueued = nReqs + warmupReqs)
-    }).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 100,
+      maxQueued = nReqs + warmupReqs).start()
     val lakeTable = Files.createTempDirectory("ingestbench-lake")
       .toString + "/t"
     val q = sinkMode match {
@@ -230,7 +225,7 @@ object IngestBench {
         case _ => ""
       }
       println(
-        f"""{"metric":"ingest_http","edge":"$edge","reqs":$nReqs,""" +
+        f"""{"metric":"ingest_http","edge":"fast","reqs":$nReqs,""" +
           f""""concurrency":$conc,""" +
           f""""http_reqs_per_s":$httpRate%.1f,"ms_per_req":$msPerReq%.4f,""" +
           f""""post_wall_s":$postWall%.3f,"e2e_wall_s":$e2eWall%.3f,""" +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.sinks.{ClickHouseSink, MetricStorage}
-import graft.sources.RequestSource
+import graft.sources.{FastHttpReceiver, RequestSource}
 import graft.streaming.{IngestPipeline, MetricFlusher}
 
 /** Deployable twin of the reference's process (/root/reference/main.go):
@@ -23,8 +23,6 @@ import graft.streaming.{IngestPipeline, MetricFlusher}
   *   --graphite <host:port>  optional metric sink
   *   --listen <port>    HTTP receiver port (main.go:164-260 parity):
   *                      POST / → drop dir, GET / health, /status, /statistic
-  *   --edge <jdk|fast>  receiver backend (default jdk; fast = the
-  *                      blocking-socket edge, ~2× the accept rate)
   */
 object ProxyApp {
   def main(args: Array[String]): Unit = {
@@ -52,12 +50,8 @@ object ProxyApp {
 
     // world-facing edge (O-1/O-2): HTTP → drop-dir files → fileStream
     val receiver = opts.get("listen").map { p =>
-      val st = () => IngestPipeline.dlqStatus(spark, dlq)
-      (opts.getOrElse("edge", "jdk") match {
-        case "fast" =>
-          new graft.sources.FastHttpReceiver(drop, p.toInt, status = st)
-        case _ => new graft.sources.HttpReceiver(drop, p.toInt, status = st)
-      }).start()
+      new FastHttpReceiver(drop, p.toInt,
+        status = () => IngestPipeline.dlqStatus(spark, dlq)).start()
     }
 
     val ingest = IngestPipeline.start(

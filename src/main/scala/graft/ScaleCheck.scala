@@ -50,7 +50,7 @@ object ScaleCheck {
     graft.sources.Compaction.clearCache()
     graft.sources.IncrementalRollup.clearCache()
     graft.sources.SchemaEvolution.clearCache()
-    graft.sources.FileIndex.clearCache()
+    graft.sources.CommitLogReads.clearCache()
   }
 
   def main(args: Array[String]): Unit = {

@@ -35,8 +35,7 @@ object SparkEntry {
       graft.sources.ZOrderLayout.queries ++
       graft.sources.IncrementalRollup.queries ++
       graft.sources.SchemaEvolution.queries ++
-      graft.sources.FileIndex.queries ++
-      graft.sources.TimeTravel.queries ++
+      graft.sources.CommitLogReads.queries ++
       graft.sources.OptimizeCommit.queries ++
       graft.sources.CommitSchemaEvolution.queries ++
       graft.sources.DsvWrite.queries ++

@@ -1626,9 +1626,10 @@ object Dedup {
     // (source_a < source_b) pairs the old sorted-set expansion walked, and
     // n_shared = Σ over masks containing both bits of that mask's hash
     // count. Sources beyond 63 (never observed; corpus property, not an
-    // SF property) fall back to the round-15 set-collect shape.
+    // SF property) fall back to the round-15 set-collect shape, and so
+    // does an empty corpus (no source to take bit 0).
     val (sh, srcs) = sourceGramsWithSrcs(spark, sfDir)
-    if (srcs.length > 63) {
+    if (srcs.isEmpty || srcs.length > 63) {
       val multi = sh.groupBy(col("h")).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).select("h")
       sh.join(multi, Seq("h"))

@@ -5,14 +5,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-/** The receiver-side spool shared by [[HttpReceiver]] and
-  * [[FastHttpReceiver]]: accepted requests append to an in-memory queue
-  * and a flusher thread rolls the queue into a complete drop file (write
-  * temp + atomic rename) every `rollMillis`, so the streaming file source
-  * never observes a half-written file. Bounded: past `maxQueued` the
-  * offer is refused and the HTTP edge answers 503 — ACKing into an
-  * unbounded queue would turn a stuck drop dir (disk full, unwritable)
-  * into silent loss-on-crash of everything acked since. */
+/** The receiver-side spool of [[FastHttpReceiver]]: accepted requests
+  * append to an in-memory queue and a flusher thread rolls the queue into
+  * a complete drop file (write temp + atomic rename) every `rollMillis`,
+  * so the streaming file source never observes a half-written file.
+  * Bounded: past `maxQueued` the offer is refused and the HTTP edge
+  * answers 503 — ACKing into an unbounded queue would turn a stuck drop
+  * dir (disk full, unwritable) into silent loss-on-crash of everything
+  * acked since. */
 final class DropSpool(dropDir: String, rollMillis: Long, maxQueued: Int) {
 
   val outFiles = new AtomicLong(0)

@@ -6,32 +6,44 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
-/** Lean blocking-socket HTTP/1.1 edge — the accept-rate-critical
-  * alternative to [[HttpReceiver]], same surface, same [[DropSpool]],
-  * status-for-status parity with the reference listener
-  * (/root/reference/main.go:164-260; parity cases spec'd in
-  * FastHttpReceiverSpec, which runs the SAME suite as HttpReceiverSpec).
+/** The HTTP edge of the drop-directory ingest source — the piece that
+  * makes [[graft.ProxyApp]] a drop-in for the reference's listener
+  * (main.go:164-260), status for status:
   *
-  * Why it exists: the JDK `com.sun.net.httpserver` tops out around half
-  * the reference's published ApacheBench c=10 rate on this workload —
-  * per-exchange allocation and header objects, not I/O, dominate at
-  * ~200-byte requests. This edge parses only what the routes need
-  * (request line, Content-Length, Connection) straight off the stream,
-  * answers from precomputed response bytes, and runs one blocking thread
-  * per connection (keep-alive workloads hold few connections; ApacheBench
-  * `-c 10` is exactly 10). Measured with `graft.IngestBench 100000 10
-  * fast`: 114.4k req/s accepted (with line/body hardening bounds) vs the
-  * JDK edge's 84.4k and the reference's published 49.3k (BENCH_STREAM.json / BENCH_NOTES round 9).
+  *  - `POST /`  (dorequest, main.go:180-226): body + raw URI are queued and
+  *    rolled by [[DropSpool]] into JSON-lines files in the drop directory,
+  *    which [[RequestSource.fileStream]] tails. Empty body → 405 "No data
+  *    given.", non-root path → 404, other methods → 405.
+  *  - `GET /`   (main.go:172-178): health — `status = "OK"`.
+  *  - `GET /status` (showstatus, main.go:228-245): DLQ backlog mapped to
+  *    200/400/500 via a caller-supplied status function (wire to
+  *    `IngestPipeline.dlqStatus`).
+  *  - `GET /statistic` (showstatistic, main.go:247-255): connection and
+  *    per-state tallies, in/out request counters.
+  *
+  * A lean blocking-socket HTTP/1.1 server rather than the JDK
+  * `com.sun.net.httpserver`, which topped out around half the reference's
+  * published ApacheBench c=10 rate on this workload — per-exchange
+  * allocation and header objects, not I/O, dominate at ~200-byte
+  * requests. This edge parses only what the routes need (request line,
+  * Content-Length, Connection) straight off the stream, answers from
+  * precomputed response bytes, and runs one blocking thread per
+  * connection (keep-alive workloads hold few connections; ApacheBench
+  * `-c 10` is exactly 10). Measured with `graft.IngestBench 100000 10`:
+  * 114.4k req/s accepted (with line/body hardening bounds) vs the JDK
+  * server's 84.4k and the reference's published 49.3k (BENCH_STREAM.json
+  * / BENCH_NOTES round 9).
   *
   * Protocol scope, deliberately minimal like the reference (which also
   * answers only origin-form requests from trusted producers): HTTP/1.1
   * keep-alive + HTTP/1.0 close-by-default, Content-Length bodies only
   * (chunked POSTs get 411 — the reference's producers, and ours, always
   * send Content-Length), no TLS (the reference terminates plaintext
-  * too). */
+  * too). Not a Spark component: Spark's unit of ingest is a file, and
+  * ingest metrics stay with the pipeline (which sees every request). */
 final class FastHttpReceiver(dropDir: String, port: Int = 0,
     rollMillis: Long = 200L, status: () => Int = () => 200,
-    maxQueued: Int = 100000) extends IngestReceiver {
+    maxQueued: Int = 100000) {
 
   val inRequests = new AtomicLong(0)
   val totalRequests = new AtomicLong(0)   // state "new": requests parsed
@@ -40,8 +52,7 @@ final class FastHttpReceiver(dropDir: String, port: Int = 0,
   private val spool = new DropSpool(dropDir, rollMillis, maxQueued)
   private val server = new ServerSocket()
   @volatile private var running = true
-  // daemon threads: like the JDK edge after the round-9 stop() fix, the
-  // receiver must never keep a JVM alive on its own
+  // daemon threads: the receiver must never keep a JVM alive on its own
   private val pool = Executors.newCachedThreadPool(r => {
     val t = new Thread(r, "fast-http-conn"); t.setDaemon(true); t
   })
@@ -69,8 +80,7 @@ final class FastHttpReceiver(dropDir: String, port: Int = 0,
   // edge-hardening bounds: a request/header line or declared body length
   // past these is refused, not buffered — `new Array[Byte](clen)` on an
   // attacker-controlled Content-Length would allocate before reading a
-  // single body byte (the JDK edge inherits equivalent line caps from
-  // com.sun.net.httpserver; the body cap is deliberately generous — the
+  // single body byte (the body cap is deliberately generous — the
   // reference reads bodies unbounded)
   private val MaxLineBytes = 16384
   private val MaxBodyBytes = 256 << 20
@@ -199,9 +209,9 @@ final class FastHttpReceiver(dropDir: String, port: Int = 0,
               else {
                 val qi = target.indexOf('?')
                 val path = if (qi < 0) target else target.substring(0, qi)
-                // route order identical to HttpReceiver: /status and
-                // /statistic answer ANY method, then non-root 404, then
-                // method dispatch on "/"
+                // route order of the reference: /status and /statistic
+                // answer ANY method, then non-root 404, then method
+                // dispatch on "/"
                 if (chunked) {
                   // can't skip an unread chunked body safely on keep-alive
                   respond(out, 411, "Content-Length required.", close = true)

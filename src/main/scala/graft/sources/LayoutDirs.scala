@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{concat, lit, raise_error, regexp_replace,
 
 /** Shared filesystem helpers for the fingerprinted-layout caches
   * (EventsLayout, BucketedTables, ZOrderLayout, Compaction,
-  * IncrementalRollup, SchemaEvolution, TimeTravel, CommitLogIngest) —
+  * IncrementalRollup, SchemaEvolution, CommitLogIngest) —
   * one copy of the semantics every layout needs instead of eight. */
 object LayoutDirs {
 
@@ -109,7 +109,7 @@ object LayoutDirs {
   * used to hand-roll (~45 lines apiece): a cached layout is valid while
   * the source parquet's fingerprint is unchanged, a stale one is evicted
   * and rebuilt, and a SINGLE JVM shutdown hook (registered on first use,
-  * never per rebuild — the round-9 TimeTravel hook-accumulation lesson)
+  * never per rebuild — the round-9 hook-accumulation lesson)
   * reclaims whatever is cached at exit. `cleanup` receives the cached
   * value; builds are serialized by the cache's lock (the faces build
   * once per SF per session). */

@@ -8,12 +8,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.LayoutDirs
 
-/** Streaming ingest INTO the commit-log table format (the write-path
-  * companion of `sources/TimeTravel`): each micro-batch lands as ONE
-  * table version — the batch's rows are written to a fresh immutable
-  * file set, then add-actions for those files are committed as the log
-  * partition `log/version=N`. Readers compose unchanged: "the table at
-  * version V" is the log's last-action-wins path set, so a reader
+/** Streaming ingest INTO the commit-log table format (the write path;
+  * `sources/CommitLogReads` registers its reads): each micro-batch lands
+  * as ONE table version — the batch's rows are written to a fresh
+  * immutable file set, then add-actions for those files are committed as
+  * the log partition `log/version=N`. Readers compose unchanged: "the
+  * table at version V" is the log's last-action-wins path set, so a reader
   * pinned at V is isolated from every later commit, and the latest
   * snapshot is always a consistent prefix of the stream — the
   * lakehouse contract a 100-TB pipeline lands raw data under.
@@ -345,7 +345,7 @@ object CommitLogIngest {
   /** Commit one micro-batch as table version `batchId`, exactly once.
     * With `statsCol` set, per-file min/max/count stats over that column
     * are captured AT COMMIT TIME into `index/version=N` — the streaming
-    * half of the E-123 story (the batch side is TimeTravel's index):
+    * half of the E-123 story (the batch side is [[commitAppend]]):
     * index rows are keyed by immutable path, written in the same
     * idempotence unit as the log version, so the index can never refer
     * to a version the log doesn't have. */
@@ -3159,7 +3159,7 @@ object CommitLogIngest {
   }
 
   /** The table at `version` (or the latest committed version when
-    * negative) — the TimeTravel read over this stream's log, under the
+    * negative) — the time-travel read over this stream's log, under the
     * schema DECLARED AS OF that version: files from an older generation
     * surface NULL for columns added later (parquet fills missing
     * columns), and a version pinned before a schema change reads under

@@ -73,6 +73,17 @@ class DegenerateCorpusSpec extends SparkSuite {
     assert(math.abs(r.getDouble(3) - 0.4286) < 1e-4)
   }
 
+  test("cross-contamination of an empty corpus is the empty frame") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-empty").toString
+    Seq.empty[(Long, String, String, String, Long)]
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = graft.operators.Dedup.crossContamination(s, dir).collect()
+    assert(rows.isEmpty, s"${rows.length} pairs from no documents")
+  }
+
   private lazy val raggedDir: String = {
     val s = spark
     import s.implicits._

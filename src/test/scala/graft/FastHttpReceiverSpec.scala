@@ -3,23 +3,16 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
-import graft.sources.{FastHttpReceiver, HttpReceiver, IngestReceiver, RequestSource}
+import graft.sources.{FastHttpReceiver, RequestSource}
 import graft.streaming.IngestPipeline
 
 /** The reference's own end-to-end invariant, over real HTTP
   * (main_test.go:26-61): concurrent POSTs against the listener all get
   * buffered, flushed, and delivered downstream exactly once. Plus the
   * status surface: GET / health (main.go:172-178), /status thresholds
-  * (main.go:228-245), /statistic counters (main.go:247-255).
-  *
-  * Abstract over the edge implementation: [[HttpReceiverSpec]] runs it
-  * against the JDK-server edge, [[FastHttpReceiverSpec]] against the
-  * blocking-socket edge — one contract, two backends. */
-abstract class ReceiverContractSpec extends SparkSuite {
-
-  /** Same parameter surface as both receivers' constructors. */
-  def mkReceiver(dropDir: String, rollMillis: Long = 200L,
-      status: () => Int = () => 200, maxQueued: Int = 100000): IngestReceiver
+  * (main.go:228-245), /statistic counters (main.go:247-255), and the
+  * edge's hardening bounds on malformed and oversized requests. */
+class FastHttpReceiverSpec extends SparkSuite {
 
   private val client = HttpClient.newHttpClient()
 
@@ -35,7 +28,7 @@ abstract class ReceiverContractSpec extends SparkSuite {
   test("concurrent POSTs → drop files → pipeline delivers every row (main_test.go:26-61)") {
     val s = spark
     val dropDir = Files.createTempDirectory("drop").toString
-    val rx = mkReceiver(dropDir, rollMillis = 50).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 50).start()
     val sink = TestSink()
     val q = IngestPipeline.start(
       RequestSource.fileStream(s, dropDir).select("uri", "body"),
@@ -68,7 +61,7 @@ abstract class ReceiverContractSpec extends SparkSuite {
 
   test("GET / health, 404, empty POST 405, bad method, /statistic") {
     val dropDir = Files.createTempDirectory("drop").toString
-    val rx = mkReceiver(dropDir, rollMillis = 50).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 50).start()
     try {
       val health = get(rx.boundPort, "/")
       assert(health.statusCode() == 200 && health.body() == "status = \"OK\"\r\n")
@@ -112,7 +105,7 @@ abstract class ReceiverContractSpec extends SparkSuite {
   test("queue cap: POSTs get 503 instead of unbounded-buffer acks") {
     val dropDir = Files.createTempDirectory("drop").toString
     // huge roll interval so nothing drains during the test
-    val rx = mkReceiver(dropDir, rollMillis = 60000, maxQueued = 3).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 60000, maxQueued = 3).start()
     try {
       (1 to 3).foreach { i =>
         assert(post(rx.boundPort, "/?query=q", s"($i)").statusCode() == 200)
@@ -127,7 +120,7 @@ abstract class ReceiverContractSpec extends SparkSuite {
     val s = spark
     val dropDir = Files.createTempDirectory("drop").toString
     val dlqDir = Files.createTempDirectory("dlq").toString
-    val rx = mkReceiver(dropDir,
+    val rx = new FastHttpReceiver(dropDir,
       status = () => IngestPipeline.dlqStatus(s, dlqDir)).start()
     try {
       assert(get(rx.boundPort, "/status").statusCode() == 200)
@@ -137,20 +130,6 @@ abstract class ReceiverContractSpec extends SparkSuite {
       assert(get(rx.boundPort, "/status").statusCode() == 500)
     } finally rx.stop()
   }
-}
-
-class HttpReceiverSpec extends ReceiverContractSpec {
-  def mkReceiver(dropDir: String, rollMillis: Long,
-      status: () => Int, maxQueued: Int): IngestReceiver =
-    new HttpReceiver(dropDir, rollMillis = rollMillis, status = status,
-      maxQueued = maxQueued)
-}
-
-class FastHttpReceiverSpec extends ReceiverContractSpec {
-  def mkReceiver(dropDir: String, rollMillis: Long,
-      status: () => Int, maxQueued: Int): IngestReceiver =
-    new FastHttpReceiver(dropDir, rollMillis = rollMillis, status = status,
-      maxQueued = maxQueued)
 
   private def raw(port: Int, request: String): String = {
     val sock = new java.net.Socket("localhost", port)
@@ -165,7 +144,7 @@ class FastHttpReceiverSpec extends ReceiverContractSpec {
 
   test("edge hardening: oversized request line → 400, huge Content-Length → 413 (no allocation)") {
     val dropDir = Files.createTempDirectory("drop").toString
-    val rx = mkReceiver(dropDir, 50, () => 200, 100000).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 50).start()
     try {
       val longLine = "GET /?" + "a" * 20000 + " HTTP/1.1\r\n\r\n"
       assert(raw(rx.boundPort, longLine).startsWith("HTTP/1.1 400"))
@@ -178,7 +157,7 @@ class FastHttpReceiverSpec extends ReceiverContractSpec {
 
   test("edge hardening: Content-Length overflow/garbage → 413/400, CR flood and header flood bounded") {
     val dropDir = Files.createTempDirectory("drop").toString
-    val rx = mkReceiver(dropDir, 50, () => 200, 100000).start()
+    val rx = new FastHttpReceiver(dropDir, rollMillis = 50).start()
     try {
       // int-overflowing Content-Length (~10 GB, RFC-valid) must land in
       // the same linger-protected 413 as any oversized body — the first
