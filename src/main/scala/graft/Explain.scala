@@ -17,9 +17,8 @@ object Explain {
     // optional session confs (e.g. scale-gate dials) so a plan dump can
     // show the at-scale branch of a gated operator:
     //   GRAFT_EXPLAIN_CONF="graft.equiHist.smallInputMaxBytes=0"
-    sys.env.get("GRAFT_EXPLAIN_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
+    sys.env.get("GRAFT_EXPLAIN_CONF").foreach(confEntries(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
     })
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
@@ -29,4 +28,15 @@ object Explain {
     }
     spark.stop()
   }
+
+  /** `k=v,k2=v2` → its pairs; an entry without `=` (an empty one
+    * included) fails naming the entry. */
+  def confEntries(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"bad GRAFT_EXPLAIN_CONF entry: $kv")
+      }
+    }
 }

@@ -5,14 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.CommitLogIngest
 
-/** The V2-connector DECODE TAX, measured (VERDICT r10 task 1): the same
-  * bytes full-scanned through `graft-commitlog` vs Spark's native
-  * vectorized parquet scan, wide (every column materialized) and narrow
-  * (2-column projection). The connector's per-file projection/predicate
-  * pushdown was never in question — this pins the constant-factor cost of
-  * its row-decode path, the one unquantified scale risk the round-10
-  * verdict named (at 100 TB a >2× decode tax dominates every query that
-  * reads through the connector).
+/** The V2-connector read cost, measured: the same bytes full-scanned
+  * through `graft-commitlog` vs a native parquet scan of the same files
+  * (`CommitLogIngest.snapshot`), wide (every column materialized) and
+  * narrow (2-column projection). Both decode through Spark's parquet
+  * reader, so the ratio is what the connector's planning and per-file
+  * reader setup cost on top of it.
   *
   * Method: lineitem at `SPARK_GRAFT_SF_DIR` is appended into a commit-log
   * table (4 commits → multiple files), then each leg aggregates over ALL
@@ -187,7 +185,6 @@ object ScanBench {
       cntConnR == rows && agree(arrConnR, arrNatR) &&
       bloomR == bloomNatR && bloomR > 0 &&
       dppOnR == dppOffR && dppOnR > 0
-    val mode = graft.sources.CommitLogReaderFactory.lastMode
     println(
       f"""{"metric":"v2_scan_decode_tax","sf_dir":"$sfDir","rows":$rows,""" +
         f""""wide_connector_s":$wideConnS%.3f,"wide_native_s":$wideNatS%.3f,""" +
@@ -202,7 +199,7 @@ object ScanBench {
         s""""bloom_files_opened":$bloomOpened,"bloom_files_live":$liveFiles,""" +
         f""""dpp_join_s":$dppOnS%.3f,"no_dpp_join_s":$dppOffS%.3f,""" +
         s""""dpp_files_opened":$dppFiles,"no_dpp_files_opened":$noDppFiles,""" +
-        s""""reader_mode":"$mode","parity":$parity}""")
+        s""""parity":$parity}""")
     graft.sources.LayoutDirs.deleteQuiet(root.toString)
     spark.stop()
     if (!parity) sys.exit(1)

@@ -197,7 +197,7 @@ object Dedup {
           // to queries another driver thread might run during the build
           // window. The build itself is serialized under
           // pairCache.synchronized, and every harness in this repo (Bench,
-          // Verify, TimeQ, ScaleCheck) drives the session single-threaded;
+          // Verify, ScaleCheck) drives the session single-threaded;
           // the restore in `finally` bounds the window. A concurrent-query
           // deployment should route builds through its own session
           // (spark.newSession()) — not done here because the persisted
@@ -1789,7 +1789,7 @@ object Dedup {
     * rounds leave their two-stage plan on top of the last checkpoint, so
     * the next checksum/checkpoint job re-executes them (the edge set is
     * tiny after blocking, so that trade is scheduler overhead vs compute).
-    * Measured at sf0.1 (StarCadence, 5 runs each): cadence 2 is ~5×
+    * Measured at sf0.1 (5 runs each): cadence 2 is ~5×
     * SLOWER (median 10.0 s vs 2.1 s; min 8.8 vs 1.9) — skipped rounds
     * re-execute inside both the convergence checksum and the next
     * checkpoint job, and that recomputation dwarfs the per-round

@@ -6,22 +6,20 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type => ParquetType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, StringStartsWith}
+import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan, LessThanOrEqual, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -57,14 +55,10 @@ import graft.streaming.CommitLogIngest
   * via explicit `index.lo`/`index.hi` options (the micro-batch scan is
   * created before any predicate exists in the plan).
   *
-  * The readers decode parquet with parquet-mr's public Group API, projecting
-  * to the declared schema BY NAME — a field missing from an older file is
-  * NULL, which is what makes log-recorded schema evolution readable straight
-  * through this source. The trade-off vs the V1 design (which re-rooted a
-  * full Spark parquet scan): per-row Group materialization instead of the
-  * vectorized reader. Micro-batches are incremental (small by construction)
-  * and full-table analytics go through `CommitLogIngest.snapshot` (a native
-  * parquet scan), so the slow path only ever carries the O(new data) stream.
+  * The readers decode through Spark's own parquet reader (see
+  * [[CommitLogReaderFactory]]), the one `CommitLogIngest.snapshot` runs:
+  * a field missing from an older file is NULL, which is what makes
+  * log-recorded schema evolution readable straight through this source.
   */
 class CommitLogTableProvider extends TableProvider with DataSourceRegister {
 
@@ -397,17 +391,12 @@ class CommitLogScanBuilder(tableDir: String, schema: StructType,
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // accept what the scan can act on — partition-dir constraints and
-    // index bounds prune whole files, and any parquet-translatable
-    // comparison skips row groups/records inside the files
-    // (ParquetFilters in the readers); return EVERYTHING as residual —
-    // Spark re-applies the row filters, so a stale index or an
-    // untranslated filter can cost speed but never rows
-    pushed = filters.filter(f =>
-      anyBound(f).isDefined ||
-        anyStrBound(f).isDefined ||
-        partConstraintOf(f).isDefined ||
-        ParquetFilters.translatable(f))
+    // take every filter: partition-dir constraints and index bounds prune
+    // whole files, and Spark's parquet reader skips row groups with
+    // whichever it can build against each file's footer; return
+    // EVERYTHING as residual — Spark re-applies the row filters, so a
+    // stale index or an unusable filter can cost speed but never rows
+    pushed = filters
     filters
   }
 
@@ -478,8 +467,7 @@ class CommitLogScanBuilder(tableDir: String, schema: StructType,
   override def build(): Scan = pushedAgg match {
     case Some((st, row)) => new CommitLogAggScan(tableDir, st, row)
     case None =>
-      new CommitLogScan(tableDir, required, options, bounds,
-        pushed.filter(ParquetFilters.translatable),
+      new CommitLogScan(tableDir, required, options, bounds, pushed,
         pushed.flatMap(partConstraintOf).toSeq, strBounds, eqKeys)
   }
 }
@@ -1152,17 +1140,10 @@ class CommitLogCdfBatch(tableDir: String, schema: StructType,
     startingVersion: Long, endingVersion: Option[Long],
     filters: Array[Filter]) extends Batch {
 
-  private lazy val parts: Array[InputPartition] = {
-    val spark = CommitLogPlanning.session
-    val to = endingVersion.getOrElse(CommitLogIngest.latestVersion(tableDir))
-    CommitLogIngest.cdfFiles(spark, tableDir, startingVersion - 1, to)
-      .map { case (f, v, tag, dvPos) =>
-        CommitLogInputPartition(f,
-          tag.map(t => "_change_type" -> t).toMap +
-            ("_commit_version" -> v.toString),
-          dvPositions = dvPos): InputPartition
-      }.toArray
-  }
+  private lazy val parts: Array[InputPartition] =
+    CommitLogPlanning.cdfPartitions(tableDir, startingVersion - 1,
+      endingVersion.getOrElse(CommitLogIngest.latestVersion(tableDir)),
+      filters)
 
   override def planInputPartitions(): Array[InputPartition] = parts
 
@@ -1173,7 +1154,8 @@ class CommitLogCdfBatch(tableDir: String, schema: StructType,
       rowModeForced = parts.exists {
         case p: CommitLogInputPartition => p.dvPositions.nonEmpty
         case _ => false
-      })
+      },
+      constantShapes = CommitLogReaderFactory.CdfShapes)
 }
 
 /** Snapshot-at-a-version batch scan over a resolution the owning
@@ -1314,14 +1296,8 @@ class CommitLogMicroBatchStream(tableDir: String, schema: StructType,
       // the CHANGE-FEED stream: each version's changed files, exactly
       // once per version (versions are the offsets — the engine's offset
       // log gives exactly-once delivery of each version's changes)
-      val ps = CommitLogIngest.cdfFiles(spark, tableDir,
-        CommitLogOffset.version(start), CommitLogOffset.version(end))
-      return ps.map { case (f, v, tag, dvPos) =>
-        CommitLogInputPartition(f,
-          tag.map(t => "_change_type" -> t).toMap +
-            ("_commit_version" -> v.toString),
-          dvPositions = dvPos): InputPartition
-      }.toArray
+      return CommitLogPlanning.cdfPartitions(tableDir,
+        CommitLogOffset.version(start), CommitLogOffset.version(end), filters)
     }
     val files = CommitLogIngest.addedFiles(spark, tableDir,
       CommitLogOffset.version(start), CommitLogOffset.version(end),
@@ -1359,7 +1335,9 @@ class CommitLogMicroBatchStream(tableDir: String, schema: StructType,
     new CommitLogReaderFactory(schema, filters,
       rowModeForced = cdf &&
         java.nio.file.Files.exists(java.nio.file.Paths.get(tableDir, "dv")),
-      nameMap = nameMap)
+      nameMap = nameMap,
+      constantShapes =
+        if (cdf) CommitLogReaderFactory.CdfShapes else Seq(Set.empty))
 
   override def deserializeOffset(json: String): Offset =
     CommitLogOffset(json.trim.toLong)
@@ -1404,6 +1382,50 @@ private[sources] object CommitLogPlanning {
     case s: String => Some(s)
     case u: UTF8String => Some(u.toString)
     case _ => None
+  }
+
+  /** The change feed over versions (fromExclusive, to]: one partition per
+    * changed file, its tag and version as constants, minus the files
+    * whose constants REFUTE a pushed filter — a `_commit_version` bound
+    * prunes other versions' files before any is opened. */
+  def cdfPartitions(tableDir: String, fromExclusive: Long, to: Long,
+      filters: Array[Filter]): Array[InputPartition] =
+    CommitLogIngest.cdfFiles(session, tableDir, fromExclusive, to)
+      .map { case (f, v, tag, dvPos) =>
+        CommitLogInputPartition(f,
+          tag.map(t => "_change_type" -> t).toMap +
+            ("_commit_version" -> v.toString),
+          dvPositions = dvPos)
+      }
+      .filterNot(p => filters.exists(refutes(_, p.constants)))
+      .toArray
+
+  /** Can no row with these constants satisfy `f`? Exact decisions only:
+    * integral comparisons against a number-valued constant, string
+    * equality and IN against the raw constant; a constant is never NULL.
+    * Anything else keeps the file (Spark re-filters). */
+  private def refutes(f: Filter, consts: Map[String, String]): Boolean = {
+    def differs(c: String, v: Any): Boolean =
+      (intOf(v), consts(c).toLongOption) match {
+        case (Some(n), Some(k)) => k != n
+        case _ => strOf(v).exists(_ != consts(c))
+      }
+    def cmp(c: String, v: Any)(ok: Int => Boolean): Boolean =
+      (intOf(v), consts(c).toLongOption) match {
+        case (Some(n), Some(k)) => !ok(k.compare(n))
+        case _ => false
+      }
+    f match {
+      case EqualTo(c, v) if consts.contains(c) => differs(c, v)
+      case In(c, vs) if consts.contains(c) => vs.forall(differs(c, _))
+      case GreaterThan(c, v) if consts.contains(c) => cmp(c, v)(_ > 0)
+      case GreaterThanOrEqual(c, v) if consts.contains(c) =>
+        cmp(c, v)(_ >= 0)
+      case LessThan(c, v) if consts.contains(c) => cmp(c, v)(_ < 0)
+      case LessThanOrEqual(c, v) if consts.contains(c) => cmp(c, v)(_ <= 0)
+      case IsNull(c) => consts.contains(c)
+      case _ => false
+    }
   }
 
   def session: SparkSession =
@@ -1554,55 +1576,154 @@ case class CommitLogInputPartition(file: String,
     dvPositions: Array[Long] = Array.emptyLongArray)
     extends InputPartition
 
+/** Decodes each planned file through Spark's own parquet reader
+  * (`ParquetPartitionReaderFactory`, the decoder `CommitLogIngest.snapshot`
+  * also runs), so the V2 scan and the API read agree by construction:
+  * by-name projection with NULL for a column an older file lacks, Spark's
+  * type widening, row-group skipping from the pushed filters built against
+  * each file's own footer, and the vectorized batch path. This factory
+  * adds only what the log knows and the file does not:
+  *
+  *  - column mapping: the reader requests the PHYSICAL names the files
+  *    carry and its output is positional, so Spark still sees the logical
+  *    read schema; a filter on a mapped column is not pushed (Spark
+  *    re-applies every filter above the scan);
+  *  - constants (the change feed's `_change_type` tag on append files and
+  *    `_commit_version` everywhere) ride as partition values — one inner
+  *    factory per constant-column shape — re-projected to the scan's order;
+  *  - deletion-vector positions: any live mask puts the whole scan in row
+  *    mode (Spark refuses mixed row/columnar partitions), the reader adds
+  *    Spark's parquet row-index column, and masked positions are dropped
+  *    as rows stream by — the index counts physical rows, so row-group
+  *    skipping never shifts it. */
 class CommitLogReaderFactory(schema: StructType, filters: Array[Filter],
     rowModeForced: Boolean = false,
-    nameMap: Map[String, String] = Map.empty)
+    nameMap: Map[String, String] = Map.empty,
+    constantShapes: Seq[Set[String]] = Seq(Set.empty))
     extends PartitionReaderFactory {
 
-  /** Column mapping is applied AT THIS BOUNDARY: the readers receive the
-    * scan schema with mapped fields under their PHYSICAL names (what the
-    * files carry) and filters translated the same way — their output is
-    * positional, so Spark still sees the logical readSchema. Identity
-    * for unmapped tables. */
   private val physSchema: StructType =
     if (nameMap.isEmpty) schema
     else StructType(schema.fields.map(f =>
       nameMap.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
 
-  private val physFilters: Array[Filter] =
-    if (nameMap.isEmpty) filters
-    else filters.flatMap(ParquetFilters.mapNames(_, nameMap))
+  /** Per constant-column shape: Spark's reader over the file's columns
+    * (then the row index in row mode) with the constants as partition
+    * columns, and each scan slot's index in that reader's output. */
+  private val readers: Map[Set[String], CommitLogReaderFactory.Shape] =
+    constantShapes.map(_.intersect(physSchema.fieldNames.toSet)).distinct
+      .map { cs =>
+        val (consts, data) = physSchema.fields.partition(f => cs(f.name))
+        // a column an older file lacks reads NULL, never "required column
+        // missing" — the snapshot read's user-schema rule
+        val read = StructType(data.map(_.copy(nullable = true)) ++
+          (if (rowModeForced) Seq(CommitLogReaderFactory.RowIndex) else Nil))
+        val slots = physSchema.fieldNames.map { n =>
+          val i = data.indexWhere(_.name == n)
+          if (i >= 0) i else read.length + consts.indexWhere(_.name == n)
+        }
+        cs -> CommitLogReaderFactory.Shape(
+          org.apache.spark.sql.graft.Shim.parquetReaders(
+            CommitLogPlanning.session, read, StructType(consts),
+            filters.filterNot(_.references.exists(nameMap.contains))),
+          slots, rowIndexAt = data.length)
+      }.toMap
 
-  /** Flat schemas decode COLUMN-AT-A-TIME into ColumnarBatches (see
-    * `CommitLogColumnar` — the measured 2-3× row-decode tax is the one
-    * scale cost the round-10 verdict flagged); nested schemas keep the
-    * Group row path. Uniform per scan: eligibility depends only on the
-    * projected schema (and, for deletion-vector scans, on the factory's
-    * forced row mode), never the file. */
+  private def readerFor(p: CommitLogInputPartition)
+      : (CommitLogReaderFactory.Shape, PartitionedFile) = {
+    val shape =
+      readers(p.constants.keySet.intersect(physSchema.fieldNames.toSet))
+    val consts = physSchema.filter(f => p.constants.contains(f.name))
+    val values = new GenericInternalRow(consts.map(f =>
+      CommitLogReaderFactory.constant(f, p.constants(f.name))).toArray)
+    val path = new HadoopPath(p.file)
+    val len = path.getFileSystem(shape.parquet.broadcastedConf.value.value)
+      .getFileStatus(path).getLen
+    CommitLogReadTracker.record(p.file)
+    (shape, PartitionedFile(values, SparkPath.fromPath(path), 0L, len,
+      Array.empty[String], 0L, len, Map.empty[String, Any]))
+  }
+
+  /** Uniform per scan: Spark's own rule for the result schema (which does
+    * not depend on the file), unless a live mask forces row mode. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    !rowModeForced && CommitLogColumnar.supports(schema) &&
-      !sys.env.get("GRAFT_FORCE_ROW_SCAN").contains("1")
+    !rowModeForced &&
+      readers.values.head.parquet.supportColumnarReads(partition)
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    CommitLogReaderFactory.lastMode = "row"
     val p = partition.asInstanceOf[CommitLogInputPartition]
-    new GroupRowReader(p.file, physSchema, physFilters, p.constants,
-      p.dvPositions)
+    val (shape, file) = readerFor(p)
+    val in = shape.parquet.buildReader(file)
+    val project: InternalRow => InternalRow =
+      if (!rowModeForced && shape.inOrder) identity
+      else {
+        val proj = UnsafeProjection.create(shape.slots.toSeq
+          .zip(physSchema.fields)
+          .map { case (i, f) => BoundReference(i, f.dataType, true) })
+        proj(_)
+      }
+    val dv = p.dvPositions
+    new PartitionReader[InternalRow] {
+      private var k = 0 // next candidate in the ascending mask positions
+      private def masked(row: InternalRow): Boolean = dv.nonEmpty && {
+        val pos = row.getLong(shape.rowIndexAt)
+        while (k < dv.length && dv(k) < pos) k += 1
+        k < dv.length && dv(k) == pos
+      }
+      override def next(): Boolean = {
+        while (in.next()) if (!masked(in.get())) return true
+        false
+      }
+      override def get(): InternalRow = project(in.get())
+      override def close(): Unit = in.close()
+    }
   }
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] = {
-    CommitLogReaderFactory.lastMode = "columnar"
-    val p = partition.asInstanceOf[CommitLogInputPartition]
-    new ColumnarCommitReader(p.file, physSchema, physFilters, p.constants)
+    val (shape, file) =
+      readerFor(partition.asInstanceOf[CommitLogInputPartition])
+    val in = shape.parquet.buildColumnarReader(file)
+    if (shape.inOrder) in
+    else new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = in.next()
+      override def get(): ColumnarBatch = {
+        val b = in.get()
+        new ColumnarBatch(shape.slots.map(b.column), b.numRows)
+      }
+      override def close(): Unit = in.close()
+    }
   }
 }
 
 object CommitLogReaderFactory {
-  /** Which decode path the last created reader took ("row" | "columnar")
-    * — bench/spec observability only (local mode shares the JVM). */
-  @volatile var lastMode: String = "row"
+  /** One constant-column shape's reader: `slots(i)` is scan column i's
+    * index in the reader's output, `rowIndexAt` the row index's. */
+  private case class Shape(parquet: ParquetPartitionReaderFactory,
+      slots: Array[Int], rowIndexAt: Int) {
+    val inOrder: Boolean = slots.sameElements(slots.indices)
+  }
+
+  /** The change feed's constant-column shapes: append files take both the
+    * tag and the version as constants, stored change files carry their
+    * own `_change_type` rows. */
+  val CdfShapes: Seq[Set[String]] =
+    Seq(Set("_change_type", "_commit_version"), Set("_commit_version"))
+
+  /** Spark's parquet row-index column: the reader fills it with each
+    * row's physical position in its file (nullable, or the reader looks
+    * for it in the file as a required column). */
+  private val RowIndex = StructField(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+
+  private def constant(f: StructField, v: String): Any = f.dataType match {
+    case StringType => UTF8String.fromString(v)
+    case LongType => v.toLong
+    case other => throw new UnsupportedOperationException(
+      s"graft-commitlog: unsupported constant column type $other " +
+        s"for ${f.name}")
+  }
 }
 
 /** Test-only visibility into which files the readers actually open (local
@@ -1618,496 +1739,5 @@ object CommitLogReadTracker {
     val out = opened.iterator().asScala.toList
     opened.clear()
     out
-  }
-}
-
-/** parquet-mr Group → InternalRow, projected to `schema` BY NAME: a field
-  * absent from the file (an older schema generation) is NULL; numeric
-  * widths coerce to the declared type. Public parquet API only. */
-class GroupRowReader(file: String, schema: StructType,
-    filters: Array[Filter] = Array.empty,
-    constants: Map[String, String] = Map.empty,
-    dvPositions: Array[Long] = Array.emptyLongArray)
-    extends PartitionReader[InternalRow] {
-
-  /** Per-slot constant (converted to the declared type) for projected
-    * columns this file lacks but the partition supplies — the change
-    * feed's tag/version columns. */
-  private val constSlot: Array[Any] = schema.fields.map(f =>
-    constants.get(f.name).map(v => f.dataType match {
-      case StringType => UTF8String.fromString(v)
-      case LongType => java.lang.Long.valueOf(v.toLong)
-      case IntegerType => java.lang.Integer.valueOf(v.toInt)
-      case other => throw new UnsupportedOperationException(
-        s"graft-commitlog: unsupported constant column type $other " +
-          s"for ${f.name}")
-    }).orNull)
-
-  /** Push the projection AND the predicate into parquet-mr, both built
-    * per file because each file is its own schema generation:
-    *
-    *  - projection: request only the scan's fields that EXIST in this
-    *    file (plus the filter columns, which record-level filtering must
-    *    materialize), from the file's own types so the requested schema
-    *    is always a valid subset — unrequested columns' pages are never
-    *    decoded. An empty projection (count-only scans) falls back to
-    *    full rows.
-    *  - predicate: the translated pushed filters skip whole row groups
-    *    by their stats and drop non-matching records before
-    *    materialization. A comparison naming a column this file's
-    *    generation LACKS can never match (the column reads all-NULL), so
-    *    the whole file is skipped. Spark re-applies every filter
-    *    post-scan — this is pure speedup, never a correctness
-    *    dependency. */
-  private val (conf: Configuration,
-      filterOpt: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter],
-      skipFile: Boolean,
-      requested: org.apache.parquet.schema.MessageType) = {
-    val c = new Configuration()
-    // filters on constant-supplied columns decide against the constants,
-    // never against the file (which lacks them by design).
-    // A deletion-vector mask keys on the PHYSICAL row position, so any
-    // pushdown that skips rows (record filter, stats row-group skip)
-    // would desynchronize the emitted-row counter from the mask — a
-    // masked file reads full-file with Spark re-applying every filter
-    // above (constant-column decisions stay: they skip the WHOLE file,
-    // which is position-independent). Bounded by mask lifetime: OPTIMIZE
-    // materializes masks and restores pushdown for the clean files.
-    val (activeFilters, constSkip) = {
-      val (af, cs) = ParquetFilters.splitConstants(filters, constants)
-      if (dvPositions.nonEmpty) (Array.empty[Filter], cs) else (af, cs)
-    }
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new HadoopPath(file), c))
-    try {
-      val fileSchema = footer.getFileMetaData.getSchema
-      val (pred, buildSkip) =
-        ParquetFilters.build(activeFilters, fileSchema)
-      val skip = constSkip || buildSkip
-      val filterCols =
-        if (skip) Seq.empty
-        else activeFilters.flatMap(ParquetFilters.references).toSeq.distinct
-      val wanted = (schema.fieldNames ++ filterCols).distinct
-        .filter(fileSchema.containsField)
-      val requested =
-        if (wanted.nonEmpty && wanted.length < fileSchema.getFieldCount) {
-          val pruned = new org.apache.parquet.schema.MessageType(
-            fileSchema.getName,
-            wanted.map(n =>
-              fileSchema.getFields.get(fileSchema.getFieldIndex(n))): _*)
-          c.set(
-            org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-            pruned.toString)
-          pruned
-        } else fileSchema
-      (c, pred.map(org.apache.parquet.filter2.compat.FilterCompat.get),
-        skip, requested)
-    } finally footer.close()
-  }
-
-  // the tracker counts files whose PAGES are read — a footer probe that
-  // decides to skip the whole file is not a read
-  if (!skipFile) CommitLogReadTracker.record(file)
-
-  /** Per-file top-level field map, computed ONCE: delivered groups are all
-    * shaped by the requested schema, so resolving name → index per row
-    * (two string-hash lookups per cell) would be pure hot-path waste. */
-  private val topIdx: Array[Int] = schema.fields.map(f =>
-    if (requested.containsField(f.name)) requested.getFieldIndex(f.name)
-    else -1)
-
-  private val reader: ParquetReader[Group] =
-    if (skipFile) null
-    else {
-      val b = ParquetReader.builder(new GroupReadSupport(),
-        new HadoopPath(file)).withConf(conf)
-      filterOpt.fold(b)(b.withFilter).build()
-    }
-
-  private var current: Group = _
-
-  // deletion-vector skip state: rows arrive in physical order (no
-  // filter is pushed when a mask is present), so one ascending pointer
-  // into the sorted positions array makes the skip O(1) amortized
-  private var rowPos: Long = -1L
-  private var dvIdx: Int = 0
-
-  override def next(): Boolean = {
-    if (reader == null) return false
-    if (dvPositions.isEmpty) {
-      current = reader.read()
-      return current != null
-    }
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
-      rowPos += 1
-      while (dvIdx < dvPositions.length && dvPositions(dvIdx) < rowPos)
-        dvIdx += 1
-      if (dvIdx >= dvPositions.length || dvPositions(dvIdx) != rowPos)
-        return true
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    val values = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val idx = topIdx(i)
-      values(i) =
-        if (idx < 0) constSlot(i)
-        else if (g.getFieldRepetitionCount(idx) == 0) null
-        else convert(g, idx, schema(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = if (reader != null) reader.close()
-
-  private def convert(g: Group, idx: Int, target: DataType): Any =
-    target match {
-      case st: StructType => convertStruct(g.getGroup(idx, 0), st)
-      case ArrayType(elem, _) => convertList(g, idx, elem)
-      case _ => primitiveAt(g, idx, 0, target)
-    }
-
-  private def convertStruct(g: Group, st: StructType): InternalRow = {
-    val gt = g.getType
-    new GenericInternalRow(st.fields.map { f =>
-      if (!gt.containsField(f.name)) null
-      else {
-        val idx = gt.getFieldIndex(f.name)
-        if (g.getFieldRepetitionCount(idx) == 0) null
-        else convert(g, idx, f.dataType)
-      }
-    }.asInstanceOf[Array[Any]])
-  }
-
-  /** Lists in both physical shapes: legacy 2-level repeated primitives and
-    * the standard 3-level LIST group (what Spark's writer emits). */
-  private def convertList(g: Group, idx: Int, elem: DataType)
-      : GenericArrayData = {
-    val t = g.getType.getType(idx)
-    if (t.isPrimitive) {
-      val n = g.getFieldRepetitionCount(idx)
-      new GenericArrayData(Array.tabulate[Any](n)(k =>
-        primitiveAt(g, idx, k, elem)))
-    } else {
-      val lg = g.getGroup(idx, 0)
-      val n = lg.getFieldRepetitionCount(0)
-      val inner = lg.getType.getType(0)
-      new GenericArrayData(Array.tabulate[Any](n) { k =>
-        if (inner.isPrimitive) primitiveAt(lg, 0, k, elem)
-        else {
-          val entry = lg.getGroup(0, k)
-          if (entry.getFieldRepetitionCount(0) == 0) null
-          else convert(entry, 0, elem)
-        }
-      })
-    }
-  }
-
-  private def primitiveAt(g: Group, idx: Int, rep: Int,
-      target: DataType): Any = {
-    val t = g.getType.getType(idx)
-    val p = t.asPrimitiveType().getPrimitiveTypeName
-    import PrimitiveType.PrimitiveTypeName._
-    val raw: Any = p match {
-      case INT64 => g.getLong(idx, rep)
-      case INT32 => g.getInteger(idx, rep)
-      case DOUBLE => g.getDouble(idx, rep)
-      case FLOAT => g.getFloat(idx, rep)
-      case BOOLEAN => g.getBoolean(idx, rep)
-      case BINARY | FIXED_LEN_BYTE_ARRAY => g.getBinary(idx, rep).getBytes
-      case INT96 => int96Micros(g.getInt96(idx, rep).getBytes)
-      case other => throw new UnsupportedOperationException(
-        s"graft-commitlog reader: unsupported parquet primitive $other " +
-          s"for field ${t.getName} (declared $target)")
-    }
-    coerce(raw, t, target)
-  }
-
-  private def coerce(raw: Any, t: ParquetType, target: DataType): Any =
-    (raw, target) match {
-      case (n: Number, LongType) => n.longValue()
-      case (n: Number, IntegerType) => n.intValue()
-      case (n: Number, ShortType) => n.shortValue()
-      case (n: Number, ByteType) => n.byteValue()
-      case (n: Number, DoubleType) => n.doubleValue()
-      case (n: Number, FloatType) => n.floatValue()
-      case (n: Number, DateType) => n.intValue()
-      case (n: Number, TimestampType) => timestampMicros(n.longValue(), t)
-      case (b: Array[Byte], StringType) => UTF8String.fromBytes(b)
-      case (b: Array[Byte], BinaryType) => b
-      case (b: Boolean, BooleanType) => b
-      case (v, other) => throw new UnsupportedOperationException(
-        s"graft-commitlog reader: cannot deliver ${v.getClass.getName} " +
-          s"as $other for field ${t.getName}")
-    }
-
-  /** INT64 timestamps carry their unit as a logical annotation; INT96 (and
-    * unannotated INT64) are already microseconds. */
-  private def timestampMicros(raw: Long, t: ParquetType): Long =
-    t.getLogicalTypeAnnotation match {
-      case ts: TimestampLogicalTypeAnnotation => ts.getUnit match {
-        case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-        case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-        case LogicalTypeAnnotation.TimeUnit.NANOS => raw / 1000L
-      }
-      case _ => raw
-    }
-
-  /** 12-byte INT96: nanos-of-day (LE long) + julian day (LE int). */
-  private def int96Micros(b: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-}
-
-/** Spark `Filter` → parquet-mr `FilterPredicate` translation for the V2
-  * readers — the row-group/record half of predicate pushdown (the stats
-  * index is the whole-file half). Translation is built PER FILE against
-  * that file's schema generation, and is deliberately strict: a pushed
-  * predicate must be IMPLIED by the original filter (it may keep extra
-  * rows — Spark re-filters — but must never drop a matching one), so a
-  * value whose type doesn't exactly fit the file's column type is left
-  * untranslated rather than coerced (a truncating coercion could
-  * strengthen a comparison and lose rows). */
-private[sources] object ParquetFilters {
-
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.MessageType
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private sealed trait Op
-  private case object Eq extends Op
-  private case object Gt extends Op
-  private case object Ge extends Op
-  private case object Lt extends Op
-  private case object Le extends Op
-  private case object Null extends Op
-  private case object NotNull extends Op
-
-  /** (attribute, op, value) for the supported shapes; None otherwise. */
-  private def shape(f: Filter): Option[(String, Op, Any)] = f match {
-    case EqualTo(a, v) if v != null => Some((a, Eq, v))
-    case GreaterThan(a, v) if v != null => Some((a, Gt, v))
-    case GreaterThanOrEqual(a, v) if v != null => Some((a, Ge, v))
-    case LessThan(a, v) if v != null => Some((a, Lt, v))
-    case LessThanOrEqual(a, v) if v != null => Some((a, Le, v))
-    case IsNull(a) => Some((a, Null, null))
-    case IsNotNull(a) => Some((a, NotNull, null))
-    case _ => None
-  }
-
-  /** Rename a filter's attribute references (logical → physical column
-    * mapping). A shape this translator does not know that references a
-    * mapped name is DROPPED (pushdown is optional — Spark re-filters);
-    * unmapped-only shapes pass through untouched. */
-  def mapNames(f: Filter, m: Map[String, String]): Option[Filter] = {
-    import org.apache.spark.sql.sources._
-    def r(n: String) = m.getOrElse(n, n)
-    f match {
-      case EqualTo(a, v) => Some(EqualTo(r(a), v))
-      case EqualNullSafe(a, v) => Some(EqualNullSafe(r(a), v))
-      case GreaterThan(a, v) => Some(GreaterThan(r(a), v))
-      case GreaterThanOrEqual(a, v) => Some(GreaterThanOrEqual(r(a), v))
-      case LessThan(a, v) => Some(LessThan(r(a), v))
-      case LessThanOrEqual(a, v) => Some(LessThanOrEqual(r(a), v))
-      case In(a, vs) => Some(In(r(a), vs))
-      case IsNull(a) => Some(IsNull(r(a)))
-      case IsNotNull(a) => Some(IsNotNull(r(a)))
-      case StringStartsWith(a, v) => Some(StringStartsWith(r(a), v))
-      case StringEndsWith(a, v) => Some(StringEndsWith(r(a), v))
-      case StringContains(a, v) => Some(StringContains(r(a), v))
-      case And(l, rr) =>
-        for (a <- mapNames(l, m); b <- mapNames(rr, m)) yield And(a, b)
-      case Or(l, rr) =>
-        for (a <- mapNames(l, m); b <- mapNames(rr, m)) yield Or(a, b)
-      case Not(c) => mapNames(c, m).map(Not)
-      case other =>
-        if (other.references.exists(m.contains)) None else Some(other)
-    }
-  }
-
-  def translatable(f: Filter): Boolean =
-    shape(f).exists { case (a, _, v) =>
-      !a.contains(".") && (v == null || supportedValue(v))
-    }
-
-  private def supportedValue(v: Any): Boolean = v match {
-    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-         _: java.lang.Byte | _: java.lang.Double | _: java.lang.Float |
-         _: String | _: UTF8String | _: java.lang.Boolean => true
-    case _ => false
-  }
-
-  /** Top-level columns a filter reads (to keep in the per-file requested
-    * schema — record-level filtering materializes them). */
-  def references(f: Filter): Seq[String] =
-    f.references.toSeq.filterNot(_.contains("."))
-
-  /** Pre-decide filters naming CONSTANT-supplied columns (the change
-    * feed's `_change_type`/`_commit_version` — absent from the files by
-    * design). Returns (remaining filters, whole-file skip). Without this
-    * split, [[build]] would see a comparison on a column the file lacks
-    * and skip the file — dropping exactly the rows the filter asks for.
-    * A constant that provably cannot match → legitimate whole-file skip
-    * (free version pruning on `_commit_version` bounds); anything not
-    * decidable EXACTLY is kept undecided (Spark re-filters). */
-  def splitConstants(filters: Array[Filter],
-      constants: Map[String, String]): (Array[Filter], Boolean) = {
-    if (constants.isEmpty) return (filters, false)
-    var skip = false
-    val rest = filters.filter { f =>
-      val decided = shape(f) match {
-        case Some((a, op, v)) if constants.contains(a) =>
-          if (!constMatches(constants(a), op, v)) skip = true
-          true
-        case _ =>
-          // an undecided filter must not drag a constant column into the
-          // parquet translation either — drop any filter that references
-          // one (Spark re-applies it post-scan)
-          if (f.references.exists(constants.contains)) true else false
-      }
-      !decided
-    }
-    (rest, skip)
-  }
-
-  /** Can the constant satisfy the comparison? EXACT decisions only:
-    * integral values against a long-parsing constant, string equality
-    * against the raw constant; anything else returns true (keep). */
-  private def constMatches(c: String, op: Op, v: Any): Boolean = op match {
-    case NotNull => true // constants are never null
-    case Null => false
-    case _ =>
-      val asLong: Option[Long] = v match {
-        case n: java.lang.Long => Some(n.longValue)
-        case n: java.lang.Integer => Some(n.longValue)
-        case n: java.lang.Short => Some(n.longValue)
-        case n: java.lang.Byte => Some(n.longValue)
-        case _ => None
-      }
-      (asLong, c.toLongOption) match {
-        case (Some(n), Some(cl)) => op match {
-          case Eq => cl == n
-          case Gt => cl > n
-          case Ge => cl >= n
-          case Lt => cl < n
-          case Le => cl <= n
-          case _ => true
-        }
-        case _ => (op, v) match {
-          case (Eq, s: String) => c == s
-          case (Eq, s: UTF8String) => c == s.toString
-          case _ => true // not exactly decidable — keep the file
-        }
-      }
-  }
-
-  /** Translate against this file's schema. Returns (conjunctive predicate
-    * if any filter translated, whole-file skip): a COMPARISON or
-    * IsNotNull naming a column this generation lacks can never match
-    * (the column reads all-NULL), so the file is skipped outright. */
-  def build(filters: Array[Filter], fileSchema: MessageType)
-      : (Option[FilterPredicate], Boolean) = {
-    var skip = false
-    val preds = filters.flatMap(shape).flatMap { case (a, op, v) =>
-      if (a.contains(".")) None
-      else if (!fileSchema.containsField(a)) {
-        if (op != Null) skip = true
-        None
-      } else if (!fileSchema.getFields.get(
-          fileSchema.getFieldIndex(a)).isPrimitive) None
-      else typed(fileSchema, a, op, v)
-    }
-    if (skip) (None, true)
-    else (preds.reduceOption(FilterApi.and), false)
-  }
-
-  /** Exact-fit typed predicate: the value must already be the column's
-    * width (Spark normalizes pushed values to the DECLARED type; a file
-    * from an older, narrower generation stays untranslated). */
-  private def typed(fs: MessageType, name: String, op: Op, v: Any)
-      : Option[FilterPredicate] = {
-    val t = fs.getFields.get(fs.getFieldIndex(name)).asPrimitiveType()
-    t.getPrimitiveTypeName match {
-      case INT64 => v match {
-        case null => nullPred[java.lang.Long, Operators.LongColumn](FilterApi.longColumn(name), op)
-        case n: java.lang.Long => cmp(FilterApi.longColumn(name), n, op)
-        case n: java.lang.Integer =>
-          cmp(FilterApi.longColumn(name), java.lang.Long.valueOf(n.longValue), op)
-        case _ => None
-      }
-      case INT32 => v match {
-        case null => nullPred[java.lang.Integer, Operators.IntColumn](FilterApi.intColumn(name), op)
-        case n: java.lang.Integer => cmp(FilterApi.intColumn(name), n, op)
-        case n: java.lang.Short =>
-          cmp(FilterApi.intColumn(name), Integer.valueOf(n.intValue), op)
-        case n: java.lang.Byte =>
-          cmp(FilterApi.intColumn(name), Integer.valueOf(n.intValue), op)
-        case _ => None
-      }
-      case DOUBLE => v match {
-        case null => nullPred[java.lang.Double, Operators.DoubleColumn](FilterApi.doubleColumn(name), op)
-        case n: java.lang.Double => cmp(FilterApi.doubleColumn(name), n, op)
-        case _ => None
-      }
-      case FLOAT => v match {
-        case null => nullPred[java.lang.Float, Operators.FloatColumn](FilterApi.floatColumn(name), op)
-        case n: java.lang.Float => cmp(FilterApi.floatColumn(name), n, op)
-        case _ => None
-      }
-      case BOOLEAN => v match {
-        case null => nullPred[java.lang.Boolean, Operators.BooleanColumn](FilterApi.booleanColumn(name), op)
-        case b: java.lang.Boolean if op == Eq =>
-          Some(FilterApi.eq(FilterApi.booleanColumn(name), b))
-        case _ => None
-      }
-      case BINARY =>
-        // strings only (UTF-8 unsigned byte order = Spark's UTF8String
-        // order, so range comparisons translate exactly)
-        val isString = t.getLogicalTypeAnnotation ==
-          LogicalTypeAnnotation.stringType()
-        v match {
-          case null => nullPred[Binary, Operators.BinaryColumn](FilterApi.binaryColumn(name), op)
-          case s: String if isString =>
-            cmp(FilterApi.binaryColumn(name), Binary.fromString(s), op)
-          case s: UTF8String if isString =>
-            cmp(FilterApi.binaryColumn(name),
-              Binary.fromConstantByteArray(s.getBytes), op)
-          case _ => None
-        }
-      case _ => None
-    }
-  }
-
-  private def cmp[T <: Comparable[T],
-      C <: Operators.Column[T] with Operators.SupportsLtGt](
-      c: C, v: T, op: Op): Option[FilterPredicate] = op match {
-    case Eq => Some(FilterApi.eq(c, v))
-    case Gt => Some(FilterApi.gt(c, v))
-    case Ge => Some(FilterApi.gtEq(c, v))
-    case Lt => Some(FilterApi.lt(c, v))
-    case Le => Some(FilterApi.ltEq(c, v))
-    case _ => None
-  }
-
-  private def nullPred[T <: Comparable[T],
-      C <: Operators.Column[T] with Operators.SupportsEqNotEq](
-      c: C, op: Op): Option[FilterPredicate] = op match {
-    case Null => Some(FilterApi.eq(c, null.asInstanceOf[T]))
-    case NotNull => Some(FilterApi.notEq(c, null.asInstanceOf[T]))
-    case _ => None
   }
 }

@@ -41,7 +41,8 @@ import graft.streaming.CommitLogIngest
   *
   * EXECUTOR data path: each task streams its partition straight into a
   * task-unique parquet file under an invisible writer dir via parquet-mr's
-  * public example writer (Group API — the mirror of `GroupRowReader`).
+  * public example writer (Group API; reads go through Spark's own parquet
+  * reader).
   * Nothing references the files until the DRIVER commit publishes their
   * add-actions in one atomic rename, so failed/speculative tasks just
   * abort-delete their file and a killed job leaves only unreferenced debris
@@ -314,11 +315,10 @@ class CommitLogStreamingWriterFactory(dataDir: String, schema: StructType,
       s"part-$partitionId-$taskId", partitionCols)
 }
 
-/** InternalRow → parquet Group, the writer mirror of `GroupRowReader`:
-  * public parquet-mr API only, task-unique files, opened LAZILY so an
-  * empty partition writes nothing (no zero-row file debris). Speculative /
-  * retried attempts are distinguished by the uuid suffix and reclaimed by
-  * `abort`.
+/** InternalRow → parquet Group: public parquet-mr API only, task-unique
+  * files, opened LAZILY so an empty partition writes nothing (no zero-row
+  * file debris). Speculative / retried attempts are distinguished by the
+  * uuid suffix and reclaimed by `abort`.
   *
   * With `partitionCols`, rows route to one file per partition VALUE under
   * hive-style `col=value` dirs (the read side dir-prunes on them), and the

@@ -203,7 +203,7 @@ class CdfReadSpec extends SparkSuite {
       .load()
     // flat schema + constants → columnar
     val viaColumnar = canon(t)
-    assert(graft.sources.CommitLogReaderFactory.lastMode == "columnar")
+    assert(scansColumnar(t))
     // projection of constants only (the file carries neither column)
     val versions = t.select("_commit_version").distinct().collect()
       .map(_.getLong(0)).sorted.toSeq

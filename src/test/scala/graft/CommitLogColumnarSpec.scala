@@ -2,25 +2,43 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{CommitLogReaderFactory, CommitLogReadTracker}
 import graft.streaming.CommitLogIngest
 
-/** The vectorized V2 decode path (`ColumnarCommitReader`): every supported
-  * type round-trips bit-exactly and the columnar/row readers agree on the
-  * same bytes; nested schemas fall back to the row path; mixed-generation
-  * tables null-fill; pushed filters still row-group-skip without losing
-  * rows; count-only scans read no pages at all. */
+/** The `graft-commitlog` V2 read against the API read of the same table:
+  * each case builds a table and lists pairs of (V2 read, `CommitLogIngest`
+  * read), and every pair must hold the same multiset of rows — the
+  * connector's pruning, constants, masks and column mapping sit on top of
+  * the one parquet decoder, and none of them may change an answer. One
+  * test runs per case, under the case's name. */
 class CommitLogColumnarSpec extends SparkSuite {
 
   private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-col-$prefix")
+    val d = java.nio.file.Files.createTempDirectory(s"graft-read-$prefix")
     d.toFile.deleteOnExit()
-    d.toString
+    d.toString + "/t"
   }
+
+  private def v2(table: String): DataFrame =
+    spark.read.format("graft-commitlog").option("path", table).load()
+
+  private def snap(table: String): DataFrame =
+    CommitLogIngest.snapshot(spark, table)
+
+  private def key(r: Row): String = r.toSeq.map {
+    case b: Array[Byte] => b.toSeq.toString
+    case v => String.valueOf(v)
+  }.mkString("|")
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(key).sorted.toSeq
+
+  private def frame(schema: StructType, rs: Seq[Row], parts: Int)
+      : DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rs, parts), schema)
 
   private val allTypes = StructType(Seq(
     StructField("c_long", LongType),
@@ -37,173 +55,181 @@ class CommitLogColumnarSpec extends SparkSuite {
 
   private def allTypesRows(n: Int): Seq[Row] =
     (0 until n).map { i =>
-      if (i % 7 == 3)
-        Row(null, null, null, null, null, null, null, null, null, null, null)
+      if (i % 7 == 3) Row.fromSeq(Seq.fill(allTypes.length)(null))
       else Row(i.toLong, i, i.toShort, (i % 100).toByte, i * 1.5,
         i * 0.5f, i % 2 == 0, s"s-$i", Array[Byte](i.toByte, (i + 1).toByte),
         new Timestamp(1700000000000L + i * 1000L),
         new Date(86400000L * (19000 + i)))
     }
 
-  test("all supported types round-trip through the columnar path, nulls included") {
-    val s = spark
-    val table = tmp("types")
-    val df = s.createDataFrame(
-      s.sparkContext.parallelize(allTypesRows(500), 2), allTypes)
-    df.write.format("graft-commitlog").option("path", table).mode("append").save()
-    val back = s.read.format("graft-commitlog").option("path", table).load()
-    assert(CommitLogReaderFactory.lastMode == "row" ||
-      CommitLogReaderFactory.lastMode == "columnar") // reset below
-    val got = back.collect()
-    assert(CommitLogReaderFactory.lastMode == "columnar",
-      "flat all-primitive schema did not take the columnar path")
-    def key(r: Row): String = r.toSeq.map {
-      case b: Array[Byte] => b.toSeq.toString
-      case v => String.valueOf(v)
-    }.mkString("|")
-    assert(got.map(key).sorted.toSeq ===
-      allTypesRows(500).map(key).sorted.toSeq,
-      "columnar round-trip diverged")
-  }
-
-  test("columnar and row readers agree on the same bytes") {
-    val s = spark
-    import s.implicits._
-    val table = tmp("agree")
-    (0L until 5000L).map(i => (i, s"v$i", i * 0.25, i % 3 == 0))
-      .toDF("id", "v", "x", "f")
-      .write.format("graft-commitlog").option("path", table).mode("append").save()
-    val viaColumnar = s.read.format("graft-commitlog").option("path", table)
-      .load().collect().map(_.toString).sorted.toSeq
-    assert(CommitLogReaderFactory.lastMode == "columnar")
-
-    // a table whose SCHEMA nests falls back to the row reader (projection-
-    // level structs are built above the scan and stay columnar)
-    val nestedTable = tmp("nested")
-    CommitLogIngest.commitAppend(
-      (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
-        .select(col("id"), struct(col("v"), (col("id") * 2).as("w")).as("s")),
-      nestedTable)
-    val viaRow = s.read.format("graft-commitlog").option("path", nestedTable)
-      .load().collect()
-    assert(CommitLogReaderFactory.lastMode == "row",
-      "nested table schema should fall back to the row reader")
-    assert(viaRow.length == 100 &&
-      viaRow.map(r => (r.getLong(0), r.getStruct(1).getString(0),
+  /** Each case: its name and the (V2 read, API read) pairs over a table it
+    * builds. */
+  private def cases: Seq[(String, () => Seq[(DataFrame, DataFrame)])] = Seq(
+    "all supported types round-trip through the columnar path, nulls included" -> { () =>
+      val t = tmp("types")
+      frame(allTypes, allTypesRows(500), 2).write.format("graft-commitlog")
+        .option("path", t).mode("append").save()
+      // the round trip is also exact against the rows written
+      assert(rows(v2(t)) == allTypesRows(500).map(key).sorted)
+      Seq(v2(t) -> snap(t),
+        v2(t).filter(col("c_str") >= "s-400") ->
+          snap(t).filter(col("c_str") >= "s-400"))
+    },
+    "mixed generations null-fill, filters row-group-skip, count-only scans work" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("gen")
+      (0L until 3000L).map(i => (i, s"p$i")).toDF("id", "p")
+        .repartitionByRange(3, col("id")).sortWithinPartitions("id")
+        .write.format("graft-commitlog").option("path", t)
+        .mode("append").save()
+      (3000L until 6000L).map(i => (i, s"p$i", i * 2))
+        .toDF("id", "p", "extra")
+        .repartitionByRange(3, col("id")).sortWithinPartitions("id")
+        .write.format("graft-commitlog").option("path", t)
+        .mode("append").save()
+      val old = v2(t).filter(col("id") < 3000).collect()
+      assert(old.length == 3000 && old.forall(_.isNullAt(2)),
+        "old generation did not null-fill")
+      assert(v2(t).filter(col("extra") > 11000L).count() == 499L)
+      assert(v2(t).count() == 6000L)
+      Seq(v2(t) -> snap(t),
+        v2(t).filter(col("id") >= 5990) -> snap(t).filter(col("id") >= 5990),
+        v2(t).filter(col("extra") === 7000L) ->
+          snap(t).filter(col("extra") === 7000L))
+    },
+    "a renamed (mapped) column" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("mapped")
+      (0L until 100L).map(i => (i, i + 1000L, s"p$i")).toDF("id", "a", "tag")
+        .write.format("graft-commitlog").option("path", t)
+        .mode("append").save()
+      CommitLogIngest.renameColumn(s, t, "a", "score")
+      assert(v2(t).columns.toSeq == Seq("id", "score", "tag"))
+      Seq(v2(t) -> snap(t),
+        v2(t).filter(col("score") >= 1050L) ->
+          snap(t).filter(col("score") >= 1050L))
+    },
+    "a masked file with a pushed filter" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("dv")
+      (0L until 200L).map(i => (i, s"p$i")).toDF("id", "p")
+        .write.format("graft-commitlog").option("path", t)
+        .option("statsCol", "id").option("enableDv", "true")
+        .mode("append").save()
+      CommitLogIngest.deleteWhere(s, t, col("id") % 7 === 3,
+        statsCol = Some("id"))
+      assert(CommitLogIngest.liveState(s, t,
+        CommitLogIngest.latestVersion(t))._2.nonEmpty, "no live mask")
+      val in = col("id") >= 7L && col("id") <= 31L
+      assert(v2(t).filter(in).count() == (7L to 31L).count(_ % 7 != 3))
+      Seq(v2(t) -> snap(t), v2(t).filter(in) -> snap(t).filter(in))
+    },
+    "CDF constants on append files and on stored change files" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("cdf")
+      (0L until 100L).map(i => (i, s"p$i")).toDF("id", "p")
+        .write.format("graft-commitlog").option("path", t)
+        .option("enableCdf", "true").mode("append").save()
+      CommitLogIngest.deleteWhere(s, t, col("id") % 3 === 0)
+      val feed = s.read.format("graft-commitlog").option("path", t)
+        .option("readChangeFeed", "true").option("startingVersion", "0")
+        .load()
+      val api = CommitLogIngest.changeFeed(s, t, -1L, 1L)
+      assert(feed.select("_change_type").distinct().count() == 2,
+        "the feed must hold both insert and delete rows")
+      Seq(feed -> api,
+        feed.select("_commit_version", "_change_type") ->
+          api.select("_commit_version", "_change_type"),
+        feed.filter(col("_commit_version") === 1L) ->
+          api.filter(col("_commit_version") === 1L),
+        feed.filter(col("_change_type") === "insert") ->
+          api.filter(col("_change_type") === "insert"))
+    },
+    ("array<primitive> columns decode COLUMNAR: parity with the row " +
+      "path and native, nulls/empties/ragged lengths exact") -> { () =>
+      val t = tmp("arr")
+      val schema = StructType(Seq(
+        StructField("id", LongType),
+        StructField("emb", ArrayType(FloatType)),
+        StructField("ws", ArrayType(LongType))))
+      val rs: Seq[Row] = (0 until 500).map { i =>
+        if (i % 11 == 3) Row(i.toLong, null, null)
+        else if (i % 11 == 7) Row(i.toLong, Seq.empty[Float], Seq.empty[Long])
+        else Row(i.toLong,
+          (0 until (i % 5) + 1).map(j => i * 0.5f + j),
+          (0 until (i % 3) + 1).map(j => i.toLong * 10 + j))
+      }
+      CommitLogIngest.commitAppend(frame(schema, rs, 4), t)
+      def sums(df: DataFrame) = df.agg(sum(size(col("emb"))),
+        sum(aggregate(col("ws"), lit(0L), _ + _)))
+      Seq(v2(t) -> snap(t), sums(v2(t)) -> sums(snap(t)),
+        v2(t).filter(col("id") < 100L) -> snap(t).filter(col("id") < 100L))
+    },
+    "columnar and row readers agree on the same bytes" -> { () =>
+      val s = spark
+      import s.implicits._
+      val flat = tmp("agree")
+      (0L until 5000L).map(i => (i, s"v$i", i * 0.25, i % 3 == 0))
+        .toDF("id", "v", "x", "f")
+        .write.format("graft-commitlog").option("path", flat)
+        .mode("append").save()
+      // a nested table schema reads through the same decoder
+      val nested = tmp("nested")
+      CommitLogIngest.commitAppend(
+        (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
+          .select(col("id"), struct(col("v"), (col("id") * 2).as("w")).as("s")),
+        nested)
+      val got = v2(nested).collect()
+      assert(got.map(r => (r.getLong(0), r.getStruct(1).getString(0),
         r.getStruct(1).getLong(1))).sortBy(_._1).toSeq ==
         (0L until 100L).map(i => (i, s"v$i", i * 2)))
-    // the flat table's columnar result matches a native snapshot read
-    assert(viaColumnar ==
-      CommitLogIngest.snapshot(s, table).collect()
-        .map(_.toString).sorted.toSeq)
-  }
+      Seq(v2(flat) -> snap(flat), v2(nested) -> snap(nested),
+        v2(nested).select(col("s.w")) -> snap(nested).select(col("s.w")))
+    },
+    "aggregate parity between connector and native snapshot on lineitem" -> { () =>
+      val t = tmp("li")
+      CommitLogIngest.commitAppend(
+        spark.read.parquet(s"$sf0001/lineitem.parquet"), t)
+      // summation order may differ between the two scans' splits
+      val q = v2(t).agg(sum("l_quantity")).head().getDouble(0)
+      assert(math.abs(q - snap(t).agg(sum("l_quantity")).head()
+        .getDouble(0)) < 1e-6)
+      def aggs(df: DataFrame) = df.agg(sum("l_orderkey"), count(lit(1)),
+        max("l_shipdate"), min("l_returnflag"))
+      Seq(aggs(v2(t)) -> aggs(snap(t)), v2(t) -> snap(t))
+    },
+    "day= partition dirs" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("day")
+      (0L until 3000L).map(i => (i, i % 5, s"p$i")).toDF("id", "day", "p")
+        .write.format("graft-commitlog").option("path", t)
+        .option("partitionCols", "day").mode("append").save()
+      Seq(v2(t) -> snap(t),
+        v2(t).filter(col("day") === 3L) -> snap(t).filter(col("day") === 3L))
+    },
+    "a count-only scan" -> { () =>
+      val s = spark
+      import s.implicits._
+      val t = tmp("count")
+      (0L until 1000L).map(i => (i, s"p$i")).toDF("id", "p").repartition(4)
+        .write.format("graft-commitlog").option("path", t)
+        .mode("append").save()
+      // an empty projection reads through the decoder (no column at all)
+      assert(v2(t).select(lit(1)).collect().length == 1000)
+      Seq(v2(t).agg(count(lit(1))) -> snap(t).agg(count(lit(1))),
+        v2(t).select(lit(1)) -> snap(t).select(lit(1)))
+    })
 
-  test("mixed generations null-fill, filters row-group-skip, count-only scans work") {
-    val s = spark
-    import s.implicits._
-    val table = tmp("gen")
-    // gen 1 lacks `extra`; ids are range-clustered so id-filters can skip
-    (0L until 3000L).map(i => (i, s"p$i")).toDF("id", "p")
-      .repartitionByRange(3, col("id")).sortWithinPartitions("id")
-      .write.format("graft-commitlog").option("path", table).mode("append").save()
-    (3000L until 6000L).map(i => (i, s"p$i", i * 2))
-      .toDF("id", "p", "extra")
-      .repartitionByRange(3, col("id")).sortWithinPartitions("id")
-      .write.format("graft-commitlog").option("path", table).mode("append").save()
-    val t = s.read.format("graft-commitlog").option("path", table).load()
-    // old-generation rows carry NULL extra through the columnar path
-    val oldSide = t.filter(col("id") < 3000).collect()
-    assert(CommitLogReaderFactory.lastMode == "columnar")
-    assert(oldSide.length == 3000 &&
-      oldSide.forall(_.isNullAt(2)), "old generation did not null-fill")
-    // a selective filter keeps exactly its rows (pushdown never drops)
-    assert(t.filter(col("id") >= 5990).count() == 10)
-    assert(t.filter(col("extra") === 7000L).collect()
-      .map(_.getLong(0)).toSeq == Seq(3500L))
-    // count-only scan (empty projection → metadata row counts)
-    assert(t.count() == 6000L)
-    // comparison on a column gen-1 lacks skips those FILES entirely
-    CommitLogReadTracker.enable()
-    val n = t.filter(col("extra") > 11000L).count()
-    val opened = CommitLogReadTracker.drain()
-    CommitLogReadTracker.disable()
-    assert(n == 499L) // ids 5501..5999
-    val gen1Files = CommitLogIngest.liveFiles(s, table, 0L).toSet
-    assert(opened.nonEmpty && !opened.exists(gen1Files),
-      s"filter on a gen-2 column opened gen-1 files: $opened")
-  }
-
-  test("aggregate parity between connector and native snapshot on lineitem") {
-    val s = spark
-    val table = tmp("li")
-    val li = s.read.parquet(s"$sf0001/lineitem.parquet")
-    CommitLogIngest.commitAppend(li, table)
-    val conn = s.read.format("graft-commitlog").option("path", table).load()
-      .agg(sum("l_orderkey"), sum("l_quantity"), count(lit(1)),
-        max("l_shipdate"), min("l_returnflag")).head()
-    assert(CommitLogReaderFactory.lastMode == "columnar")
-    val nat = CommitLogIngest.snapshot(s, table)
-      .agg(sum("l_orderkey"), sum("l_quantity"), count(lit(1)),
-        max("l_shipdate"), min("l_returnflag")).head()
-    assert(conn.getLong(0) == nat.getLong(0))
-    assert(math.abs(conn.getDouble(1) - nat.getDouble(1)) < 1e-6)
-    assert(conn.getLong(2) == nat.getLong(2))
-    assert(conn.getTimestamp(3) == nat.getTimestamp(3))
-    assert(conn.getString(4) == nat.getString(4))
-  }
-
-  test("array<primitive> columns decode COLUMNAR: parity with the row " +
-      "path and native, nulls/empties/ragged lengths exact") {
-    val s = spark
-    val dir = tmp("arr") + "/t"
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("emb", ArrayType(FloatType)),
-      StructField("ws", ArrayType(LongType))))
-    val rows: Seq[Row] = (0 until 500).map { i =>
-      if (i % 11 == 3) Row(i.toLong, null, null) // null arrays
-      else if (i % 11 == 7) Row(i.toLong, Seq.empty[Float], Seq.empty[Long])
-      else Row(i.toLong,
-        (0 until (i % 5) + 1).map(j => i * 0.5f + j),
-        (0 until (i % 3) + 1).map(j => i.toLong * 10 + j))
+  cases.foreach { case (name, build) =>
+    test(name) {
+      build().zipWithIndex.foreach { case ((viaV2, viaApi), i) =>
+        assert(rows(viaV2) == rows(viaApi), s"pair $i")
+      }
     }
-    CommitLogIngest.commitAppend(
-      s.createDataFrame(new java.util.ArrayList[Row](rows.length) {
-        rows.foreach(add)
-      }, schema).repartition(4), dir)
-    def read() = s.read.format("graft-commitlog").option("path", dir).load()
-    // the array schema is columnar-ELIGIBLE and the decode is exact
-    val got = read().collect().map(_.toString).sorted.toSeq
-    assert(CommitLogReaderFactory.lastMode == "columnar",
-      "array<primitive> must take the vectorized path")
-    val native = CommitLogIngest.snapshot(s, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == native, "columnar array decode diverged from native")
-    // row-path agreement on the same bytes: drive GroupRowReader
-    // directly over one file (no env flip needed)
-    val f = CommitLogIngest.liveFiles(s, dir,
-      CommitLogIngest.latestVersion(dir)).head
-    val rr = new graft.sources.GroupRowReader(f, schema)
-    val viaRow = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (rr.next()) viaRow += rr.get().getLong(0)
-    rr.close()
-    val viaCol = s.read.format("graft-commitlog").option("path", dir)
-      .load().filter(input_file_name().contains("")).select("id")
-    assert(viaRow.nonEmpty, "row reader must decode the array file")
-    // aggregation over array contents through the columnar path
-    val sums = read().agg(
-      sum(size(col("emb"))), sum(aggregate(col("ws"), lit(0L), _ + _)))
-      .collect()(0)
-    val sumsNative = CommitLogIngest.snapshot(s, dir).agg(
-      sum(size(col("emb"))), sum(aggregate(col("ws"), lit(0L), _ + _)))
-      .collect()(0)
-    assert(sums == sumsNative)
-    // a filter on a FLAT column still prunes/filters with arrays beside it
-    assert(read().filter(col("id") < 100L).count() == 100L)
-    // arrays of strings / nested arrays keep the row path (eligibility)
-    assert(!graft.sources.CommitLogColumnar.supports(StructType(Seq(
-      StructField("a", ArrayType(StringType))))))
-    assert(!graft.sources.CommitLogColumnar.supports(StructType(Seq(
-      StructField("a", ArrayType(ArrayType(FloatType)))))))
   }
 }

@@ -52,7 +52,7 @@ class CommitLogWriteSpec extends SparkSuite {
         }
       }
     }
-    // and the V2 batch reader (GroupRowReader) decodes the writer's files
+    // and the V2 batch reader decodes the writer's files
     val v2 = s.read.format("graft-commitlog").option("path", table).load()
       .select("l", "str", "al", "st").orderBy("l").collect()
     assert(v2(0) == Row(1L, "alpha", Seq(10L, 20L), Row(42L, "nested")))

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.CommitLogReaderFactory
 import graft.streaming.CommitLogIngest
 
 /** Deletion vectors — merge-on-read DELETE through the commit log (the
@@ -73,7 +72,7 @@ class DeletionVectorSpec extends SparkSuite {
     assert(ids(CommitLogIngest.snapshot(s, table)) == expect)
     // V2 surface: same rows, row mode forced while the mask is live
     assert(ids(v2(table)) == expect)
-    assert(CommitLogReaderFactory.lastMode == "row",
+    assert(!scansColumnar(v2(table)),
       "a live mask must force the scan onto the position-aware row path")
     // pushed filter on a masked file: exact — nothing resurrected, and
     // the dead row inside the filter range stays dead
@@ -185,7 +184,7 @@ class DeletionVectorSpec extends SparkSuite {
     assert(dvsAfter.isEmpty, "OPTIMIZE must materialize every mask")
     assert(ids(CommitLogIngest.snapshot(s, table)) == expect)
     assert(ids(v2(table)) == expect)
-    assert(CommitLogReaderFactory.lastMode == "columnar",
+    assert(scansColumnar(v2(table)),
       "materialized masks must restore the columnar fast path")
     // now the mask is dead (no retained version reads it at the floor)
     val dropped = CommitLogIngest.vacuum(s, table, ov)
@@ -267,7 +266,7 @@ class DeletionVectorSpec extends SparkSuite {
       .option("startingVersion", ov.toString).load()
     assert(ids(v2feed.filter(col("_change_type") === "delete")) ==
       (30L until 100L))
-    assert(CommitLogReaderFactory.lastMode == "row")
+    assert(!scansColumnar(v2feed))
     // and the cumulative feed (dv deletes + overwrite) nets to the
     // final table: every original row dies exactly once
     val all = CommitLogIngest.changeFeed(s, table, dv - 1, ov)

@@ -23,6 +23,15 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
         unwrapPlan(q.plan)
       case other => Seq(other)
     }.flatten
+
+  /** Whether every V2 scan `df` plans decodes in columnar batches (Spark
+    * plans row and columnar scans differently, so this is the plan's own
+    * answer, not reader state). */
+  protected def scansColumnar(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.supportsColumnar
+    }.forall(identity)
 }
 
 object SparkSuite {
