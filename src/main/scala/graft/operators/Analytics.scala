@@ -1348,7 +1348,10 @@ object Analytics {
     * deterministic cross-engine. */
   /** Total bytes under a table directory — the scale proxy the
     * equi-histogram gate keys on (guide §2.5: derive the regime from
-    * input size, not from a constant tuned to one SF). */
+    * input size, not from a constant tuned to one SF). It walks the LOCAL
+    * filesystem: a non-local sfDir (hdfs:, s3a:) reads as 0 bytes and
+    * always takes the small-input branch — still correct, as both
+    * branches bucket identically, only not the faster one at scale. */
   private def dirBytes(path: String): Long = {
     val root = new java.io.File(path)
     def walk(f: java.io.File): Long =
@@ -1393,8 +1396,11 @@ object Analytics {
     val b = 8
     val priced = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val smallMax = spark.conf.getOption("graft.equiHist.smallInputMaxBytes")
-      .map(_.toLong).getOrElse(8L << 20)
+    val gateKey = "graft.equiHist.smallInputMaxBytes"
+    val smallMax = spark.conf.getOption(gateKey).map(s =>
+      s.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$gateKey must be a byte count (a long), got '$s'")))
+      .getOrElse(8L << 20)
     if (dirBytes(s"$sfDir/orders.parquet") <= smallMax) {
       distributedPercentRank(priced, col("o_totalprice"), col("o_orderkey"),
           "pct")

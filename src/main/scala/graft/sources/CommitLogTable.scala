@@ -92,8 +92,8 @@ class CommitLogTableProvider extends TableProvider with DataSourceRegister {
         })
     val base =
       if (CommitLogIngest.latestVersion(dir) >= 0)
-        CommitLogIngest.snapshot(CommitLogPlanning.session, dir,
-          pinned.getOrElse(-1L)).schema
+        CommitLogIngest.snapshotSchema(CommitLogPlanning.session, dir,
+          pinned.getOrElse(-1L))
       else
         // a CREATEd-but-empty table declares its schema via the marker
         // (CommitLogIngest.createTable) — what lets a writer or reader

@@ -23,24 +23,26 @@ import graft.sources.LayoutDirs
   * partition — if the version is already committed, only the fast-path
   * marker is repaired; if not, the data dir is rewritten (clobbering any
   * partial files a crash left, which nothing references yet) and the
-  * log partition written. VISIBILITY is the log write's job-commit
-  * rename: `LayoutDirs.hasParquetData` counts only committed files
-  * (staging part files under `_temporary` are excluded at every depth),
-  * so neither a crash-replay nor a concurrent offset poll can mistake an
+  * log partition written. VISIBILITY is a rename: every log partition is
+  * staged under a dot-prefixed dir and moved into place whole, so
+  * neither a crash-replay nor a concurrent offset poll can mistake an
   * in-flight version for a committed one. On a real object store the
   * per-version log commit needs put-if-absent (the Delta
   * `_delta_log/N.json` contention rule); a local filesystem test gets
-  * atomicity from the single writer.
+  * atomicity from the rename.
   *
-  * Log CHECKPOINTING (the Delta `checkpoint.parquet` shape): a log that
-  * grows one partition per commit makes every snapshot read O(commits).
-  * Every [[CheckpointEvery]] versions the RESOLVED live set (path +
-  * its add version) is written to `log_ckpt/c=N` — resolved from the
-  * PREVIOUS checkpoint plus the tail, never by re-replaying the full
-  * log, so checkpointing keeps working after retention has deleted old
-  * log partitions. Snapshot reads at or above a checkpoint replay
-  * checkpoint + direct-addressed tail only; log partitions at or below
-  * it are deletable retention (time travel below the checkpoint is the
+  * METADATA is [[LogReplay]]'s job, on the driver with no Spark job:
+  * action files are read and written directly, and one memo per table
+  * holds the resolved state (live files, masks, schema, txn epochs) at
+  * its latest replayed version, so a resolve reads only the commits
+  * since the last one and a streaming epoch costs exactly its data
+  * write. Every [[CheckpointEvery]] versions that state is written to
+  * `log_ckpt/c=N` (the Delta `checkpoint.parquet` shape) — the previous
+  * checkpoint plus the tail, never a re-replay of the full log, so
+  * checkpointing keeps working after retention has deleted old log
+  * partitions. Reads at or above a checkpoint replay checkpoint +
+  * direct-addressed tail only; log partitions at or below it are
+  * deletable retention (time travel below the oldest checkpoint is the
   * price), and `StreamingCommitSpec` proves the latest snapshot survives
   * exactly that deletion. */
 object CommitLogIngest {
@@ -200,145 +202,20 @@ object CommitLogIngest {
   }
 
   /** The declared schema AS OF `version`: the latest schema action at or
-    * below it, resolved through the same checkpoint-aware replay as the
-    * file actions (checkpoints carry the schema row, so resolution
-    * survives log retention). None before any schema action (a pre-
-    * evolution table) → snapshot falls back to file inference.
-    *
-    * MEMOIZED per (tableDir, version) — round 15, the Delta/Iceberg
-    * snapshot-cache shape: a committed version's log slice is immutable
-    * (claims are atomic, failed claims delete their staging, history is
-    * append-only), so the resolved schema can never change, yet the
-    * unmemoized form ran a driver collect job per call — and every
-    * connector planning, DML discovery pass, and snapshot read calls
-    * it. Process-local metadata only, rebuilt per session — never a
-    * result cache. */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Option[org.apache.spark.sql.types.StructType]]
-
+    * below it, resolved by [[LogReplay]] (checkpoints carry the schema
+    * row, so resolution survives log retention). None before any schema
+    * action (a pre-evolution table) → snapshot falls back to file
+    * inference. */
   def schemaAt(spark: SparkSession, tableDir: String,
-      version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    if (schemaMemo.size > MetaMemoMax) schemaMemo.clear()
-    schemaMemo.getOrElseUpdate((tableDir, version),
-      actionRows(spark, tableDir, version)
-        .filter(col("action") === "schema")
-        .orderBy(col("version").desc).limit(1)
-        .collect().headOption.map(r =>
-          org.apache.spark.sql.types.DataType
-            .fromJson(r.getAs[String]("path"))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
-  }
+      version: Long): Option[org.apache.spark.sql.types.StructType] =
+    LogReplay.resolve(tableDir, version).schemaType
 
-  /** Cap on the per-(table, version) metadata memos — a long session
-    * touches many temp tables; past the cap the memo just rebuilds
-    * (coarse clear, never stale: entries are immutable-keyed). */
-  private val MetaMemoMax = 4096
-
-  /** Checkpoint versions present ON DISK (`log_ckpt/c=N` dirs with
-    * committed data) — the marker is only the fast path; resolution
-    * must see a checkpoint whose marker write crashed, and must be able
-    * to pick an OLDER one (time travel below the latest checkpoint
-    * stays correct after retention because checkpoints are never
-    * deleted). */
-  private def checkpointsOnDisk(tableDir: String): Seq[Long] = {
-    val d = Paths.get(s"$tableDir/log_ckpt")
-    if (!Files.exists(d)) return Seq.empty
-    val s = Files.list(d)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("c=") =>
-          n.stripPrefix("c=").toLong }
-        .filter(v => LayoutDirs.hasParquetData(s"$tableDir/log_ckpt/c=$v"))
-        .toSeq.sorted
-    } finally s.close()
-  }
-
-  /** Action rows (version, action, path) sufficient to resolve any
-    * snapshot at `version`: the BEST surviving checkpoint ≤ version
-    * (strictly below `ckptBelow` — a checkpoint must never resolve from
-    * the very directory it is about to overwrite) + direct-addressed
-    * tail when one exists (O(tail) log files — never lists or scans the
-    * O(commits) history), full log replay otherwise. Using the best ≤
-    * rather than only the latest keeps time travel BELOW the latest
-    * checkpoint correct after retention pruned the early log. */
-  private def actionRows(spark: SparkSession, tableDir: String,
-      version: Long, ckptBelow: Long = Long.MaxValue): DataFrame = {
-    val logDir = s"$tableDir/log"
-    val c = checkpointsOnDisk(tableDir)
-      .filter(v => v <= version && v < ckptBelow)
-      .lastOption.getOrElse(-1L)
-    if (c >= 0) {
-      val ckpt = spark.read.parquet(s"$tableDir/log_ckpt/c=$c")
-      // newer checkpoints carry an action column (they preserve the
-      // latest schema action across retention); older ones are all adds
-      val base =
-        (if (ckpt.columns.contains("action")) ckpt
-         else ckpt.withColumn("action", lit("add")))
-          .select(col("v").cast("long").as("version"),
-            col("action"), col("path"))
-      val tailDirs = ((c + 1) to version)
-        .map(v => s"$logDir/version=$v")
-        .filter(LayoutDirs.hasParquetData) // skipped empty batches
-      if (tailDirs.isEmpty) base
-      else base.unionByName(
-        spark.read.option("basePath", logDir).parquet(tailDirs: _*)
-          .select(col("version").cast("long"), col("action"),
-            col("path")))
-    } else
-      spark.read.parquet(logDir)
-        .filter(col("version") <= version)
-        .select(col("version").cast("long"), col("action"), col("path"))
-  }
-
-  /** Resolve the live set at `upTo` (checkpoint-aware — the Delta rule:
-    * new checkpoint = previous checkpoint + tail, so retention of old
-    * log partitions never costs live files) and persist it as
-    * `log_ckpt/c=<upTo>`. Resolution is pinned to checkpoints STRICTLY
-    * below `upTo`: a crash-replay of this very checkpoint must not read
-    * `c=<upTo>` while overwriting it (Spark rejects the same-path
-    * read-write, wedging the stream — or worse, empties the checkpoint
-    * retention depends on). */
-  private def writeLogCheckpoint(spark: SparkSession, tableDir: String,
-      upTo: Long): Unit = {
-    val rows = actionRows(spark, tableDir, upTo, ckptBelow = upTo)
-    val liveAdds = rows
-      // dv actions annotate a live file, they don't retire it — liveness
-      // is add-vs-remove only (the liveState rule)
-      .filter(col("action").isin("add", "remove"))
-      .groupBy(col("path"))
-      .agg(max_by(col("action"), col("version")).as("last"),
-        max(col("version")).as("v"))
-      .filter(col("last") === "add")
-      .select(col("path"), col("v"), lit("add").as("action"))
-    // deletion-vector actions for STILL-LIVE paths ride the checkpoint —
-    // a mask is current table state, not history: resolution after log
-    // retention must still know which dv/version=N dirs mask the live
-    // set. Masks of since-rewritten paths (their file left the live set,
-    // the rewrite materialized them) drop out here, bounding growth.
-    val dvRows = rows.filter(col("action") === "dv")
-      .select(col("path"), col("version").as("v"), lit("dv").as("action"))
-      .join(liveAdds.select("path"), Seq("path"), "left_semi")
-      .distinct()
-    // the latest schema action rides the checkpoint, so schema-as-of
-    // resolution survives retention exactly like the live file set does
-    val schemaRow = rows.filter(col("action") === "schema")
-      .orderBy(col("version").desc).limit(1)
-      .select(col("path"), col("version").as("v"),
-        lit("schema").as("action"))
-    // each streaming query's LATEST ("txn", "queryId:epoch") row rides it
-    // too — the exactly-once replay guard (lastTxnEpoch) must keep
-    // answering after retention pruned the epoch's own log partition
-    val txnRows = rows.filter(col("action") === "txn")
-      .groupBy(expr("substring_index(path, ':', 1)").as("qid"))
-      .agg(max_by(struct(col("path"), col("version")),
-        expr("cast(substring_index(path, ':', -1) as long)")).as("m"))
-      .select(col("m.path"), col("m.version").as("v"),
-        lit("txn").as("action"))
-    liveAdds.unionByName(schemaRow).unionByName(txnRows)
-      .unionByName(dvRows)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$tableDir/log_ckpt/c=$upTo")
+  /** Persist the state at `upTo` as `log_ckpt/c=<upTo>` (the Delta rule:
+    * the new checkpoint is the previous one plus the tail, so retention
+    * of old log partitions never costs live files), then advance the
+    * marker. */
+  private def writeLogCheckpoint(tableDir: String, upTo: Long): Unit = {
+    LogReplay.writeCheckpoint(tableDir, upTo)
     writeMarker(ckptMarkerPath(tableDir), upTo)
   }
 
@@ -361,30 +238,25 @@ object CommitLogIngest {
       // a missing version dir always means retention — `changes` can fail
       // loudly on a pruned range instead of mistaking it for an idle
       // trigger (readers ignore any action other than add/remove).
-      if (!LayoutDirs.hasParquetData(versionDir)) {
-        import spark.implicits._
-        Seq(("empty", "")).toDF("action", "path")
-          .coalesce(1).write.mode("overwrite").parquet(versionDir)
-      }
+      if (!LayoutDirs.hasParquetData(versionDir))
+        LogReplay.writeVersion(tableDir, batchId, Seq(("empty", "")))
     } else if (!LayoutDirs.hasParquetData(versionDir)) {
       val dataDir = s"$tableDir/data/b$batchId"
       toPhysical(batch, tableDir).write.mode("overwrite").parquet(dataDir)
       statsCol.foreach(k => writeIndexRows(spark, tableDir, dataDir, k,
         batchId))
-      import spark.implicits._
       // the mapping-merged json BEFORE the marker overwrite, used for both
       val mergedJson = withMapping(batch.schema, tableDir).json
-      (LayoutDirs.dataFiles(dataDir).map(("add", _)) ++
-        schemaActionFor(tableDir, batch.schema))
-        .toDF("action", "path")
-        .coalesce(1).write.mode("overwrite").parquet(versionDir)
+      LogReplay.writeVersion(tableDir, batchId,
+        LayoutDirs.dataFiles(dataDir).map(("add", _)) ++
+          schemaActionFor(tableDir, batch.schema))
       writeSchemaMarker(tableDir, mergedJson)
     }
     // the marker guard makes a crash-replay of a completed checkpoint a
     // no-op instead of a second resolve-and-overwrite of the same dir
     if ((batchId + 1) % CheckpointEvery == 0 &&
         lastCheckpoint(tableDir) < batchId)
-      writeLogCheckpoint(spark, tableDir, batchId)
+      writeLogCheckpoint(tableDir, batchId)
     writeMarker(markerPath(tableDir), batchId)
   }
 
@@ -863,15 +735,10 @@ object CommitLogIngest {
         op.contains("update-dv")))
       enforceConstraints(spark, tableDir, adds,
         schemaOf.orElse(declaredSchema(tableDir)))
-    import spark.implicits._
-    val stage = Paths.get(tableDir, "log",
-      s".stage-${java.util.UUID.randomUUID().toString.take(12)}")
-    (removes.map(("remove", _)) ++ adds.map(("add", _)) ++
-      schemaOf.toSeq.flatMap(st => schemaActionFor(tableDir, st)) ++
-      txn.map(("txn", _)) ++ op.map(("op", _)) ++ extra)
-      .toDF("action", "path")
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    stage
+    LogReplay.stageVersion(tableDir,
+      removes.map(("remove", _)) ++ adds.map(("add", _)) ++
+        schemaOf.toSeq.flatMap(st => schemaActionFor(tableDir, st)) ++
+        txn.map(("txn", _)) ++ op.map(("op", _)) ++ extra)
   }
 
   /** Post-claim bookkeeping: v is exclusively ours now, so the index and
@@ -988,13 +855,8 @@ object CommitLogIngest {
   private[graft] def lastTxnEpoch(spark: SparkSession, tableDir: String,
       queryId: String): Long = {
     val latest = latestVersion(tableDir)
-    if (latest < 0) return -1L
-    actionRows(spark, tableDir, latest)
-      .filter(col("action") === "txn" &&
-        col("path").startsWith(queryId + ":"))
-      .select(max(expr("cast(substring_index(path, ':', -1) as long)")))
-      .collect().headOption.flatMap(r =>
-        if (r.isNullAt(0)) None else Some(r.getLong(0))).getOrElse(-1L)
+    if (latest < 0) -1L
+    else LogReplay.resolve(tableDir, latest).lastEpoch(queryId)
   }
 
   /** Commit one streaming-sink epoch exactly once, with the txn replay
@@ -1120,7 +982,7 @@ object CommitLogIngest {
   private def maybeCheckpoint(spark: SparkSession, tableDir: String,
       v: Long): Unit =
     if ((v + 1) % CheckpointEvery == 0) ckptLock.synchronized {
-      if (lastCheckpoint(tableDir) < v) writeLogCheckpoint(spark, tableDir, v)
+      if (lastCheckpoint(tableDir) < v) writeLogCheckpoint(tableDir, v)
     }
 
   // ---- DML through the log (copy-on-write) --------------------------------
@@ -2123,10 +1985,12 @@ object CommitLogIngest {
         toPhysical(out, tableDir).coalesce(paths.size)
           .write.mode("overwrite").parquet(dst)
       }
-      // Round-16 ADVICE: a failed group write must stop the queued/running
-      // sibling writes (shutdownNow + drain, so no detached Spark job keeps
-      // writing into outDir), then drain the concurrent CDF staging and
-      // delete both staging dirs before rethrowing.
+      // A failed group write must stop its siblings before outDir is
+      // deleted: interrupting a pool thread leaves its Spark job running
+      // (and recreating files under outDir), so the writes run under one
+      // job group and the abort cancels it, then drains the pool and the
+      // concurrent CDF staging, and deletes both staging dirs.
+      val jobGroup = s"graft-rewrite-${outDir.split('/').last}"
       def abortStaging(e: Throwable): Nothing = {
         try scala.concurrent.Await
           .result(cdfStagedF, scala.concurrent.duration.Duration.Inf)
@@ -2146,12 +2010,17 @@ object CommitLogIngest {
               scala.concurrent.ExecutionContext.fromExecutorService(pool)
             try {
               val futs = groups.map { case (s, p) =>
-                scala.concurrent.Future(writeGroup(s, p))(gec)
+                scala.concurrent.Future {
+                  spark.sparkContext.setJobGroup(jobGroup,
+                    s"rewrite of $tableDir", interruptOnCancel = true)
+                  writeGroup(s, p)
+                }(gec)
               }
               futs.foreach(f => scala.concurrent.Await
                 .result(f, scala.concurrent.duration.Duration.Inf))
             } catch {
               case e: Throwable =>
+                spark.sparkContext.cancelJobGroup(jobGroup)
                 pool.shutdownNow()
                 pool.awaitTermination(60,
                   java.util.concurrent.TimeUnit.SECONDS)
@@ -2952,11 +2821,11 @@ object CommitLogIngest {
       // target-live files with a POST-target mask: swapped out and
       // rewritten below (checked before the no-op return — a dv delete
       // after the target leaves the FILE sets identical while the
-      // logical state differs)
-      val laterMasked = actionRows(spark, tableDir, latest)
-        .filter(col("action") === "dv" && col("version") > toVersion)
-        .select("path").distinct().collect().map(_.getString(0))
-        .filter(wantSet).toSet
+      // logical state differs). A masked file removed since re-adds raw:
+      // its masks left the state with it.
+      val laterMasked = LogReplay.resolve(tableDir, latest).dvs
+        .collect { case (p, vs) if wantSet(p) && vs.exists(_ > toVersion) =>
+          p }.toSet
       // a RE-ADDED file with target-time masks must ALSO materialize:
       // re-adding it raw would need its pre-target ("dv", path) actions
       // to still resolve at the new latest, but a log checkpoint written
@@ -3081,81 +2950,37 @@ object CommitLogIngest {
     math.max(fromDirs, lastCheckpoint(tableDir))
   }
 
-  /** The live file set at `version` (see [[actionRows]] for cost). An
-    * EMPTY result is impossible for a committed version of this append-
-    * only table, so it means the history below the oldest surviving
-    * checkpoint was retention-pruned — fail loudly instead of returning
-    * a silently partial (here: vacuous) snapshot. */
+  /** The live file set at `version` (see [[liveState]]). */
   private[graft] def liveFiles(spark: SparkSession, tableDir: String,
       version: Long): Seq[String] =
     liveState(spark, tableDir, version)._1
 
-  /** Live files AND deletion-vector state at `version` in ONE log pass:
-    * (live paths, dv versions per masked live path). Liveness is decided
-    * by the last ADD-vs-REMOVE action only — a "dv" action annotates a
-    * live file (it masks rows, it does not retire the file), so letting
-    * it win the max_by would silently drop the file from every read.
-    * Masks for paths no longer live (their file was since rewritten by
-    * CoW DML / OPTIMIZE, which applied them) drop out here. */
-  /** liveState memo — same immutability argument as [[schemaMemo]]: the
-    * file set live AT a committed version never changes (vacuum only
-    * deletes files dead at the retention horizon; RESTORE/DML mint NEW
-    * versions), and the unmemoized form ran one driver aggregation job
-    * per call, with every query planning and every DML's
-    * plan/claim/postWin paying it again (round-14 verdict Next #3's "a
-    * dozen tiny driver jobs"). Only successful resolutions cache. */
-  private val liveMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), (Seq[String], Map[String, Seq[Long]])]
-
+  /** Live files AND deletion-vector state at `version`: (live paths,
+    * mask versions per masked live path), from [[LogReplay]] — zero Spark
+    * jobs, and O(commits since the last resolve) log reads. An EMPTY live
+    * set is impossible for a committed version of this append-only
+    * table, so it means the history below the oldest surviving
+    * checkpoint was retention-pruned — fail loudly instead of returning
+    * a silently partial (here: vacuous) snapshot. */
   private[graft] def liveState(spark: SparkSession, tableDir: String,
-      version: Long): (Seq[String], Map[String, Seq[Long]]) = {
-    if (liveMemo.size > MetaMemoMax) liveMemo.clear()
-    liveMemo.getOrElseUpdate((tableDir, version),
-      liveStateCompute(spark, tableDir, version))
-  }
-
-  private def liveStateCompute(spark: SparkSession, tableDir: String,
       version: Long): (Seq[String], Map[String, Seq[Long]]) = {
     // guard BEFORE the log read: a table with no committed version (or a
     // negative version from a caller that skipped latestVersion) must
-    // surface the contract message, not a raw path-not-found
-    // AnalysisException from reading a log dir that does not exist
+    // surface the contract message, not an empty replay
     if (version < 0 ||
         (!Files.exists(Paths.get(s"$tableDir/log")) &&
-          checkpointsOnDisk(tableDir).isEmpty))
+          LogReplay.checkpoints(tableDir).isEmpty))
       throw new IllegalStateException(
         s"$tableDir has no committed version (latest = " +
           s"${latestVersion(tableDir)}) — nothing to read at $version")
-    // liveness aggregates IN SPARK (round-12 ADVICE: collecting every
-    // add/remove/dv action row grew the driver set with tail churn) and
-    // in ONE job (round-13: a two-job shape doubled every connector
-    // query's planning metadata cost — ScanBench caught the inflation):
-    // per path, the last ADD-vs-REMOVE action decides liveness (a "dv"
-    // action annotates a live file, it does not retire it — max_by
-    // skips the null ordering its rows carry) while collect_set gathers
-    // the path's dv versions in the same aggregation. Only the RESULTS
-    // come back: live paths + their mask versions, O(live files).
-    val rows = actionRows(spark, tableDir, version)
-      .filter(col("action").isin("add", "remove", "dv"))
-      .groupBy(col("path"))
-      .agg(
-        max_by(when(col("action") =!= "dv", col("action")),
-          when(col("action") =!= "dv", col("version"))).as("last"),
-        collect_set(when(col("action") === "dv", col("version")))
-          .as("dvv"))
-      .filter(col("last") === "add")
-      .select("path", "dvv").collect()
-    val files = rows.map(_.getString(0)).toSeq.sorted
-    if (files.isEmpty)
+    val st = LogReplay.resolve(tableDir, version)
+    if (st.live.isEmpty)
       throw new IllegalStateException(
         s"no live files at version $version: the table is append-only, " +
           "so this version's history predates the oldest surviving " +
           "checkpoint and was retention-pruned — read at a version >= " +
-          s"${checkpointsOnDisk(tableDir).headOption.getOrElse(-1L)}")
-    val dvs = rows.iterator
-      .map(r => r.getString(0) -> r.getSeq[Long](1).distinct.sorted.toSeq)
-      .filter(_._2.nonEmpty).toMap
-    (files, dvs)
+          s"${LogReplay.checkpoints(tableDir).headOption.getOrElse(-1L)}")
+    (st.liveFiles, st.dvs)
   }
 
   /** The table at `version` (or the latest committed version when
@@ -3169,6 +2994,20 @@ object CommitLogIngest {
     val v = if (version >= 0) version else latestVersion(tableDir)
     val (files, dvs) = liveState(spark, tableDir, v)
     readWithDv(spark, tableDir, files, dvs, schemaAt(spark, tableDir, v))
+  }
+
+  /** The schema [[snapshot]] reads `version` under, without building the
+    * read: the declared schema as of that version, nullable as a file
+    * scan surfaces it. Only a pre-evolution table (no schema action)
+    * builds the snapshot and infers from its files. Fails like
+    * [[snapshot]] on a version with nothing to read. */
+  private[graft] def snapshotSchema(spark: SparkSession, tableDir: String,
+      version: Long = -1L): org.apache.spark.sql.types.StructType = {
+    val v = if (version >= 0) version else latestVersion(tableDir)
+    liveState(spark, tableDir, v) // the contract guard
+    schemaAt(spark, tableDir, v)
+      .map(org.apache.spark.sql.graft.Shim.asNullable)
+      .getOrElse(snapshot(spark, tableDir, v).schema)
   }
 
   /** Point lookup at the latest version through log + commit-time index:
@@ -3270,7 +3109,7 @@ object CommitLogIngest {
     val logDir = s"$tableDir/log"
     require(fromExclusive < toInclusive,
       s"changeFeed: empty range ($fromExclusive, $toInclusive]")
-    val floor = checkpointsOnDisk(tableDir).lastOption.getOrElse(-1L)
+    val floor = LogReplay.checkpoints(tableDir).lastOption.getOrElse(-1L)
     val schema = schemaAt(spark, tableDir, toInclusive)
     def readFiles(paths: Seq[String]): DataFrame =
       dataRead(spark, schema, paths)
@@ -3285,16 +3124,11 @@ object CommitLogIngest {
               "snapshot")
           None // never-committed id above the floor
         } else {
-          val actions = spark.read.parquet(dir)
-            .select("action", "path").collect()
-          val adds = actions.filter(_.getString(0) == "add")
-            .map(_.getString(1)).toSeq
-          val removes = actions.filter(_.getString(0) == "remove")
-            .map(_.getString(1)).toSeq
-          val dvMasked = actions.filter(_.getString(0) == "dv")
-            .map(_.getString(1)).toSeq
-          val ops = actions.filter(_.getString(0) == "op")
-            .map(_.getString(1)).toSet
+          val actions = LogReplay.versionActions(tableDir, v)
+          val adds = actions.collect { case ("add", p) => p }
+          val removes = actions.collect { case ("remove", p) => p }
+          val dvMasked = actions.collect { case ("dv", p) => p }
+          val ops = actions.collect { case ("op", p) => p }.toSet
           def tag(df: DataFrame, t: String): DataFrame =
             df.withColumn("_change_type", lit(t))
               .withColumn("_commit_version", lit(v))
@@ -3439,7 +3273,7 @@ object CommitLogIngest {
   private[graft] def cdfFiles(spark: SparkSession, tableDir: String,
       fromExclusive: Long, toInclusive: Long)
       : Seq[(String, Long, Option[String], Array[Long])] = {
-    val floor = checkpointsOnDisk(tableDir).lastOption.getOrElse(-1L)
+    val floor = LogReplay.checkpoints(tableDir).lastOption.getOrElse(-1L)
     ((fromExclusive + 1) to toInclusive).flatMap { v =>
       val dir = s"$tableDir/log/version=$v"
       if (!LayoutDirs.hasParquetData(dir)) {
@@ -3450,15 +3284,11 @@ object CommitLogIngest {
             "rebuild from a snapshot")
         Seq.empty // never-committed id above the floor
       } else {
-        val actions = spark.read.parquet(dir)
-          .select("action", "path").collect()
-        val adds = actions.filter(_.getString(0) == "add")
-          .map(_.getString(1)).toSeq
-        val removes = actions.filter(_.getString(0) == "remove")
-          .map(_.getString(1)).toSeq
-        val hasDv = actions.exists(_.getString(0) == "dv")
-        val ops = actions.filter(_.getString(0) == "op")
-          .map(_.getString(1)).toSet
+        val actions = LogReplay.versionActions(tableDir, v)
+        val adds = actions.collect { case ("add", p) => p }
+        val removes = actions.collect { case ("remove", p) => p }
+        val hasDv = actions.exists(_._1 == "dv")
+        val ops = actions.collect { case ("op", p) => p }.toSet
         // deletion-vector commit: the V2 surface serves FILES as
         // partitions and cannot express the mask join — it needs the
         // STORED change rows (CDF on), same rule as a CoW DML commit
@@ -3541,7 +3371,7 @@ object CommitLogIngest {
     // skipping those versions' rows (above the floor nothing may be
     // pruned, so a missing dir there is just a never-committed id).
     if (fromExclusive >= 0) {
-      val floor = checkpointsOnDisk(tableDir).lastOption.getOrElse(-1L)
+      val floor = LogReplay.checkpoints(tableDir).lastOption.getOrElse(-1L)
       val pruned = ((fromExclusive + 1) to math.min(toInclusive, floor))
         .filterNot(v => LayoutDirs.hasParquetData(s"$logDir/version=$v"))
       require(pruned.isEmpty,
@@ -3552,49 +3382,34 @@ object CommitLogIngest {
     }
     val c =
       if (fromExclusive < 0)
-        checkpointsOnDisk(tableDir).filter(_ <= toInclusive)
+        LogReplay.checkpoints(tableDir).filter(_ <= toInclusive)
           .lastOption.getOrElse(-1L)
       else -1L
-    val base: Seq[String] =
-      if (c >= 0) {
-        val ckpt = spark.read.parquet(s"$tableDir/log_ckpt/c=$c")
-        (if (ckpt.columns.contains("action"))
-           ckpt.filter(col("action") === "add")
-         else ckpt)
-          .select("path").collect().map(_.getString(0)).toSeq
-      } else Seq.empty
-    val dirs = ((math.max(fromExclusive, c) + 1) to toInclusive)
-      .map(v => s"$logDir/version=$v").filter(LayoutDirs.hasParquetData)
-    require(base.nonEmpty || dirs.nonEmpty,
+    val base =
+      if (c >= 0) LogReplay.checkpointAdds(tableDir, c) else Seq.empty
+    val tail = ((math.max(fromExclusive, c) + 1) to toInclusive)
+      .map(v => v -> LogReplay.versionActions(tableDir, v))
+      .filter(_._2.nonEmpty)
+    require(base.nonEmpty || tail.nonEmpty,
       s"changes($fromExclusive, $toInclusive]: no committed version " +
         s"in range under $logDir (retention pruned past this consumer?)")
-    val tail: Seq[String] =
-      if (dirs.isEmpty) Seq.empty
-      else {
-        val t = spark.read.option("basePath", logDir).parquet(dirs: _*)
-          .select(col("version").cast("long").as("v"), col("action"),
-            col("path"))
-        // a deletion-vector commit is a CHANGE commit too: it adds no
-        // files, but rows earlier versions delivered are now dead —
-        // an unaware incremental consumer must fail (or explicitly skip)
-        // exactly like it does for a CoW rewrite
-        val changeVersions = t.filter(col("action").isin("remove", "dv"))
-          .select("v").distinct().collect().map(_.getLong(0)).toSet
-        if (changeVersions.nonEmpty && !skipChangeCommits)
-          throw new IllegalStateException(
-            s"changes($fromExclusive, $toInclusive]: versions " +
-              s"${changeVersions.toSeq.sorted.mkString(",")} are CHANGE " +
-              "commits (DML rewrite / OPTIMIZE) — their added files " +
-              "re-carry rows earlier versions already delivered. Pass " +
-              "skipChangeCommits=true (option \"skipChangeCommits\" on " +
-              "the stream) to deliver appends only, or restart the " +
-              "consumer fresh from the latest snapshot")
-        val adds = t.filter(col("action") === "add")
-        (if (changeVersions.isEmpty) adds
-         else adds.filter(!col("v").isin(changeVersions.toSeq: _*)))
-          .select("path").collect().map(_.getString(0)).toSeq
-      }
-    base ++ tail
+    // a deletion-vector commit is a CHANGE commit too: it adds no files,
+    // but rows earlier versions delivered are now dead — an unaware
+    // incremental consumer must fail (or explicitly skip) exactly like it
+    // does for a CoW rewrite
+    val changeVersions = tail.collect { case (v, as)
+      if as.exists(a => a._1 == "remove" || a._1 == "dv") => v }
+    if (changeVersions.nonEmpty && !skipChangeCommits)
+      throw new IllegalStateException(
+        s"changes($fromExclusive, $toInclusive]: versions " +
+          s"${changeVersions.mkString(",")} are CHANGE " +
+          "commits (DML rewrite / OPTIMIZE) — their added files " +
+          "re-carry rows earlier versions already delivered. Pass " +
+          "skipChangeCommits=true (option \"skipChangeCommits\" on " +
+          "the stream) to deliver appends only, or restart the " +
+          "consumer fresh from the latest snapshot")
+    base ++ tail.filterNot(t => changeVersions.contains(t._1))
+      .flatMap(_._2.collect { case ("add", p) => p })
   }
 
   /** Start the commit loop. `triggerSec <= 0` drops the processing-time

@@ -24,6 +24,10 @@ object Shim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** `st` with every field, element and value nullable — the schema a
+    * file scan surfaces for a user-specified schema. */
+  def asNullable(st: StructType): StructType = st.asNullable
+
   /** The session planner's FULL strategy list (builtin + extension-injected
     * + experimental) — for idempotence checks before registering one. */
   def plannerStrategies(spark: SparkSession): Seq[Any] =

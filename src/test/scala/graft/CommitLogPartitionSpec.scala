@@ -261,6 +261,41 @@ class CommitLogPartitionSpec extends SparkSuite {
       "partitioned commit-log window census diverged from the source")
   }
 
+  test("a failed partition-group rewrite cancels its siblings and leaves no staged files") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("abort")
+    (0L until 3000L).map(i => (i, i % 5, s"p$i")).toDF("id", "day", "p")
+      .write.format("graft-commitlog").option("path", table)
+      .option("partitionCols", "day").mode("append").save()
+    val pre = CommitLogIngest.latestVersion(table)
+    // five day groups rewrite concurrently; day 2's fails on its first row
+    val e = intercept[Exception] {
+      CommitLogIngest.updateWhere(s, table, col("id") >= 0L,
+        Map("p" -> when(col("day") === 2L,
+          raise_error(lit("injected group failure")))
+          .otherwise(concat(col("p"), lit("!")))))
+    }
+    assert(chain(e).exists(_.contains("injected group failure")),
+      s"wrong failure: ${e.getMessage}")
+    assert(CommitLogIngest.latestVersion(table) == pre)
+    // a sibling job left running would keep landing files after the abort
+    Thread.sleep(1000)
+    val dataDir = java.nio.file.Paths.get(table, "data")
+    val staged = {
+      val st = java.nio.file.Files.walk(dataDir)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(dataDir.relativize(_).toString)
+          .filter(_.startsWith("rw-")).toList
+      } finally st.close()
+    }
+    assert(staged.isEmpty, s"aborted rewrite left files: $staged")
+    assert(CommitLogIngest.snapshot(s, table).filter(col("p").endsWith("!"))
+      .count() == 0L)
+  }
+
   private def chain(e: Throwable): Seq[String] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).toSeq

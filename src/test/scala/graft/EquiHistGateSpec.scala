@@ -22,6 +22,12 @@ class EquiHistGateSpec extends SparkSuite {
     finally spark.conf.unset(gateConf)
   }
 
+  test("a non-numeric gate fails naming the key and the value") {
+    val e = intercept[IllegalArgumentException](run(sf0001, "8MiB"))
+    assert(e.getMessage.contains(gateConf) && e.getMessage.contains("8MiB"),
+      e.getMessage)
+  }
+
   for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
     test(s"edge shape equals dPR shape at $sf") {
       val dpr = run(sf, Long.MaxValue.toString)
