@@ -67,7 +67,7 @@ object CommitBench {
       (0 until n).map(i => (w.toLong * n + i, s"payload-$w-$i"))
 
     // triggerSec=0 so the timed window measures the commit path, not a
-    // trigger cadence (the RollupBench lesson).
+    // trigger cadence.
     def run(table: String, ckpt: String, ws: Int, n: Int)
         : (Double, Double) = {
       val stream = MemoryStream[(Long, String)]

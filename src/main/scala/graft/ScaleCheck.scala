@@ -46,11 +46,26 @@ object ScaleCheck {
     graft.operators.Similarity.clearKmeansCache()
     graft.operators.Similarity.clearPqCache()
     graft.operators.TextAnalysis.clearBpeCache()
-    graft.sources.ZOrderLayout.clearCache()
-    graft.sources.Compaction.clearCache()
+    graft.sources.OptimizeCommit.clearCache()
+    graft.sources.PartitionedCommit.clearCache()
     graft.sources.IncrementalRollup.clearCache()
-    graft.sources.SchemaEvolution.clearCache()
+    graft.sources.CommitSchemaEvolution.clearCache()
     graft.sources.CommitLogReads.clearCache()
+  }
+
+  private def timed(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Bench discipline: min of two passes, caches dropped after each —
+    * single-pass numbers on a shared box swing several-x under
+    * scheduler/GC noise (a first run recorded kmeans 3.1 s, a second
+    * 94 s at the SAME sf0.1), and the clear makes both passes time the
+    * real build, not a cache read. */
+  private def minOf2(f: => Unit): Double = {
+    val a = timed(f); clearModelCaches()
+    val b = timed(f); clearModelCaches()
+    math.min(a, b)
   }
 
   def main(args: Array[String]): Unit = {
@@ -286,17 +301,9 @@ object ScaleCheck {
     fams.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d)); clearModelCaches()
-      val b = timed(f(spark, d)); clearModelCaches()
-      math.min(a, b)
-    }
     val rows = fams.map { case (name, f) =>
-      val t10 = minOf2(f, Sf10)
-      val t100 = minOf2(f, Sf100)
+      val t10 = minOf2(f(spark, Sf10))
+      val t100 = minOf2(f(spark, Sf100))
       val ratio = t100 / t10
       println(f"""{"family":"$name","sf10_sec":$t10%.2f,""" +
         f""""sf100_sec":$t100%.2f,"ratio":$ratio%.2f}""")
@@ -439,12 +446,12 @@ object ScaleCheck {
       { SparkEntry.queries("d_minhash_recall")(s, d).count(); () }),
     "bpe_merges" -> ((s, d) =>
       { SparkEntry.queries("t_bpe_merges")(s, d).count(); () }),
-    // round-9: storage-rewrite family — the z-order clustering rewrite
-    // (full-table z-compute + range shuffle + sort + parquet write, twice:
-    // the layout and its ts-sorted contrast twin). Cache is cleared between
-    // passes so both time the real rewrite, not a cache hit.
+    // storage-rewrite family — the commit-log events table behind
+    // src_zorder: fragmented append, OPTIMIZE, then the z-order rewrite
+    // (z-compute + range shuffle + sort + write, each with its stats
+    // pass). Cache is cleared between passes so both time the real build.
     "zorder_rewrite" -> ((s, d) =>
-      { graft.sources.ZOrderLayout.ensure(s, d); () }),
+      { graft.sources.OptimizeCommit.ensureEvents(s, d); () }),
     // round-12: the one family the r11 verdict flagged quadratic (21× time
     // for 10× data at constant LshBits=8) — now corpus-adaptive bits hold
     // the expected bucket at ~64 rows (Similarity.TargetBucketRows), pair volume linear in n
@@ -462,27 +469,9 @@ object ScaleCheck {
     families.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Bench discipline: min of two passes per (family, SF) — single-pass
-    // numbers on this box swing several-x under scheduler/GC noise (a
-    // first measurement run recorded kmeans 3.1 s, a second 94 s at the
-    // SAME sf0.1). The build-once caches (pair list, k-means model) are
-    // DROPPED between passes so both passes time the real build, not a
-    // cache read.
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d))
-      clearModelCaches()
-      val b = timed(f(spark, d))
-      clearModelCaches()
-      math.min(a, b)
-    }
     val rows = families.map { case (name, f) =>
-      val t01 = minOf2(f, Sf01)
-      val t1 = minOf2(f, Sf1)
+      val t01 = minOf2(f(spark, Sf01))
+      val t1 = minOf2(f(spark, Sf1))
       val exp = math.log10(t1 / t01)
       println(f"""{"family":"$name","sf0.1_sec":$t01%.2f,"sf1_sec":$t1%.2f,"exponent":$exp%.2f}""")
       (name, t01, t1, exp)
@@ -498,9 +487,6 @@ object ScaleCheck {
   def measureFamily(spark: SparkSession, name: String, dir: String): Unit = {
     val f = families.toMap.apply(name)
     try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
-    def timed(g: => Unit): Double = {
-      val t0 = System.nanoTime(); g; (System.nanoTime() - t0) / 1e9
-    }
     val a = timed(f(spark, dir)); clearModelCaches()
     val b = timed(f(spark, dir)); clearModelCaches()
     println(f"""{"family":"$name","dir":"$dir","pass1_sec":$a%.2f,"pass2_sec":$b%.2f,"min_sec":${math.min(a, b)}%.2f}""")
@@ -510,9 +496,7 @@ object ScaleCheck {
       : Unit = {
     val f = families.toMap.apply(name)
     try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
-    val t0 = System.nanoTime()
-    f(spark, dir)
-    val a = (System.nanoTime() - t0) / 1e9
+    val a = timed(f(spark, dir))
     clearModelCaches()
     println(f"""{"family":"$name","dir":"$dir","pass1_sec":$a%.2f,"passes":1}""")
   }
@@ -530,22 +514,12 @@ object ScaleCheck {
     families.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d)); clearModelCaches()
-      val b = timed(f(spark, d)); clearModelCaches()
-      math.min(a, b)
-    }
     val points = Seq(0.1 -> Sf01, 1.0 -> Sf1, 10.0 -> Sf10)
     val logSf = points.map(p => math.log10(p._1))
     val meanX = logSf.sum / logSf.size
     val varX = logSf.map(x => (x - meanX) * (x - meanX)).sum
     val rows = families.map { case (name, f) =>
-      val ts = points.map { case (_, d) => minOf2(f, d) }
+      val ts = points.map { case (_, d) => minOf2(f(spark, d)) }
       val logT = ts.map(math.log10)
       val meanY = logT.sum / logT.size
       val slope = logSf.zip(logT)

@@ -142,9 +142,7 @@ object ScanBench {
     // join, discard) — same plan shape otherwise, same result
     val evTable = graft.sources.PartitionedCommit.ensure(spark, sfDir)
     val evRoot = java.nio.file.Paths.get(evTable).getParent.toString
-    val evD0 = graft.model.Tables.events(spark, sfDir)
-      .agg(min(expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")))
-      .head().getLong(0)
+    val evD0 = graft.sources.PartitionedCommit.firstDay(spark, sfDir)
     def dppJoin(): Long = {
       val dim = spark.read.parquet(evRoot + "/dim")
         .filter(col("nm").isin(s"d${evD0 + 1}", s"d${evD0 + 3}"))

@@ -30,11 +30,7 @@ object SparkEntry {
       graft.sources.OrcRoundTrip.queries ++
       graft.sources.IvfLayout.queries ++
       graft.sources.ClusterLayout.queries ++
-      graft.sources.EventsLayout.queries ++
-      graft.sources.Compaction.queries ++
-      graft.sources.ZOrderLayout.queries ++
       graft.sources.IncrementalRollup.queries ++
-      graft.sources.SchemaEvolution.queries ++
       graft.sources.CommitLogReads.queries ++
       graft.sources.OptimizeCommit.queries ++
       graft.sources.CommitSchemaEvolution.queries ++

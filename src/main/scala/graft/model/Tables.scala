@@ -15,6 +15,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Nanoseconds per day: canonical `ts` is nanos-since-epoch, so
+    * `ts div NanosPerDay` is the epoch-day — the same integer DuckDB
+    * reaches via `epoch_ms(ts) // 86400000` (floor-of-floor composes for
+    * the positive-epoch corpus). */
+  val NanosPerDay = 86400000000000L
+
+  /** `events` with the epoch-day of its canonical `ts` as `day` (a
+    * layout-shaped source already carries one; it is re-derived). */
+  def withDay(events: DataFrame): DataFrame =
+    events.drop("day").withColumn("day", expr(s"ts div $NanosPerDay"))
+
   /** Session-wide parquet confs the events loader DEPENDS on but no longer
     * sets (round-9 fix: a loader that flips session-global conf as a side
     * effect silently changes how every later parquet read in the session

@@ -30,11 +30,7 @@ import graft.streaming.CommitLogIngest
   * sketch refresh under CoW DML, and the streaming read's prune. */
 object BloomPointLookup {
 
-  private def dropParent(table: String): Unit =
-    LayoutDirs.deleteQuiet(
-      java.nio.file.Paths.get(table).getParent.toString)
-
-  private val cache = new LayoutCache[String](dropParent)
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private[graft] def ensure(spark: SparkSession, sfDir: String): String =
     cache.get(sfDir, "documents.parquet") {

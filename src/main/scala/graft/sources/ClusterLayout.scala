@@ -24,11 +24,7 @@ import graft.streaming.CommitLogIngest
   * probe-pruned file sets, quantizer stability, re-run no-op. */
 object ClusterLayout {
 
-  private def dropParent(table: String): Unit =
-    LayoutDirs.deleteQuiet(
-      java.nio.file.Paths.get(table).getParent.toString)
-
-  private val cache = new LayoutCache[String](dropParent)
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   val K = 8
 

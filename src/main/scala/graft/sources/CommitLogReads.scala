@@ -52,15 +52,14 @@ object CommitLogReads {
     math.max(floor, (bytes / TargetFileBytes).toInt)
   }
 
-  private def dropParent(table: String): Unit =
-    LayoutDirs.deleteQuiet(Paths.get(table).getParent.toString)
 
   /** The documents table and its doc_id bounds: the delete cutoff K and
     * the top of the range read. */
   private[graft] final case class Docs(table: String, cut: Long, hi: Long)
 
-  private val docsCache = new LayoutCache[Docs](d => dropParent(d.table))
-  private val eventsCache = new LayoutCache[String](dropParent)
+  private val docsCache =
+    new LayoutCache[Docs](d => LayoutDirs.deleteParent(d.table))
+  private val eventsCache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private[graft] def documents(spark: SparkSession, sfDir: String): Docs =
     docsCache.get(sfDir, "documents.parquet") {
@@ -160,7 +159,7 @@ object CommitLogReads {
     CommitLogIngest.pointRead(spark, table, "user_id", u0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-        countDistinct(expr(s"ts div ${EventsLayout.NanosPerDay}"))
+        countDistinct(expr(s"ts div ${Tables.NanosPerDay}"))
           .as("n_days"),
         round(sum(col("value")), 4).as("sum_value"))
   }

@@ -384,6 +384,8 @@ class CommitLogScanBuilder(tableDir: String, schema: StructType,
     case LessThanOrEqual(c, v) if partCols.contains(c) =>
       intOf(v).map(n => PartRange(c, Long.MinValue, n))
     case IsNull(c) if partCols.contains(c) => Some(PartIsNull(c))
+    case In(c, vs) if partCols.contains(c) && vs.nonEmpty =>
+      CommitLogPlanning.partIn(c, vs)
     // NO IsNotNull pruner: NULL's dir value ("null") can legitimately be
     // shared by a real "null" string, whose rows DO match IsNotNull —
     // pruning the dir would drop them (see PartitionPaths.NullDir)
@@ -944,13 +946,6 @@ class CommitLogScan(tableDir: String, schema: StructType,
     * contributes nothing — Spark re-applies the row-level join anyway,
     * so runtime pruning is a speedup, never a semantic fork. */
   override def filter(filters: Array[Filter]): Unit = {
-    def renderPart(v: Any): Option[String] =
-      CommitLogPlanning.intOf(v).map(_.toString).orElse(v match {
-        case s: String => Some(PartitionPaths.escape(s))
-        case u: UTF8String => Some(PartitionPaths.escape(u.toString))
-        case b: java.lang.Boolean => Some(b.toString)
-        case _ => None
-      })
     val bounds = scala.collection.mutable.Map.empty[String, (Long, Long)]
     val strs = scala.collection.mutable.Map
       .empty[String, (Option[String], Option[String])]
@@ -962,7 +957,7 @@ class CommitLogScan(tableDir: String, schema: StructType,
           bounds(c) = (n, n); eqs(c) = Seq(n)
         }
         CommitLogPlanning.strOf(v).foreach(s => strs(c) = (Some(s), Some(s)))
-        if (partCols.contains(c)) renderPart(v).foreach(r =>
+        if (partCols.contains(c)) CommitLogPlanning.partValue(v).foreach(r =>
           parts += PartIn(c, Set(r)))
       case In(c, vs) if vs.nonEmpty =>
         val ns = vs.toSeq.flatMap(CommitLogPlanning.intOf)
@@ -973,13 +968,7 @@ class CommitLogScan(tableDir: String, schema: StructType,
         val ss = vs.toSeq.flatMap(CommitLogPlanning.strOf)
         if (ss.length == vs.length && ss.nonEmpty)
           strs(c) = (Some(ss.min), Some(ss.max))
-        if (partCols.contains(c)) {
-          val rendered = vs.toSeq.filter(_ != null).flatMap(renderPart)
-          // translate only when EVERY non-null value rendered — a
-          // partial set would wrongly prune the unrendered values' dirs
-          if (rendered.length == vs.count(_ != null))
-            parts += PartIn(c, rendered.toSet)
-        }
+        if (partCols.contains(c)) parts ++= CommitLogPlanning.partIn(c, vs)
       case _ => () // other shapes carry no file-level evidence
     }
     rtBounds = bounds.toMap
@@ -1374,6 +1363,26 @@ private[sources] object CommitLogPlanning {
     case n: java.lang.Short => Some(n.longValue)
     case n: java.lang.Byte => Some(n.longValue)
     case _ => None
+  }
+
+  /** A filter value rendered the way the writer names its partition dir
+    * (None when it does not render: fractional against an integral
+    * column, an unexpected type). */
+  def partValue(v: Any): Option[String] =
+    intOf(v).map(_.toString).orElse(v match {
+      case s: String => Some(PartitionPaths.escape(s))
+      case u: UTF8String => Some(PartitionPaths.escape(u.toString))
+      case b: java.lang.Boolean => Some(b.toString)
+      case _ => None
+    })
+
+  /** `c IN (vs)` on a partition column as a dir-membership constraint —
+    * only when EVERY non-null value renders: a partial set would wrongly
+    * prune the unrendered values' dirs. */
+  def partIn(c: String, vs: Array[Any]): Option[PartConstraint] = {
+    val rendered = vs.toSeq.filter(_ != null).flatMap(partValue)
+    if (rendered.length == vs.count(_ != null)) Some(PartIn(c, rendered.toSet))
+    else None
   }
 
   /** Filter value as a String (ASCII enforcement happens at prune time

@@ -175,28 +175,31 @@ class CommitLogBatchWrite(tableDir: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = CommitLogWriteCommit.filesOf(messages)
-    // the job succeeded — flip the requested switches alongside the
-    // commit (never at planning: an aborted write must leave no trace)
-    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
-    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
-    // declare the layout with the commit that first uses it (a mismatch
-    // with an already-declared layout refuses before any log change)
-    if (partitionCols.nonEmpty && files.nonEmpty)
-      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
-    if (overwrite) {
+    // refusals first: a refused write must leave no trace, so every
+    // check runs before the switches flip or the layout is recorded
+    if (overwrite)
       // truncate-to-empty would leave a version with no live files, which
       // the append-only read contract treats as retention loss — refuse
       // loudly rather than brick the table
       require(files.nonEmpty,
         "graft-commitlog: overwrite with an empty dataset is not " +
           "supported (the table would have no live files)")
+    else if (files.nonEmpty)
+      // an append RECORDS its schema as the table's latest — refuse one
+      // that would narrow it (hide established columns) or change a type
+      CommitLogIngest.requireAppendCompatible(tableDir, schema)
+    // declare the layout with the commit that first uses it (a mismatch
+    // with an already-declared layout refuses here, before the switches),
+    // then flip the requested switches — at commit, never at planning
+    if (partitionCols.nonEmpty && files.nonEmpty)
+      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
+    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
+    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
+    if (overwrite) {
       CommitLogIngest.commitOverwrite(CommitLogPlanning.session, tableDir,
         adds = files, statsCol = statsCol, statsDir = Some(dataDir),
         schemaOf = Some(schema))
     } else if (files.nonEmpty) {
-      // an append RECORDS its schema as the table's latest — refuse one
-      // that would narrow it (hide established columns) or change a type
-      CommitLogIngest.requireAppendCompatible(tableDir, schema)
       CommitLogIngest.commitActions(CommitLogPlanning.session, tableDir,
         adds = files, removes = Seq.empty,
         statsCol = statsCol, statsDir = Some(dataDir),
@@ -233,12 +236,12 @@ class CommitLogStreamingWrite(tableDir: String, schema: StructType,
       : Unit = {
     val spark = CommitLogPlanning.session
     val files = CommitLogWriteCommit.filesOf(messages)
-    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
-    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
-    if (partitionCols.nonEmpty && files.nonEmpty)
-      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
     if (files.nonEmpty)
       CommitLogIngest.requireAppendCompatible(tableDir, schema)
+    if (partitionCols.nonEmpty && files.nonEmpty)
+      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
+    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
+    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
     // the txn replay guard lives INSIDE the claim loop (commitEpoch) so a
     // zombie instance of this query racing us cannot double-commit the
     // epoch — whichever instance wins the version claim, the other sees

@@ -258,11 +258,8 @@ object DedupIndex {
     * covering an append, a delete, and an update commit. */
   private val UpdSuffix = " zzqq zzqq zzqq"
 
-  private def dropParent(t: (String, String)): Unit =
-    LayoutDirs.deleteQuiet(
-      java.nio.file.Paths.get(t._1).getParent.toString)
-
-  private val cache = new LayoutCache[(String, String)](dropParent)
+  private val cache =
+    new LayoutCache[(String, String)](t => LayoutDirs.deleteParent(t._1))
 
   private[graft] def ensure(spark: SparkSession, sfDir: String)
       : (String, String) =

@@ -35,12 +35,8 @@ object DmlCommit {
 
   val Appends = 3
 
-  private def dropParent(table: String): Unit =
-    LayoutDirs.deleteQuiet(
-      java.nio.file.Paths.get(table).getParent.toString)
-
   private val cache =
-    new LayoutCache[(String, Long)](t => dropParent(t._1))
+    new LayoutCache[(String, Long)](t => LayoutDirs.deleteParent(t._1))
 
   private[graft] def ensure(spark: SparkSession, sfDir: String)
       : (String, Long) =
@@ -107,7 +103,7 @@ object DmlCommit {
   // -- MERGE face: its own table (the delete/update table must stay
   //    pinned at version 4 for the two oracles above) -----------------------
 
-  private val mergedCache = new LayoutCache[String](dropParent)
+  private val mergedCache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private[graft] def ensureMerged(spark: SparkSession, sfDir: String)
       : String =
@@ -219,7 +215,7 @@ object DmlCommit {
 
   // -- deletion-vector face: its own table (merge-on-read DELETE) ----------
 
-  private val dvCache = new LayoutCache[String](dropParent)
+  private val dvCache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   /** Documents-backed table with deletion vectors ON: two appends, then
     * TWO composed merge-on-read deletes — `doc_id % 7 = 3` (version 2)
@@ -267,7 +263,7 @@ object DmlCommit {
 
   // -- deletion-vector UPDATE face (round-12 verdict task 3) ----------------
 
-  private val dvUpdCache = new LayoutCache[String](dropParent)
+  private val dvUpdCache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   /** Documents-backed DV table put through the SAME logical DML sequence
     * as the copy-on-write `src_update_commit` table — delete
@@ -335,7 +331,7 @@ object DmlCommit {
 
   // -- FULL-shape merge face (round-12 verdict task 1): its own table ------
 
-  private val fullMergeCache = new LayoutCache[String](dropParent)
+  private val fullMergeCache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   /** Documents-backed table put through ONE full clause-list MERGE
     * (`CommitLogIngest.merge`) exercising every clause kind the Delta

@@ -32,9 +32,7 @@ object DsvWrite {
 
   val Appends = 3
 
-  private val cache = new LayoutCache[String](table =>
-    LayoutDirs.deleteQuiet(
-      java.nio.file.Paths.get(table).getParent.toString))
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private[graft] def ensure(spark: SparkSession, sfDir: String): String =
     cache.get(sfDir, "documents.parquet") {

@@ -1,158 +1,134 @@
 package graft.sources
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Q
 import graft.Checkpoints.LineageOps
 import graft.model.Tables
+import graft.streaming.CommitLogIngest
 
 /** Incrementally-maintained rollup — materialized-view maintenance as a
-  * storage operator. A 100-TB pipeline cannot recompute its daily
-  * (day, event_type) rollup from the full fact table every time a new
-  * batch lands; the maintenance move is: aggregate ONLY the delta, then
-  * merge it into the materialized rollup by rewriting ONLY the day
-  * partitions the delta touches (dynamic partition overwrite — the
-  * INSERT OVERWRITE ... PARTITION shape). Cost per batch is
-  * O(delta + touched-partition partials), independent of the fact
-  * table's total size — the property that keeps a rollup maintainable
-  * when the base table is 100 TB and the delta is one day.
+  * storage operator: aggregate ONLY the delta, then merge it into the
+  * materialized (day, event_type) rollup by replacing ONLY the day
+  * partitions it touches — O(delta + touched partials) per batch,
+  * independent of the fact table's size.
   *
-  * The maintained state is sum/count PARTIALS, so merge = re-aggregate
-  * (counts add exactly; double sums add one more partial level — the
-  * same fold-order freedom any distributed sum already has). AVG-style
-  * ratios must be derived at READ time from the partials, never stored.
+  * The rollup is a commit-log table partitioned by `day` holding
+  * sum/count PARTIALS, so merge = re-aggregate; ratios are derived at
+  * READ time. One merge is one commit: it reads the touched days'
+  * partials through the log (a literal `day IN (...)` filter prunes to
+  * their dirs), folds in the delta, and commits add(new day files) +
+  * remove(the touched days' live files) at exactly the version after the
+  * one it read (on a conflict it re-reads). A streamed merge also records
+  * ("txn", "rollup:batchId") in that version, so a replayed batch is
+  * recognised from the log, with no crash window between the data and
+  * the replay guard.
   *
-  * Demonstrated here by construction: the base build aggregates every
-  * day EXCEPT the corpus' last; the last day is then merged as the
-  * delta batch. `src_incr_rollup` is the correctness face — the final
-  * rollup read back, value-equal to the DuckDB oracle's full recompute
-  * over the ORIGINAL events, proving base+merge lost nothing.
-  * `IncrementalRollupSpec` pins the two properties the oracle cannot
-  * see: the merge's read of the existing rollup partition-prunes to the
-  * touched days, and the untouched day directories come through the
-  * merge byte-identical (only the delta's partitions were rewritten).
-  * Build is once per session per source fingerprint with stale-entry
-  * eviction (the EventsLayout cache discipline). */
+  * `src_incr_rollup` is the correctness face: the base build commits
+  * every day EXCEPT the corpus' last, the last day merges as the delta,
+  * and the rollup read back is value-equal to the DuckDB oracle's full
+  * recompute over the ORIGINAL events. `IncrementalRollupSpec` pins the
+  * O(delta) mechanics and `RollupMaintenanceSpec` the streaming loop. */
 object IncrementalRollup {
 
-  // sfDir -> (events source fingerprint, rollup dir)
-  private val created = TrieMap.empty[String, (String, String)]
+  /** The txn namespace of the streaming loop's commits. */
+  private val Qid = "rollup"
 
-  private def eventsFp(sfDir: String): String =
-    SourceFingerprint.key(sfDir, "events.parquet")
-
-  private def deleteQuiet(dir: String): Unit =
-    LayoutDirs.deleteQuiet(dir)
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   /** Per-(day, event_type) partials of an event slice — the one shape
     * both the base build and every delta batch aggregate to. */
   private def partials(events: DataFrame): DataFrame =
-    events
-      // delta batches re-read from the day layout already carry `day`;
-      // drop-then-derive keeps the build warning-clean (no-op otherwise)
-      .drop("day")
-      .withColumn("day", expr(s"ts div ${EventsLayout.NanosPerDay}"))
+    Tables.withDay(events)
       .groupBy(col("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
 
-  /** Full (non-incremental) rollup build of `events` into `dir`. */
-  private[graft] def buildBase(events: DataFrame, dir: String): Unit =
-    partials(events)
-      .write.mode("overwrite").partitionBy("day").parquet(dir)
+  /** Full (non-incremental) rollup build of `events` as one partitioned
+    * append; an empty slice commits nothing. */
+  private[graft] def buildBase(events: DataFrame, table: String): Unit =
+    partials(events).write.format("graft-commitlog")
+      .option("path", table).option("partitionCols", "day")
+      .mode("append").save()
 
-  /** Merge one delta batch of raw events into the rollup at `dir`,
-    * rewriting only the day partitions the delta touches. */
-  private[graft] def mergeDelta(
-      spark: SparkSession, dir: String, delta: DataFrame): Unit = {
+  /** Merge one delta batch of raw events into the rollup, replacing only
+    * the day partitions it touches. With `batchId`, the commit carries
+    * the loop's txn marker and a batch the log already records is a
+    * no-op. Returns the committed version, or -1 when nothing committed
+    * (an empty delta or a replayed batch). */
+  private[graft] def mergeDelta(spark: SparkSession, table: String,
+      delta: DataFrame, batchId: Option[Long] = None): Long = {
+    val txn = batchId.map(b => s"$Qid:$b")
     val deltaAgg = partials(delta).truncateLineage()
     // the touched-day set is driver-side by design: a maintenance batch
     // spans hours-to-days, so this is a bounded handful of literals —
-    // and literals are what let the existing-rollup read below prune at
-    // PLAN time (IncrementalRollupSpec gates it)
+    // and literals are what let the read below prune at PLAN time
     val touched = deltaAgg.select(col("day")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    if (touched.nonEmpty) {
-      // bootstrap: the very first batch of a maintenance STREAM arrives
-      // before any base build — there is no layout to read partials from.
-      // "Has a layout" means the dir holds at least one parquet DATA file:
-      // a dir containing only _SUCCESS/_last_batch (an all-one-day base
-      // build's empty half, or an empty first micro-batch's marker) would
-      // crash the read with UNABLE_TO_INFER_SCHEMA if mistaken for data.
-      val hasLayout = LayoutDirs.hasParquetData(dir)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    if (touched.isEmpty) return -1L
+    while (true) {
+      val latest = CommitLogIngest.latestVersion(table)
+      if (batchId.exists(b =>
+          CommitLogIngest.lastTxnEpoch(spark, table, Qid) >= b))
+        return -1L
+      // bootstrap: a maintenance stream's first batch may arrive before
+      // any base build (or after an all-one-day base that committed
+      // nothing) — there are no partials to fold in yet
       val existing =
-        if (!hasLayout) deltaAgg.limit(0)
-        else touchedPartials(spark, dir, touched)
-          // lineage cut: the merged frame is about to OVERWRITE partitions
-          // of the very path it reads (the read-modify-write hazard Spark
-          // rejects as "cannot overwrite a path being read from").
-          // Bounded: touched days × event types rows.
-          .truncateLineage()
-      existing.unionByName(deltaAgg)
+        if (latest < 0) deltaAgg.limit(0)
+        else spark.read.format("graft-commitlog").option("path", table)
+          .option("versionAsOf", latest.toString).load()
+          .filter(col("day").isin(touched: _*))
+          .select("day", "event_type", "n_events", "sum_value")
+      val segs = touched.map(d => s"day=$d").toSet
+      val removes =
+        if (latest < 0) Seq.empty[String]
+        else CommitLogIngest.liveFiles(spark, table, latest)
+          .filter(p => segs.contains(PartitionPaths.segmentsOf(p)))
+      val merged = existing.unionByName(deltaAgg)
         .groupBy(col("day"), col("event_type"))
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("sum_value")).as("sum_value"))
-        .write.mode("overwrite")
-        // dynamic: replace ONLY the day= dirs present in this frame —
-        // passed as a WRITE option, so no session conf is mutated
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(dir)
+      val out = s"$table/data/m-" +
+        java.util.UUID.randomUUID().toString.take(12)
+      CommitLogIngest.writePartitionLocal(merged, Seq("day"), out, table)
+      CommitLogIngest.recordPartitionCols(table, Seq("day"))
+      if (CommitLogIngest.tryCommitAt(spark, table, latest,
+          LayoutDirs.dataFiles(out), removes, statsCol = None,
+          statsDir = None,
+          // only a bootstrap declares the schema: later merges keep it
+          schemaOf = Some(merged.schema).filter(_ => latest < 0),
+          txn = txn, op = CommitLogIngest.overwriteOp(removes)))
+        return latest + 1
+      LayoutDirs.deleteQuiet(out) // lost the claim: re-read and redo
     }
+    -1L // unreachable
   }
 
-  /** The existing rollup's partials for `days` only — a literal
-    * partition-pruned read (the spec asserts ≤ days.size dirs touched). */
-  private[graft] def touchedPartials(
-      spark: SparkSession, dir: String, days: Seq[Long]): DataFrame =
-    spark.read.parquet(dir)
-      // int literals: the inferred partition column is IntegerType, and a
-      // cast planted on the ATTRIBUTE side would defeat partition pruning
-      .filter(col("day").isin(days.map(_.toInt): _*))
-      .select(col("day").cast("long").as("day"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
   /** Build base (all days but the last) + merge the last day as the
-    * delta, once per source fingerprint; returns the rollup dir. */
+    * delta, once per source fingerprint; returns the rollup table. */
   private[graft] def ensure(spark: SparkSession, sfDir: String): String =
-    created.synchronized {
-      val fp = eventsFp(sfDir)
-      created.get(sfDir) match {
-        case Some((`fp`, dir)) => dir
-        case stale =>
-          stale.foreach { case (_, dir) =>
-            deleteQuiet(dir)
-            created.remove(sfDir)
-          }
-          val root = Files.createTempDirectory("graft-incr-rollup")
-          Runtime.getRuntime.addShutdownHook(new Thread(() => {
-            deleteQuiet(root.toString)
-          }))
-          val dir = root.toString + "/rollup_by_day"
-          val events = Tables.events(spark, sfDir)
-          val dmax = events
-            .agg(max(expr(s"ts div ${EventsLayout.NanosPerDay}")))
-            .head().getLong(0)
-          val dayCol = expr(s"ts div ${EventsLayout.NanosPerDay}")
-          buildBase(events.filter(dayCol < dmax), dir)
-          mergeDelta(spark, dir, events.filter(dayCol === dmax))
-          created.put(sfDir, (fp, dir))
-          dir
-      }
+    cache.get(sfDir, "events.parquet") {
+      val table =
+        Files.createTempDirectory("graft-incr-rollup").toString + "/table"
+      val events = Tables.events(spark, sfDir)
+      val dayCol = expr(s"ts div ${Tables.NanosPerDay}")
+      val dmax = events.agg(max(dayCol)).head().getLong(0)
+      buildBase(events.filter(dayCol < dmax), table)
+      mergeDelta(spark, table, events.filter(dayCol === dmax))
+      table
     }
 
   /** Read the maintained rollup back in full — every (day, event_type)
     * partial, ratios derived from partials at read time. Value-equal to
     * a full recompute iff base+merge lost nothing. */
-  def rollupRead(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensure(spark, sfDir)
-    spark.read.parquet(dir)
-      .select(col("day").cast("long").as("day"), col("event_type"),
-        col("n_events"),
+  def rollupRead(spark: SparkSession, sfDir: String): DataFrame =
+    CommitLogIngest.snapshot(spark, ensure(spark, sfDir))
+      .select(col("day"), col("event_type"), col("n_events"),
         round(col("sum_value"), 4).as("sum_value"),
         round(col("sum_value") / col("n_events"), 6).as("avg_value"))
-  }
 
   val rollupReadSql: String =
     """SELECT epoch_ms(ts) // 86400000 AS day, event_type,
@@ -161,12 +137,27 @@ object IncrementalRollup {
       |  ROUND(SUM(value) / COUNT(*), 6) AS avg_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Test hook: drop every cached rollup (mirrors the other layout
-    * caches' clear contract). */
-  private[graft] def clearCache(): Unit = created.synchronized {
-    created.values.foreach { case (_, dir) => deleteQuiet(dir) }
-    created.clear()
+  /** Keep the rollup live against a STREAM of raw events (canonical
+    * nanos-LONG `ts`, `event_type`, `value` — the `Tables.events` shape):
+    * each micro-batch is one [[mergeDelta]] commit, O(batch) work per
+    * trigger. `foreachBatch` is at-least-once — after a failure the SAME
+    * batchId re-runs — and the txn marker riding each merge's version
+    * claim makes that replay a no-op. `triggerSec <= 0` drops the
+    * processing-time trigger (micro-batches fire as data lands). */
+  def start(events: DataFrame, table: String, checkpointDir: String,
+      triggerSec: Int = 1): StreamingQuery = {
+    val w = events.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        mergeDelta(batch.sparkSession, table, batch, Some(batchId)); ()
+      }
+    (if (triggerSec > 0)
+       w.trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
+     else w).start()
   }
+
+  /** Test hook: drop cached layouts (the shared clear contract). */
+  private[graft] def clearCache(): Unit = cache.clear()
 
   def queries: Map[String, Q] = Map(
     "src_incr_rollup" -> Q(rollupReadSql)(rollupRead))

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,37 +22,27 @@ import graft.operators.Similarity
   * parquet via the shared kmeans training chain, so rows+hash equality
   * proves the partitioned round-trip preserved membership and content.
   * IvfLayoutSpec pins the pruning itself (PartitionFilters on the scan,
-  * ≤ 2 of the K partition dirs read). Write is once per session per
-  * source fingerprint (the OrcRoundTrip cache discipline). */
+  * ≤ 2 of the K partition dirs read). Write is once per source
+  * fingerprint through [[LayoutCache]]. */
 object IvfLayout {
-
-  private val created = TrieMap.empty[String, String]
 
   // Coupling note: the layout is embeddings JOIN the trained kmeans
   // assignment, so fingerprint-keying THIS cache is only regeneration-
   // safe because Similarity's kmCache re-keys on the SAME fingerprint —
   // a regenerated parquet misses both caches together and the rewrite
   // joins new vectors to a freshly trained model, never to stale cells.
-  private def cacheKey(sfDir: String): String =
-    SourceFingerprint.key(sfDir, "embeddings.parquet")
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private[graft] def ensure(spark: SparkSession, sfDir: String): String =
-    created.getOrElseUpdate(cacheKey(sfDir), {
-      val root = Files.createTempDirectory("graft-ivf")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files => F}
-        import java.util.Comparator
-        try F.walk(root).sorted(Comparator.reverseOrder())
-          .forEach(p => F.deleteIfExists(p))
-        catch { case _: Exception => () }
-      }))
-      val dir = root.toString + "/embeddings_ivf"
+    cache.get(sfDir, "embeddings.parquet") {
+      val dir =
+        Files.createTempDirectory("graft-ivf").toString + "/embeddings_ivf"
       Tables.embeddings(spark, sfDir)
         .join(Similarity.kmeansAssignment(spark, sfDir)
           .select(col("vec_id"), col("cell")), Seq("vec_id"))
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
       dir
-    })
+    }
 
   def ivfLayoutRead(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(ensure(spark, sfDir))

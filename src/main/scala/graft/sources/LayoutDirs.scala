@@ -6,19 +6,26 @@ import java.util.Comparator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{concat, lit, raise_error, regexp_replace, url_decode, when}
 
-/** Shared filesystem helpers for the fingerprinted-layout caches
-  * (EventsLayout, BucketedTables, ZOrderLayout, Compaction,
-  * IncrementalRollup, SchemaEvolution, CommitLogIngest) —
-  * one copy of the semantics every layout needs instead of eight. */
+/** Shared filesystem helpers for the fingerprinted layouts (every
+  * [[LayoutCache]] user, BucketedTables, CommitLogIngest) — one copy of
+  * the semantics every layout needs. */
 object LayoutDirs {
 
   /** Best-effort recursive delete (stale-layout eviction and shutdown
-    * cleanup — failure to delete must never fail the query path). */
+    * cleanup — failure to delete must never fail the query path). A walk
+    * racing a concurrent cleaner throws before deleting anything, so a
+    * failed pass gets a second one. */
   def deleteQuiet(dir: String): Unit =
-    try {
-      Files.walk(Paths.get(dir)).sorted(Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    } catch { case _: Exception => () }
+    for (_ <- 0 until 2 if Files.exists(Paths.get(dir)))
+      try {
+        Files.walk(Paths.get(dir)).sorted(Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p))
+      } catch { case _: Exception => () }
+
+  /** [[deleteQuiet]] of `path`'s parent: the temp root a cached table or
+    * layout dir was created under (the [[LayoutCache]] cleanup). */
+  def deleteParent(path: String): Unit =
+    deleteQuiet(Paths.get(path).getParent.toString)
 
   /** A COMMITTED parquet data file under `root`: every path component
     * below the root must be non-bookkeeping (no `_`/`.` prefix on any
@@ -104,9 +111,10 @@ object LayoutDirs {
 }
 
 /** sfDir-keyed, source-fingerprinted layout cache — ONE copy of the
-  * ensure/evict/shutdown/clear scaffolding the registry faces
-  * (OptimizeCommit, DsvWrite, DmlCommit, CommitSchemaEvolution, …) each
-  * used to hand-roll (~45 lines apiece): a cached layout is valid while
+  * ensure/evict/shutdown/clear scaffolding every registry face that
+  * builds a table or layout uses (the commit-log faces, IvfLayout,
+  * OrcRoundTrip; BucketedTables alone keys on two files): a cached
+  * layout is valid while
   * the source parquet's fingerprint is unchanged, a stale one is evicted
   * and rebuilt, and a SINGLE JVM shutdown hook (registered on first use,
   * never per rebuild — the round-9 hook-accumulation lesson)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,39 +14,22 @@ import graft.model.Tables
   * format round-trip preserved every byte the query can see (an md5-prefix
   * checksum over `text` pins content, not just counts). Same scale posture
   * as parquet: columnar scan with pushdown/pruning; the write is paid once
-  * per session (TrieMap, the BucketedTables discipline). */
+  * per source fingerprint ([[LayoutCache]]). */
 object OrcRoundTrip {
 
-  private val created = TrieMap.empty[String, String]
-
-  /** Cache key = sfDir + a fingerprint of the source parquet (file names,
-    * sizes, mtimes). Keying on sfDir alone served a stale ORC snapshot if
-    * the parquet under a cached dir was regenerated in-session; with the
-    * fingerprint a regenerate simply misses the cache and re-copies. Old
-    * snapshots stay on disk until the JVM shutdown hook sweeps them —
-    * bounded by the number of regenerations, acceptable for a session-
-    * scoped test/bench artifact. */
-  private def cacheKey(sfDir: String): String =
-    SourceFingerprint.key(sfDir, "documents.parquet")
+  /** Keyed on a fingerprint of the source parquet (file names, sizes,
+    * mtimes): a regenerated parquet under a cached dir evicts the stale
+    * ORC copy (deleting it) and re-copies. */
+  private val cache = new LayoutCache[String](LayoutDirs.deleteParent)
 
   private def ensure(spark: SparkSession, sfDir: String): String =
-    created.getOrElseUpdate(cacheKey(sfDir), {
-      val root = Files.createTempDirectory("graft-orc")
-      // the ORC copy is a full materialization of documents — reclaim it
-      // when the JVM exits instead of accumulating one per bench/test run
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files => F}
-        import java.util.Comparator
-        try F.walk(root).sorted(Comparator.reverseOrder())
-          .forEach(p => F.deleteIfExists(p))
-        catch { case _: Exception => () }
-      }))
-      val dir = root.toString + "/documents"
+    cache.get(sfDir, "documents.parquet") {
+      val dir = Files.createTempDirectory("graft-orc").toString + "/documents"
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
         .write.mode("overwrite").orc(dir)
       dir
-    })
+    }
 
   def orcRoundTrip(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.orc(ensure(spark, sfDir))

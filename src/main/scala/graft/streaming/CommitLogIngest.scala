@@ -699,15 +699,44 @@ object CommitLogIngest {
       // exceptAll diff here cost two full-table reads plus a shuffle ON
       // THE COMMIT PATH of every 100-TB overwrite — O(table) work for a
       // feature the reader can have for free.
-      val stage = stageActions(spark, tableDir, adds, removes, schemaOf, txn,
-        op = if (removes.isEmpty) None else Some("overwrite"))
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        postWin(spark, tableDir, latest + 1, statsCol, statsDir, schemaOf)
+      if (tryCommitAt(spark, tableDir, latest, adds, removes, statsCol,
+          statsDir, schemaOf, txn, op = overwriteOp(removes)))
         return latest + 1
-      }
-      LayoutDirs.deleteQuiet(stage.toString) // stale removes — restage
+      // stale removes — restage
     }
     -1L // unreachable
+  }
+
+  /** The op of a commit that replaces `removes`: the removed files ARE
+    * the deletes and the added files ARE the inserts. */
+  private[graft] def overwriteOp(removes: Seq[String]): Option[String] =
+    Some("overwrite").filter(_ => removes.nonEmpty)
+
+  /** Commit add(`adds`) + remove(`removes`) at EXACTLY `readAt + 1`, the
+    * version after the one the caller read its state from — the
+    * single-attempt claim every read-dependent commit (overwrite, DML,
+    * OPTIMIZE, RESTORE) needs: a sliding claim could land its removes
+    * after a concurrent rewrite already replaced one of them. `onWin`
+    * publishes the version's side data (masks, change rows) between the
+    * claim and the post-claim bookkeeping. Returns false on a version
+    * conflict: nothing is published, the caller re-reads and restages. */
+  private[graft] def tryCommitAt(spark: SparkSession, tableDir: String,
+      readAt: Long, adds: Seq[String], removes: Seq[String],
+      statsCol: Option[String], statsDir: Option[String],
+      schemaOf: Option[org.apache.spark.sql.types.StructType],
+      txn: Option[String], op: Option[String],
+      extra: Seq[(String, String)] = Nil,
+      onWin: Long => Unit = _ => ()): Boolean = {
+    val stage =
+      stageActions(spark, tableDir, adds, removes, schemaOf, txn, op, extra)
+    if (tryClaimVersion(tableDir, stage, readAt + 1)) {
+      onWin(readAt + 1)
+      postWin(spark, tableDir, readAt + 1, statsCol, statsDir, schemaOf)
+      true
+    } else {
+      LayoutDirs.deleteQuiet(stage.toString)
+      false
+    }
   }
 
   /** Rewrite-commit kinds recorded as an ("op", kind) action — what lets
@@ -1095,17 +1124,14 @@ object CommitLogIngest {
               .drop(DvFileCol, DvPosCol)
               .withColumn("_change_type", lit("delete")))
         }
-      val stage = stageActions(spark, tableDir, Seq.empty, Seq.empty,
-        schemaOf = None, txn = None, op = Some("delete-dv"),
-        extra = affected.map(("dv", _)))
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        publishDv(tableDir, staged, latest + 1)
-        cdfStaged.foreach(publishCdf(tableDir, _, latest + 1))
-        postWin(spark, tableDir, latest + 1, statsCol = None,
-          statsDir = None, schemaOf = None)
+      if (tryCommitAt(spark, tableDir, latest, Seq.empty, Seq.empty,
+          statsCol = None, statsDir = None, schemaOf = None, txn = None,
+          op = Some("delete-dv"), extra = affected.map(("dv", _)),
+          onWin = { v =>
+            publishDv(tableDir, staged, v)
+            cdfStaged.foreach(publishCdf(tableDir, _, v))
+          }))
         return (latest + 1, affected.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(staged)
       cdfStaged.foreach(LayoutDirs.deleteQuiet)
     }
@@ -1228,17 +1254,14 @@ object CommitLogIngest {
           matchedRows.withColumn("_change_type", lit("update_preimage"))
             .unionByName(
               out.withColumn("_change_type", lit("update_postimage")))))
-      val stage = stageActions(spark, tableDir, adds, Seq.empty,
-        schemaOf = None, txn = None, op = Some("update-dv"),
-        extra = affected.map(("dv", _)))
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        publishDv(tableDir, staged, latest + 1)
-        cdfStaged.foreach(publishCdf(tableDir, _, latest + 1))
-        postWin(spark, tableDir, latest + 1,
-          statsCol, Some(outDir), schemaOf = None)
+      if (tryCommitAt(spark, tableDir, latest, adds, Seq.empty, statsCol,
+          Some(outDir), schemaOf = None, txn = None,
+          op = Some("update-dv"), extra = affected.map(("dv", _)),
+          onWin = { v =>
+            publishDv(tableDir, staged, v)
+            cdfStaged.foreach(publishCdf(tableDir, _, v))
+          }))
         return (latest + 1, affected.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(staged)
       LayoutDirs.deleteQuiet(outDir)
       cdfStaged.foreach(LayoutDirs.deleteQuiet)
@@ -1352,15 +1375,10 @@ object CommitLogIngest {
             }
           stageCdfRows(tableDir, changes)
         }
-      val stage = stageActions(spark, tableDir, adds, affected,
-        schemaOf = Some(updates.schema), txn = None)
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        cdfStaged.foreach(publishCdf(tableDir, _, latest + 1))
-        postWin(spark, tableDir, latest + 1, statsCol, Some(outDir),
-          schemaOf = Some(updates.schema))
+      if (tryCommitAt(spark, tableDir, latest, adds, affected, statsCol,
+          Some(outDir), Some(updates.schema), txn = None, op = None,
+          onWin = v => cdfStaged.foreach(publishCdf(tableDir, _, v))))
         return (latest + 1, affected.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(outDir)
       cdfStaged.foreach(LayoutDirs.deleteQuiet)
     }
@@ -1372,7 +1390,7 @@ object CommitLogIngest {
     * by the commit's partition fan-out), flat when unpartitioned. Shared
     * by the merge paths so dir pruning survives routine merges instead
     * of eroding with every upsert. */
-  private def writePartitionLocal(survivors0: DataFrame,
+  private[graft] def writePartitionLocal(survivors0: DataFrame,
       pcols: Seq[String], outDir: String, tableDir: String): Unit = {
     // files are ALWAYS physical-named (identity for unmapped tables)
     val survivors = toPhysical(survivors0, tableDir)
@@ -1697,16 +1715,12 @@ object CommitLogIngest {
               "overwrite or drop the table instead")
           (a, c)
         } catch { case e: Throwable => abortStaging(e) }
-      val stage = stageActions(spark, tableDir, adds, affected,
-        schemaOf = None, txn = txn)
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        cdfStaged.foreach(publishCdf(tableDir, _, latest + 1))
-        postWin(spark, tableDir, latest + 1,
+      if (tryCommitAt(spark, tableDir, latest, adds, affected,
           statsCol.filter(_ => adds.nonEmpty),
-          Some(outDir).filter(_ => adds.nonEmpty), schemaOf = None)
+          Some(outDir).filter(_ => adds.nonEmpty), schemaOf = None, txn,
+          op = None,
+          onWin = v => cdfStaged.foreach(publishCdf(tableDir, _, v))))
         return (latest + 1, affected.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(outDir)
       cdfStaged.foreach(LayoutDirs.deleteQuiet)
     }
@@ -1878,6 +1892,11 @@ object CommitLogIngest {
     s"$tableDir/cdf/version=$v"
 
   /** An empty CDF marker (no logical change — OPTIMIZE). */
+  /** The layout ops' `onWin`: CDF-enabled tables keep an empty change
+    * marker for the version (it changed no rows). */
+  private def emptyCdfMarker(tableDir: String)(v: Long): Unit =
+    if (cdfEnabled(tableDir)) writeCdfEmpty(tableDir, v)
+
   private def writeCdfEmpty(tableDir: String, v: Long): Unit = {
     val p = Paths.get(cdfDir(tableDir, v), "_empty")
     Files.createDirectories(p.getParent)
@@ -2024,6 +2043,11 @@ object CommitLogIngest {
                 pool.shutdownNow()
                 pool.awaitTermination(60,
                   java.util.concurrent.TimeUnit.SECONDS)
+                // a sibling may have submitted its job after the first
+                // cancel; now every pool thread is done, so this one
+                // catches every job the group will ever have
+                spark.sparkContext.cancelJobGroup(jobGroup)
+                awaitTasksEnded(spark, jobGroup)
                 throw e
             } finally pool.shutdown()
           }
@@ -2036,24 +2060,56 @@ object CommitLogIngest {
               "overwrite or drop the table instead")
           (a, c)
         } catch { case e: Throwable => abortStaging(e) }
-      val stage = stageActions(spark, tableDir, adds, affected,
-        schemaOf = None, txn = None)
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        cdfStaged.foreach(publishCdf(tableDir, _, latest + 1))
-        postWin(spark, tableDir, latest + 1,
+      if (tryCommitAt(spark, tableDir, latest, adds, affected,
           statsCol.filter(_ => adds.nonEmpty),
-          Some(outDir).filter(_ => adds.nonEmpty), schemaOf = None)
+          Some(outDir).filter(_ => adds.nonEmpty), schemaOf = None,
+          txn = None, op = None,
+          onWin = v => cdfStaged.foreach(publishCdf(tableDir, _, v))))
         return (latest + 1, affected.size)
-      }
       // lost the claim: the state we read is stale — discard and recompute
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(outDir)
       cdfStaged.foreach(LayoutDirs.deleteQuiet)
     }
     (-1L, 0) // unreachable
   }
 
+  /** Wait (at most 60 s) until no task of `group`'s jobs still runs. A
+    * cancelled job's driver thread returns before its tasks notice the
+    * kill, and a task still writing recreates the staging dir it writes
+    * into after the abort deleted it. The scheduler registers a job
+    * asynchronously, so an empty answer is trusted only after 200 ms. */
+  private def awaitTasksEnded(spark: SparkSession, group: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    val t0 = System.nanoTime()
+    def elapsedMs = (System.nanoTime() - t0) / 1000000L
+    def running = {
+      org.apache.spark.sql.graft.Shim.drainListeners(spark)
+      st.getJobIdsForGroup(group).iterator
+        .flatMap(st.getJobInfo(_)).flatMap(_.stageIds)
+        .flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    }
+    while ((running || elapsedMs < 200) && elapsedMs < 60000)
+      Thread.sleep(20)
+  }
+
   // ---- OPTIMIZE through the log -------------------------------------------
+
+  /** The live rows of `paths` for a layout rewrite: under the schema
+    * declared as of the rewrite's version, masks applied. A table with no
+    * schema action and no mask merges its files' own schemas. */
+  private def layoutInput(spark: SparkSession, tableDir: String,
+      paths: Seq[String], dvs: Map[String, Seq[Long]],
+      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    if (declared.isDefined || paths.exists(dvs.contains))
+      readWithDv(spark, tableDir, paths, dvs, declared)
+    else spark.read.option("mergeSchema", "true")
+      .option("recursiveFileLookup", "true").parquet(paths: _*)
+
+  /** Output files for rewriting `paths` at `maxFileBytes` each (≥ 1). */
+  private def fileCount(paths: Seq[String], maxFileBytes: Long): Int = {
+    val bytes = paths.map(p => Files.size(Paths.get(p))).sum
+    math.max(1L, (bytes + maxFileBytes - 1) / maxFileBytes).toInt
+  }
 
   /** Small-file compaction AS A COMMIT — the Delta/Iceberg OPTIMIZE shape:
     * live files under `maxFileBytes` are rewritten into target-sized
@@ -2097,9 +2153,7 @@ object CommitLogIngest {
       val optDir =
         s"$tableDir/data/opt-${java.util.UUID.randomUUID().toString.take(12)}"
       groups.foreach { case (seg, paths) =>
-        val totalBytes = paths.map(p => Files.size(Paths.get(p))).sum
-        val n =
-          math.max(1L, (totalBytes + maxFileBytes - 1) / maxFileBytes).toInt
+        val n = fileCount(paths, maxFileBytes)
         // compaction reads under the declared schema as of `v`: on a
         // schema-evolved table the smalls span generations, and a bare
         // read would infer ONE footer's schema — a late-added column
@@ -2110,14 +2164,7 @@ object CommitLogIngest {
         // unmasked inputs this is a pure layout move, for masked ones a
         // mask materialization (still no logical change: the snapshot
         // census is identical before and after)
-        val in = declared match {
-          case Some(st) => readWithDv(spark, tableDir, paths, dvs, Some(st))
-          case None =>
-            if (paths.exists(dvs.contains))
-              readWithDv(spark, tableDir, paths, dvs, None)
-            else spark.read.option("mergeSchema", "true")
-              .option("recursiveFileLookup", "true").parquet(paths: _*)
-        }
+        val in = layoutInput(spark, tableDir, paths, dvs, declared)
         val dst = if (seg.isEmpty) optDir else s"$optDir/$seg"
         toPhysical(statsCol match {
           // range-cluster on the indexed column so point reads stay pruned
@@ -2127,29 +2174,40 @@ object CommitLogIngest {
         }, tableDir).write.mode("overwrite").parquet(dst)
       }
       val adds = LayoutDirs.dataFiles(optDir)
-      val stage = stageActions(spark, tableDir, adds, smalls,
-        schemaOf = None, txn = None, op = Some("optimize"))
-      if (tryClaimVersion(tableDir, stage, v + 1)) {
-        // a pure layout move changes nothing — the ("op", "optimize")
-        // action says exactly that from the log alone; CDF-enabled
-        // tables also keep the empty cdf marker (pre-op readers)
-        if (cdfEnabled(tableDir)) writeCdfEmpty(tableDir, v + 1)
-        postWin(spark, tableDir, v + 1, statsCol, Some(optDir),
-          schemaOf = None)
+      // a pure layout move changes nothing — the ("op", "optimize")
+      // action says exactly that from the log alone; CDF-enabled
+      // tables also keep the empty cdf marker (pre-op readers)
+      if (tryCommitAt(spark, tableDir, v, adds, smalls, statsCol,
+          Some(optDir), schemaOf = None, txn = None, op = Some("optimize"),
+          onWin = emptyCdfMarker(tableDir)))
         return (v + 1, smalls.size, adds.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(optDir)
     }
     (-1L, 0, 0) // unreachable
   }
 
+  /** Bits interleaved per Morton axis: 21 covers values to ~2M (user ids
+    * and epoch-days far past any driver corpus) and the 42-bit z-value
+    * stays inside a LONG. Constant-zero high bits interleave to
+    * constant-zero z-bits that never affect ordering. */
+  private val ZBits = 21
+
+  /** Morton interleave of two non-negative LONG columns: bit i of `a`
+    * lands at z-bit 2i+1, bit i of `b` at 2i. Pure built-in bit ops, so
+    * the whole thing stays inside whole-stage codegen — no UDF. */
+  private def zvalue(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    (0 until ZBits).foldLeft(lit(0L)) { (acc, i) =>
+      acc
+        .bitwiseOR(shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i + 1))
+        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i))
+    }
+
   /** `OPTIMIZE ... ZORDER BY (a, b)` INSIDE the log (round-12 verdict
     * task 5): rewrite the live set range-clustered on the Morton
     * interleave of two columns, as ONE atomic layout-only commit — the
-    * Delta shape, bringing `src_zorder`'s clustering
-    * ([[graft.sources.ZOrderLayout]]) through the table format so the
-    * multi-column stats index (E-143) gets a layout that feeds it: after
+    * Delta shape, giving the multi-column stats index (E-143) a layout
+    * that feeds it (`src_zorder` reads through it): after
     * the rewrite, point reads on EITHER axis prune to ~sqrt-fraction
     * candidate sets through the index's per-file min/max.
     *
@@ -2192,14 +2250,7 @@ object CommitLogIngest {
       groups.foreach { case (seg, paths) =>
         // masks apply (the whole live set is rewritten, so every mask
         // materializes here — clustered output carries only live rows)
-        val in = declared match {
-          case Some(st) => readWithDv(spark, tableDir, paths, dvs, Some(st))
-          case None =>
-            if (paths.exists(dvs.contains))
-              readWithDv(spark, tableDir, paths, dvs, None)
-            else spark.read.option("mergeSchema", "true")
-              .option("recursiveFileLookup", "true").parquet(paths: _*)
-        }
+        val in = layoutInput(spark, tableDir, paths, dvs, declared)
         val missing = zorderBy.filterNot(in.columns.contains)
         require(missing.isEmpty,
           s"optimizeZOrder: column(s) ${missing.mkString(", ")} not in " +
@@ -2223,9 +2274,7 @@ object CommitLogIngest {
             "not integral/date/timestamp — the Morton interleave needs " +
             "long-normalizable axes (cluster strings via a derived " +
             "numeric key instead)")
-        val totalBytes = paths.map(p => Files.size(Paths.get(p))).sum
-        val n =
-          math.max(1L, (totalBytes + maxFileBytes - 1) / maxFileBytes).toInt
+        val n = fileCount(paths, maxFileBytes)
         // per-type long normalization: Spark forbids CAST(date AS
         // BIGINT), so a date axis goes through unix_date (days since
         // epoch — exactly the integer the stats index stores for it);
@@ -2235,8 +2284,7 @@ object CommitLogIngest {
             unix_date(col(c)).cast("long")
           case _ => col(c).cast("long")
         }
-        val z = graft.sources.ZOrderLayout.zvalue(
-          axis(zorderBy.head), axis(zorderBy(1)))
+        val z = zvalue(axis(zorderBy.head), axis(zorderBy(1)))
         val dst = if (seg.isEmpty) outDir else s"$outDir/$seg"
         toPhysical(in.withColumn("_graft_z", z)
           .repartitionByRange(n, col("_graft_z"))
@@ -2245,16 +2293,10 @@ object CommitLogIngest {
           .write.mode("overwrite").parquet(dst)
       }
       val adds = LayoutDirs.dataFiles(outDir)
-      val stage = stageActions(spark, tableDir, adds, live,
-        schemaOf = None, txn = None, op = Some("zorder"),
-        extra = Seq(("zorderBy", spec)))
-      if (tryClaimVersion(tableDir, stage, v + 1)) {
-        if (cdfEnabled(tableDir)) writeCdfEmpty(tableDir, v + 1)
-        postWin(spark, tableDir, v + 1, statsCol, Some(outDir),
-          schemaOf = None)
+      if (tryCommitAt(spark, tableDir, v, adds, live, statsCol,
+          Some(outDir), schemaOf = None, txn = None, op = Some("zorder"),
+          extra = Seq(("zorderBy", spec)), onWin = emptyCdfMarker(tableDir)))
         return (v + 1, live.size, adds.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(outDir)
     }
     (-1L, 0, 0) // unreachable
@@ -2351,16 +2393,10 @@ object CommitLogIngest {
         .repartition(col("gcell"))
         .write.partitionBy("gcell").mode("overwrite").parquet(outDir)
       val adds = LayoutDirs.dataFiles(outDir)
-      val stage = stageActions(spark, tableDir, adds, live,
-        schemaOf = None, txn = None, op = Some("cluster"),
-        extra = Seq(("clusterBy", spec)))
-      if (tryClaimVersion(tableDir, stage, v + 1)) {
-        if (cdfEnabled(tableDir)) writeCdfEmpty(tableDir, v + 1)
-        postWin(spark, tableDir, v + 1, statsCol, Some(outDir),
-          schemaOf = None)
+      if (tryCommitAt(spark, tableDir, v, adds, live, statsCol,
+          Some(outDir), schemaOf = None, txn = None, op = Some("cluster"),
+          extra = Seq(("clusterBy", spec)), onWin = emptyCdfMarker(tableDir)))
         return (v + 1, live.size, adds.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString)
       LayoutDirs.deleteQuiet(outDir)
     }
     (-1L, 0, 0) // unreachable
@@ -2873,19 +2909,15 @@ object CommitLogIngest {
       }
       val matAdds = outDir.map(LayoutDirs.dataFiles).getOrElse(Seq.empty)
       val adds = (cleanAdds ++ matAdds).sorted
-      val stage = stageActions(spark, tableDir, adds, removes,
-        schemaOf = None, txn = None, op = Some("restore"))
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        // materialized files get index rows in the same commit (the
-        // re-added originals keep their immutable-path rows from their
-        // first commit) — pointRead must keep pruning correctly
-        postWin(spark, tableDir, latest + 1,
+      // materialized files get index rows in the same commit (the
+      // re-added originals keep their immutable-path rows from their
+      // first commit) — pointRead must keep pruning correctly
+      if (tryCommitAt(spark, tableDir, latest, adds, removes,
           statsCol = indexedCol(tableDir).filter(_ => matAdds.nonEmpty),
-          statsDir = outDir, schemaOf = None)
+          statsDir = outDir, schemaOf = None, txn = None,
+          op = Some("restore")))
         return (latest + 1, removes.size, adds.size)
-      }
-      LayoutDirs.deleteQuiet(stage.toString) // stale read — recompute
-      outDir.foreach(LayoutDirs.deleteQuiet)
+      outDir.foreach(LayoutDirs.deleteQuiet) // stale read — recompute
     }
     (-1L, 0, 0) // unreachable
   }

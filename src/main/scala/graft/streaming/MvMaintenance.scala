@@ -7,9 +7,7 @@ import graft.sources.{CdfRollup, LayoutDirs}
 
 /** CONTINUOUS materialized-view maintenance: the V2 change-feed STREAM
   * of a commit-log table folded into a commit-log MV table, exactly
-  * once. This is `CdfRollup`'s production loop — and it closes the gap
-  * `RollupMaintenance` documents for plain parquet layouts ("closing it
-  * fully requires a transactional table format"): here the fold lands
+  * once. This is `CdfRollup`'s production loop: the fold lands
   * as ONE overwrite commit whose `("txn", "qid:batchId")` marker rides
   * the SAME atomic version claim as the data, so a crash-replayed epoch
   * is detected by [[CommitLogIngest.lastTxnEpoch]] and skipped — there

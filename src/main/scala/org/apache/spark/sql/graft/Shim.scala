@@ -27,6 +27,9 @@ object Shim {
   /** `st` with every field, element and value nullable — the schema a
     * file scan surfaces for a user-specified schema. */
   def asNullable(st: StructType): StructType = st.asNullable
+  /** Returns once every listener has seen every event posted so far. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** The session planner's FULL strategy list (builtin + extension-injected
     * + experimental) — for idempotence checks before registering one. */

@@ -248,7 +248,7 @@ class CommitLogPartitionSpec extends SparkSuite {
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     val ev = graft.model.Tables.events(s, sf0001)
       .withColumn("day",
-        expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}"))
+        expr(s"ts div ${graft.model.Tables.NanosPerDay}"))
     val d0 = ev.agg(min("day")).head().getLong(0)
     val direct = ev.filter(col("event_type") =!= "purchase")
       .filter(col("day") <= d0 + 1)

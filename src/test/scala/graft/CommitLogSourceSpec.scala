@@ -97,7 +97,7 @@ class CommitLogSourceSpec extends SparkSuite {
       table, tmp("loop-wck"), triggerSec = 0)
     try {
       in.addData(wave(0)); writer.processAllAvailable()
-      val consumer = graft.streaming.RollupMaintenance.start(
+      val consumer = graft.sources.IncrementalRollup.start(
         s.readStream.format("graft-commitlog").option("path", table).load(),
         rollup, tmp("loop-rck"), triggerSec = 0)
       try {
@@ -110,13 +110,13 @@ class CommitLogSourceSpec extends SparkSuite {
         val expect = (0 until 4).flatMap(wave)
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
           .groupBy(expr(
-            s"ts div ${graft.sources.EventsLayout.NanosPerDay}").as("day"),
+            s"ts div ${graft.model.Tables.NanosPerDay}").as("day"),
             col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sv"))
           .collect().map(r => (r.getLong(0), r.getString(1)) ->
             (r.getLong(2), r.getDouble(3))).toMap
-        val got = s.read.parquet(rollup)
-          .select(col("day").cast("long"), col("event_type"),
+        val got = CommitLogIngest.snapshot(s, rollup)
+          .select(col("day"), col("event_type"),
             col("n_events"), round(col("sum_value"), 4))
           .collect().map(r => (r.getLong(0), r.getString(1)) ->
             (r.getLong(2), r.getDouble(3))).toMap

@@ -206,4 +206,59 @@ class CommitLogWriteSpec extends SparkSuite {
     assert(CommitLogIngest.latestVersion(table) == 11L)
     assert(replay2.forall(p => !Files.exists(Paths.get(p))))
   }
+
+  /** A one-version unpartitioned table (id long, day long), CDF off. */
+  private def oneVersion(table: String): Unit = {
+    val s = spark
+    import s.implicits._
+    Seq((1L, 1L)).toDF("id", "day").write.format("graft-commitlog")
+      .option("path", table).mode("append").save()
+  }
+
+  /** A refused write must change nothing: no version, and neither the
+    * CDF switch nor the partition layout it asked for. */
+  private def assertNoTrace(table: String): Unit = {
+    assert(CommitLogIngest.latestVersion(table) == 0L,
+      "a refused append landed a version")
+    assert(!CommitLogIngest.cdfEnabled(table),
+      "a refused append turned on the change data feed")
+    assert(CommitLogIngest.partitionColsOf(table).isEmpty,
+      "a refused append recorded a partition layout")
+  }
+
+  test("a refused batch append leaves no trace") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("refused-batch")
+    oneVersion(table)
+    // `id` changes type: the append check refuses it at commit
+    val e = intercept[Exception] {
+      Seq(("two", 2L)).toDF("id", "day").write.format("graft-commitlog")
+        .option("path", table).option("enableCdf", "true")
+        .option("partitionCols", "day").mode("append").save()
+    }
+    assert(e.getMessage.contains("changes column type"), e.getMessage)
+    assertNoTrace(table)
+  }
+
+  test("a refused streaming append leaves no trace") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("refused-stream")
+    oneVersion(table)
+    val in = MemoryStream[(String, Long)](s)
+    val q = in.toDF().toDF("id", "day")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp("refused-stream-ck"))
+      .option("enableCdf", "true").option("partitionCols", "day")
+      .start()
+    try {
+      in.addData(("two", 2L))
+      val e = intercept[Exception](q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(
+          _.contains("changes column type"))), e.toString)
+    } finally q.stop()
+    assertNoTrace(table)
+  }
 }

@@ -1,49 +1,48 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-import graft.sources.Compaction
+import graft.sources.OptimizeCommit
+import graft.streaming.CommitLogIngest
 
-/** The compaction rewrite's contract: fragment count collapses to the
-  * byte-derived target count, output files are row-balanced, the rewrite
-  * reclaims (never inflates) bytes, content survives untouched, and the
-  * fingerprint cache rebuilds when the source regenerates. Content
-  * equality against the original table is the DuckDB oracle's job
-  * (`src_compaction`); this spec pins the layout mechanics the oracle
-  * cannot see. */
+/** The compaction commit's contract on the `src_compaction` table: the
+  * fragmented ingest (v0) collapses to the byte-derived file count at v1,
+  * the rewrite reclaims (never inflates) bytes, content survives
+  * untouched, and the fingerprint cache rebuilds when the source
+  * regenerates. Content equality against the original table is the
+  * DuckDB oracle's job (`src_compaction`); this spec pins the file
+  * mechanics the oracle cannot see. */
 class CompactionSpec extends SparkSuite {
+
+  private def bytes(files: Seq[String]): Long =
+    files.map(p => Files.size(Paths.get(p))).sum
 
   test("fragmented table collapses to the byte-derived file count") {
     val s = spark
-    val (frag, comp) = Compaction.ensure(s, sf0001)
-    val nFrag = Compaction.parquetFileCount(frag)
-    val nComp = Compaction.parquetFileCount(comp)
-    assert(nFrag == Compaction.FragmentCount,
-      s"fragmented layout has $nFrag files, expected ${Compaction.FragmentCount}")
-    val expected = Compaction.targetFileCount(Compaction.parquetBytes(frag))
-    assert(nComp == expected,
-      s"compacted layout has $nComp files, expected $expected")
-    assert(nComp < nFrag / 4,
-      s"compaction barely compacted: $nFrag -> $nComp files")
+    val table = OptimizeCommit.ensureEvents(s, sf0001)
+    val frag = CommitLogIngest.liveFiles(s, table, 0L)
+    val comp = CommitLogIngest.liveFiles(s, table, 1L)
+    assert(frag.size == OptimizeCommit.FragmentCount,
+      s"fragmented version has ${frag.size} files, expected " +
+        s"${OptimizeCommit.FragmentCount}")
+    val target = OptimizeCommit.TargetFileBytes
+    val expected = math.max(1L, (bytes(frag) + target - 1) / target)
+    assert(comp.size == expected,
+      s"compacted version has ${comp.size} files, expected $expected")
+    assert(comp.size < frag.size / 4,
+      s"compaction barely compacted: ${frag.size} -> ${comp.size} files")
   }
 
-  test("compacted files are row-balanced and bytes are reclaimed") {
+  test("compaction reclaims bytes and keeps every row") {
     val s = spark
-    val (frag, comp) = Compaction.ensure(s, sf0001)
-    val rowsPerFile = s.read.parquet(comp)
-      .groupBy(input_file_name()).count()
-      .collect().map(_.getLong(1))
-    if (rowsPerFile.length > 1) {
-      assert(rowsPerFile.max <= 2 * rowsPerFile.min,
-        s"round-robin rewrite produced imbalanced files: " +
-          s"${rowsPerFile.sorted.mkString(",")} rows")
-    }
+    val table = OptimizeCommit.ensureEvents(s, sf0001)
     // tiny-file footer overhead is reclaimed, never inflated
-    assert(Compaction.parquetBytes(comp) <= Compaction.parquetBytes(frag),
-      "compacted layout is larger than the fragmented input")
+    assert(bytes(CommitLogIngest.liveFiles(s, table, 1L)) <=
+        bytes(CommitLogIngest.liveFiles(s, table, 0L)),
+      "compacted version is larger than the fragmented input")
     // membership: compaction is a pure layout move
-    val nRows = s.read.parquet(comp).count()
+    val nRows = CommitLogIngest.snapshot(s, table, 1L).count()
     val nOrig = graft.model.Tables.events(s, sf0001).count()
     assert(nRows == nOrig, s"compaction changed row count: $nOrig -> $nRows")
   }
@@ -63,15 +62,17 @@ class CompactionSpec extends SparkSuite {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$d/events.parquet")
 
+    def compacted(): Long =
+      CommitLogIngest.snapshot(s, OptimizeCommit.ensureEvents(s, d), 1L)
+        .count()
+
     write(200)
-    val (_, comp1) = Compaction.ensure(s, d)
-    assert(s.read.parquet(comp1).count() == 200)
+    assert(compacted() == 200)
 
     // regenerate under the SAME path: a stale cache would keep serving
     // the 200-row compaction of the old bytes
     write(300)
-    val (_, comp2) = Compaction.ensure(s, d)
-    assert(s.read.parquet(comp2).count() == 300,
+    assert(compacted() == 300,
       "stale compacted layout served after source regeneration")
   }
 }

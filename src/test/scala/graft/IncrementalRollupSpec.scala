@@ -1,17 +1,18 @@
 package graft
 
-
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import graft.sources.IncrementalRollup
+import graft.sources.{IncrementalRollup, PartitionPaths}
+import graft.streaming.CommitLogIngest
 
 /** The incremental rollup's reason to exist is O(delta) maintenance:
-  * merging a batch must rewrite ONLY the day partitions the delta
-  * touches, and its read of the existing rollup must partition-prune to
-  * those days. Value equality with a full recompute is the DuckDB
-  * oracle's job (`src_incr_rollup`); this spec pins the maintenance
-  * mechanics the oracle cannot see. */
+  * merging a batch must replace ONLY the day partitions the delta
+  * touches, and its read of the existing rollup must prune to those
+  * days. Value equality with a full recompute is the DuckDB oracle's job
+  * (`src_incr_rollup`); this spec pins the maintenance mechanics the
+  * oracle cannot see. */
 class IncrementalRollupSpec extends SparkSuite {
+
+  private val dayCol = expr(s"ts div ${graft.model.Tables.NanosPerDay}")
 
   // ts is CANONICAL nanos-since-epoch LONG (the shape Tables.events
   // normalizes every encoding to — buildBase/mergeDelta operate on
@@ -31,101 +32,94 @@ class IncrementalRollupSpec extends SparkSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
-  private def listing(dir: String): Map[String, Seq[(String, Long, Long)]] = {
-    val root = new java.io.File(dir)
-    root.listFiles().filter(_.getName.startsWith("day="))
-      .map { d =>
-        d.getName -> d.listFiles().filter(_.isFile).toSeq.sortBy(_.getName)
-          .map(f => (f.getName, f.length(), f.lastModified()))
-      }.toMap
-  }
+  private def tmpTable(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/rollup"
+
+  private def rows(table: String): Map[(Long, String), (Long, Double)] =
+    CommitLogIngest.snapshot(spark, table)
+      .select(col("day"), col("event_type"), col("n_events"),
+        round(col("sum_value"), 4))
+      .collect().map(r => (r.getLong(0), r.getString(1)) ->
+        (r.getLong(2), r.getDouble(3))).toMap
 
   test("merge rewrites only the delta's day partitions") {
     val s = spark
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-incr-mech").toString + "/rollup"
+    val table = tmpTable("graft-incr-mech")
     val events = synthEvents(nDays = 5, perDay = 60, valueSeed = 1.0)
-    val dayCol = expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")
     val dmax = events.agg(max(dayCol)).head().getLong(0)
 
-    IncrementalRollup.buildBase(events.filter(dayCol < dmax), dir)
-    val before = listing(dir)
-    assert(before.size == 4, s"expected 4 base day dirs, got ${before.size}")
+    IncrementalRollup.buildBase(events.filter(dayCol < dmax), table)
+    val before = CommitLogIngest.liveFiles(s, table, 0L)
+    assert(before.map(PartitionPaths.segmentsOf).toSet.size == 4,
+      "expected 4 base day dirs")
 
-    IncrementalRollup.mergeDelta(s, dir, events.filter(dayCol === dmax))
-    val after = listing(dir)
-    assert(after.size == 5, s"expected 5 day dirs after merge, got ${after.size}")
-    // every pre-existing partition is byte-identical (same files, sizes,
-    // mtimes): dynamic overwrite replaced ONLY the delta's day
-    before.foreach { case (day, files) =>
-      assert(after(day) == files,
-        s"untouched partition $day was rewritten by the merge")
-    }
+    // a delta touching one existing day and the new last day
+    val delta = events.filter(dayCol === dmax || dayCol === dmax - 1)
+    val v = IncrementalRollup.mergeDelta(s, table, delta)
+    assert(v == 1L, s"the merge landed at version $v, expected 1")
+    val after = CommitLogIngest.liveFiles(s, table, v)
+    val touched = Set(s"day=${dmax - 1}", s"day=$dmax")
+    val added = after.diff(before)
+    val removed = before.diff(after)
+    assert(added.nonEmpty &&
+        added.map(PartitionPaths.segmentsOf).toSet == touched,
+      s"merge added files outside the delta's days: $added")
+    assert(removed.nonEmpty &&
+        removed.forall(p => touched(PartitionPaths.segmentsOf(p))),
+      s"merge removed files outside the delta's days: $removed")
+    // every untouched day keeps its live files, same paths
+    assert(before.filterNot(p => touched(PartitionPaths.segmentsOf(p)))
+        .forall(after.contains),
+      "an untouched partition was rewritten by the merge")
   }
 
   test("the merge's read of the existing rollup partition-prunes to touched days") {
     val s = spark
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-incr-prune").toString + "/rollup"
+    val table = tmpTable("graft-incr-prune")
     val events = synthEvents(nDays = 6, perDay = 30, valueSeed = 2.0)
-    IncrementalRollup.buildBase(events, dir)
-    val d0 = events
-      .agg(min(expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")))
-      .head().getLong(0)
-    val read = IncrementalRollup.touchedPartials(s, dir, Seq(d0, d0 + 1))
-    read.collect()
-    val scans = unwrapPlan(read.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "no scan over the rollup layout found")
-    scans.foreach { f =>
-      val pf = f.partitionFilters.map(_.sql).mkString(" ")
-      assert(pf.contains("day"),
-        s"existing-rollup read has no day partition filter (filters: $pf)")
-      assert(f.selectedPartitions.partitionCount <= 2,
-        s"merge read ${f.selectedPartitions.partitionCount} partitions of " +
-          "the rollup, wanted <= 2 (O(delta) maintenance violated)")
-    }
+    IncrementalRollup.buildBase(events, table)
+    val d0 = events.agg(min(dayCol)).head().getLong(0)
+    val opened = filesOpened(table)(IncrementalRollup.mergeDelta(s, table,
+      events.filter(dayCol === d0 || dayCol === d0 + 1)))
+    assert(opened.nonEmpty, "the merge read opened no rollup files")
+    assert(opened.forall(p => Set(s"day=$d0", s"day=${d0 + 1}")
+        .contains(PartitionPaths.segmentsOf(p))),
+      s"merge read opened untouched days' files (O(delta) maintenance " +
+        s"violated): $opened")
+    assert(opened.size < CommitLogIngest.liveFiles(s, table, 0L).size)
   }
 
   test("incremental base+merge equals a full recompute") {
     val s = spark
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-incr-eq").toString + "/rollup"
+    val table = tmpTable("graft-incr-eq")
     val events = synthEvents(nDays = 4, perDay = 50, valueSeed = 3.0)
-    val dayCol = expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")
     val dmax = events.agg(max(dayCol)).head().getLong(0)
-    IncrementalRollup.buildBase(events.filter(dayCol < dmax), dir)
-    IncrementalRollup.mergeDelta(s, dir, events.filter(dayCol === dmax))
+    IncrementalRollup.buildBase(events.filter(dayCol < dmax), table)
+    IncrementalRollup.mergeDelta(s, table, events.filter(dayCol === dmax))
 
-    val incremental = s.read.parquet(dir)
-      .select(col("day").cast("long").as("day"), col("event_type"),
-        col("n_events"), round(col("sum_value"), 4).as("sum_value"))
-      .collect().map(r => (r.getLong(0), r.getString(1)) ->
-        (r.getLong(2), r.getDouble(3))).toMap
     val full = events
       .groupBy(dayCol.as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("sum_value"))
       .collect().map(r => (r.getLong(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
-    assert(incremental == full,
+    assert(rows(table) == full,
       s"incremental rollup diverged from full recompute")
   }
 
   test("single-day corpus: empty base build then delta merge bootstraps cleanly") {
     // all rows on one epoch day ⇒ buildBase runs on an EMPTY frame and
-    // leaves a dir holding only _SUCCESS; the merge must treat that as
-    // "no layout" (reading it would throw UNABLE_TO_INFER_SCHEMA)
+    // commits nothing; the merge must bootstrap the table itself
     val s = spark
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-incr-oneday").toString + "/rollup"
+    val table = tmpTable("graft-incr-oneday")
     val events = synthEvents(nDays = 1, perDay = 30, valueSeed = 6.0)
-    val dayCol = expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")
     val dmax = events.agg(max(dayCol)).head().getLong(0)
-    IncrementalRollup.buildBase(events.filter(dayCol < dmax), dir)
-    IncrementalRollup.mergeDelta(s, dir, events.filter(dayCol === dmax))
-    val n = s.read.parquet(dir).agg(sum(col("n_events"))).head().getLong(0)
+    IncrementalRollup.buildBase(events.filter(dayCol < dmax), table)
+    assert(CommitLogIngest.latestVersion(table) == -1L)
+    IncrementalRollup.mergeDelta(s, table, events.filter(dayCol === dmax))
+    val n = rows(table).values.map(_._1).sum
     assert(n == 30, s"single-day bootstrap lost rows (rolled up $n of 30)")
+    assert(CommitLogIngest.partitionColsOf(table) == Seq("day"))
   }
 
   test("base+merge rollup is invariant to shuffle partition count") {
@@ -133,20 +127,15 @@ class IncrementalRollupSpec extends SparkSuite {
     // sum-oracle treatment) — a placement-sensitive merge would diverge
     val s = spark
     val events = synthEvents(nDays = 4, perDay = 45, valueSeed = 5.0)
-    val dayCol = expr(s"ts div ${graft.sources.EventsLayout.NanosPerDay}")
     val dmax = events.agg(max(dayCol)).head().getLong(0)
-    def buildAt(parts: String): Seq[String] = {
+    def buildAt(parts: String): Map[(Long, String), (Long, Double)] = {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-incr-inv").toString + "/rollup"
+      val table = tmpTable("graft-incr-inv")
       try {
         s.conf.set("spark.sql.shuffle.partitions", parts)
-        IncrementalRollup.buildBase(events.filter(dayCol < dmax), dir)
-        IncrementalRollup.mergeDelta(s, dir, events.filter(dayCol === dmax))
-        s.read.parquet(dir)
-          .select(col("day").cast("long"), col("event_type"),
-            col("n_events"), round(col("sum_value"), 4))
-          .collect().map(_.toString).sorted.toSeq
+        IncrementalRollup.buildBase(events.filter(dayCol < dmax), table)
+        IncrementalRollup.mergeDelta(s, table, events.filter(dayCol === dmax))
+        rows(table)
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }
     val at4 = buildAt("4")

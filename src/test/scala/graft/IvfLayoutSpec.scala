@@ -45,4 +45,30 @@ class IvfLayoutSpec extends SparkSuite {
     assert(fromLayout == fromModel,
       s"partitioned layout census $fromLayout != model census $fromModel")
   }
+
+  test("regenerated embeddings rebuild the layout and delete the old one") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stale")
+    dir.toFile.deleteOnExit()
+    val d = dir.toString
+    def write(n: Int): Unit =
+      (0 until n).map { i =>
+        (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11).toFloat),
+          i % 3)
+      }.toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    write(40)
+    val first = IvfLayout.ensure(s, d)
+    assert(s.read.parquet(first).count() == 40)
+    // regenerate under the SAME path: the fingerprint misses, the layout
+    // is rebuilt from the new bytes, and the stale copy is reclaimed now
+    // rather than at JVM exit
+    write(60)
+    val second = IvfLayout.ensure(s, d)
+    assert(second != first, "stale IVF layout served after regeneration")
+    assert(s.read.parquet(second).count() == 60)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(first)),
+      s"the stale layout $first was left on disk")
+  }
 }

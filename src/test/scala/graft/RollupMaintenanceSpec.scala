@@ -4,15 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.RollupMaintenance
+import graft.sources.IncrementalRollup
+import graft.streaming.CommitLogIngest
 
 /** The streaming driver of the maintained rollup (E-115's production
-  * shape): per micro-batch O(batch) merges must reach batch parity with
-  * a full recompute, survive a restart from the same checkpoint, and be
-  * idempotent under foreachBatch's at-least-once batch replay. */
+  * shape, `IncrementalRollup.start`): per micro-batch O(batch) merges
+  * must reach batch parity with a full recompute, survive a restart from
+  * the same checkpoint, and be idempotent under foreachBatch's
+  * at-least-once batch replay (the txn marker in each merge commit). */
 class RollupMaintenanceSpec extends SparkSuite {
 
-  private val NanosPerDay = graft.sources.EventsLayout.NanosPerDay
+  private val NanosPerDay = graft.model.Tables.NanosPerDay
+  private val Qid = "rollup"
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-rollup-$prefix").toString
@@ -26,8 +29,8 @@ class RollupMaintenanceSpec extends SparkSuite {
     }
 
   private def rollup(dir: String): Map[(Long, String), (Long, Double)] =
-    spark.read.parquet(dir)
-      .select(col("day").cast("long"), col("event_type"),
+    CommitLogIngest.snapshot(spark, dir)
+      .select(col("day"), col("event_type"),
         col("n_events"), round(col("sum_value"), 4))
       .collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
@@ -59,7 +62,7 @@ class RollupMaintenanceSpec extends SparkSuite {
     val w1 = wave(day = 0, n = 40, eType = "click", v = 1.5)
     val w2 = wave(day = 0, n = 25, eType = "view", v = 2.0) ++
       wave(day = 1, n = 30, eType = "click", v = 0.5)
-    val q1 = RollupMaintenance.start(events, dir, ckpt)
+    val q1 = IncrementalRollup.start(events, dir, ckpt)
     try {
       stream.addData(w1)
       q1.processAllAvailable()
@@ -72,7 +75,7 @@ class RollupMaintenanceSpec extends SparkSuite {
     // restart from the SAME checkpoint: already-merged batches must not
     // re-merge (their partials would double), new data must keep merging
     val w3 = wave(day = 1, n = 15, eType = "view", v = 3.0)
-    val q2 = RollupMaintenance.start(events, dir, ckpt)
+    val q2 = IncrementalRollup.start(events, dir, ckpt)
     try {
       stream.addData(w3)
       q2.processAllAvailable()
@@ -82,18 +85,19 @@ class RollupMaintenanceSpec extends SparkSuite {
   }
 
   test("an empty first micro-batch neither crashes nor blocks later merges") {
-    // an empty batch 0 writes the _last_batch marker into a dir with no
-    // parquet data; batch 1 must bootstrap (not read the data-less dir)
+    // an empty batch 0 commits nothing (an idle trigger must not churn
+    // versions); batch 1 must then bootstrap the table
     val s = spark
     import s.implicits._
     val dir = tmp("emptyfirst") + "/rollup"
     val schema = wave(day = 3, n = 1, eType = "click", v = 1.0)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    RollupMaintenance.mergeOnce(schema.limit(0), dir, batchId = 0L)
-    assert(RollupMaintenance.lastMerged(dir) == 0L)
+    assert(IncrementalRollup.mergeDelta(s, dir, schema.limit(0),
+      Some(0L)) == -1L)
+    assert(CommitLogIngest.latestVersion(dir) == -1L)
     val batch = wave(day = 3, n = 25, eType = "click", v = 1.0)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    RollupMaintenance.mergeOnce(batch, dir, batchId = 1L)
+    IncrementalRollup.mergeDelta(s, dir, batch, Some(1L))
     assert(rollup(dir).values.map(_._1).sum == 25L,
       "merge after an empty first batch lost rows")
   }
@@ -104,16 +108,19 @@ class RollupMaintenanceSpec extends SparkSuite {
     val dir = tmp("replay") + "/rollup"
     val batch = wave(day = 2, n = 20, eType = "click", v = 1.0)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    RollupMaintenance.mergeOnce(batch, dir, batchId = 0L)
+    IncrementalRollup.mergeDelta(s, dir, batch, Some(0L))
     val once = rollup(dir)
-    RollupMaintenance.mergeOnce(batch, dir, batchId = 0L) // replay
+    val v = CommitLogIngest.latestVersion(dir)
+    assert(IncrementalRollup.mergeDelta(s, dir, batch, Some(0L)) == -1L,
+      "a replayed batch committed") // replay
     assert(rollup(dir) == once,
       "replayed batch double-counted into the rollup")
-    assert(RollupMaintenance.lastMerged(dir) == 0L)
+    assert(CommitLogIngest.latestVersion(dir) == v)
+    assert(CommitLogIngest.lastTxnEpoch(s, dir, Qid) == 0L)
     // the NEXT batch still merges
     val next = wave(day = 2, n = 10, eType = "view", v = 2.0)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    RollupMaintenance.mergeOnce(next, dir, batchId = 1L)
+    IncrementalRollup.mergeDelta(s, dir, next, Some(1L))
     assert(rollup(dir).values.map(_._1).sum == 30L)
   }
 }

@@ -24,6 +24,15 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       case other => Seq(other)
     }.flatten
 
+  /** The `table` files the commit-log V2 scan opened while `action` ran. */
+  protected def filesOpened(table: String)(action: => Any): Seq[String] = {
+    graft.sources.CommitLogReadTracker.enable()
+    try action
+    finally graft.sources.CommitLogReadTracker.disable()
+    graft.sources.CommitLogReadTracker.drain().distinct
+      .filter(_.startsWith(table))
+  }
+
   /** Whether every V2 scan `df` plans decodes in columnar batches (Spark
     * plans row and columnar scans differently, so this is the plan's own
     * answer, not reader state). */

@@ -2,24 +2,27 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import graft.sources.ZOrderLayout
+import graft.sources.OptimizeCommit
+import graft.streaming.CommitLogIngest
 
-/** The z-layout's reason to exist is BALANCED data skipping: per-file
-  * min/max stats must bound BOTH user_id and day tightly enough that a
-  * point query on either axis touches a strict fraction of the files —
-  * the property no single-sort layout has (the ts-sorted twin prunes day
-  * but puts every file in a point-user candidate set). Content equality
-  * is the DuckDB oracle's job (`src_zorder`); this spec pins the
-  * clustering geometry, the pushed predicates, and the staleness
-  * contract. */
+/** The z-clustered version's reason to exist is BALANCED data skipping:
+  * per-file min/max stats must bound BOTH user_id and day tightly enough
+  * that a point query on either axis touches a strict fraction of the
+  * files — the property no single-sort layout has (a ts-sorted contrast
+  * prunes day but puts every file in a point-user candidate set).
+  * Content equality is the DuckDB oracle's job (`src_zorder`); this spec
+  * pins the clustering geometry, the pushed predicates, and the
+  * staleness contract. */
 class ZOrderLayoutSpec extends SparkSuite {
 
-  /** Per-file (minU, maxU, minD, maxD) from the written stats' source of
-    * truth — the rows themselves. */
-  private def fileStats(dir: String): Array[(Long, Long, Long, Long)] =
-    spark.read.parquet(dir)
+  private def events = graft.model.Tables.withDay(
+    graft.model.Tables.events(spark, sf0001))
+
+  /** Per-file (minU, maxU, minD, maxD) from the rows themselves. */
+  private def fileStats(files: Seq[String]): Array[(Long, Long, Long, Long)] =
+    spark.read.parquet(files: _*)
       .groupBy(input_file_name().as("f"))
       .agg(min("user_id").as("u0"), max("user_id").as("u1"),
         min("day").as("d0"), max("day").as("d1"))
@@ -34,15 +37,22 @@ class ZOrderLayoutSpec extends SparkSuite {
 
   test("z-layout prunes point queries on BOTH axes; ts-sorted twin cannot") {
     val s = spark
-    val (zDir, linDir) = ZOrderLayout.ensure(s, sf0001)
-    val z = fileStats(zDir)
-    val lin = fileStats(linDir)
-    assert(z.length >= ZOrderLayout.MinFiles,
+    val table = OptimizeCommit.ensureEvents(s, sf0001)
+    val live = CommitLogIngest.liveFiles(s, table,
+      CommitLogIngest.latestVersion(table))
+    val z = fileStats(live)
+    assert(z.length >= OptimizeCommit.MinZFiles,
       s"z-layout has only ${z.length} files — clustering spec is vacuous")
+    // the contrast: same file count, time-sorted (= ingest order) — the
+    // layout a streaming sink produces by default
+    val linDir = java.nio.file.Files
+      .createTempDirectory("graft-zorder-linear").toString + "/t"
+    events
+      .repartitionByRange(z.length, col("ts")).sortWithinPartitions("ts")
+      .write.parquet(linDir)
+    val lin = fileStats(graft.sources.LayoutDirs.dataFiles(linDir))
 
-    val base = graft.model.Tables.events(s, sf0001)
-      .withColumn("day", expr(s"ts div ${ZOrderLayout.NanosPerDay}"))
-    val Array(uMid, dMid) = base
+    val Array(uMid, dMid) = events
       .agg((min("user_id") + max("user_id")) / 2,
         (min("day") + max("day")) / 2)
       .head().toSeq.map(v => v.asInstanceOf[Double].toLong).toArray
@@ -62,27 +72,41 @@ class ZOrderLayoutSpec extends SparkSuite {
     assert(linUser >= math.floor(lin.length * 0.9),
       s"ts-sorted twin unexpectedly prunes users ($linUser of ${lin.length})" +
         " — contrast layout is broken")
+
+    // and the table read itself skips files on either axis
+    def read = s.read.format("graft-commitlog").option("path", table).load()
+    val byUser =
+      filesOpened(table)(read.filter(col("user_id") === uMid).collect())
+    val byDay = filesOpened(table)(read.filter(col("day") === dMid).collect())
+    assert(byUser.nonEmpty && byUser.size < live.size,
+      s"point-user read opened ${byUser.size} of ${live.size} files")
+    assert(byDay.nonEmpty && byDay.size < live.size,
+      s"point-day read opened ${byDay.size} of ${live.size} files")
   }
 
   test("window read pushes both range predicates into the parquet scan") {
     val s = spark
-    val df = ZOrderLayout.zorderWindowRead(s, sf0001)
-    df.collect()
+    val table = OptimizeCommit.ensureEvents(s, sf0001)
+    val df = OptimizeCommit.zorderWindowRead(s, sf0001)
+    val files = filesOpened(table)(df.collect())
     val scans = unwrapPlan(df.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f }
-      .filter(_.metadata.get("Location").exists(_.contains("events_zorder")))
-    assert(scans.nonEmpty, "no scan over the z-layout found")
-    scans.foreach { f =>
-      val pushed = f.metadata.getOrElse("PushedFilters", "")
-      assert(pushed.contains("user_id") && pushed.contains("day"),
-        s"range predicates not pushed to the scan (PushedFilters: $pushed)")
+      .collect { case b: BatchScanExec => b.scan.description() }
+      .filter(_.contains(table))
+    assert(scans.nonEmpty, "no scan over the z-clustered table found")
+    scans.foreach { d =>
+      assert(d.contains("user_id") && d.contains("day"),
+        s"range predicates not pushed to the scan ($d)")
     }
+    val live = CommitLogIngest.liveFiles(s, table,
+      CommitLogIngest.latestVersion(table))
+    assert(files.size < live.size,
+      s"window read opened ${files.size} of ${live.size} files")
   }
 
   test("z-layout census reconciles with the original events table") {
     val s = spark
-    val (zDir, _) = ZOrderLayout.ensure(s, sf0001)
-    val n = s.read.parquet(zDir).count()
+    val n = CommitLogIngest.snapshot(s,
+      OptimizeCommit.ensureEvents(s, sf0001)).count()
     val nOrig = graft.model.Tables.events(s, sf0001).count()
     assert(n == nOrig, s"z-order rewrite changed row count: $nOrig -> $n")
   }
@@ -102,14 +126,16 @@ class ZOrderLayoutSpec extends SparkSuite {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$d/events.parquet")
 
+    def maxUser(): Long =
+      CommitLogIngest.snapshot(s, OptimizeCommit.ensureEvents(s, d))
+        .agg(max("user_id")).head().getLong(0)
+
     write(nUsers = 5)
-    val (z1, _) = ZOrderLayout.ensure(s, d)
-    val users1 = s.read.parquet(z1).agg(max("user_id")).head().getLong(0)
+    val users1 = maxUser()
     assert(users1 == 4, s"expected max user 4, got $users1")
 
     write(nUsers = 9)
-    val (z2, _) = ZOrderLayout.ensure(s, d)
-    val users2 = s.read.parquet(z2).agg(max("user_id")).head().getLong(0)
+    val users2 = maxUser()
     assert(users2 == 8,
       s"stale z-layout served after source regeneration (max user $users2)")
   }
