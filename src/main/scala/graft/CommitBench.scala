@@ -121,12 +121,12 @@ object CommitBench {
       ()
     })
 
-    // WRITE-PATH contrast: the DSv2 writer (per-row parquet-mr Group
-    // materialization in the executors) vs commitAppend (Spark's native
-    // vectorized parquet writer) over identical batches — the write-side
-    // twin of the reader's documented Group-API trade-off, so the cost of
-    // driving the table through df.write instead of the programmatic API
-    // is a recorded number, not a guess. Min-of-two waves each, warmed.
+    // WRITE-PATH contrast: the DSv2 writer (task-direct files through
+    // Spark's parquet OutputWriter) vs commitAppend (the same encoder
+    // behind Spark's file-source write and its output committer) over
+    // identical batches, so the cost of driving the table through
+    // df.write instead of the programmatic API is a recorded number, not
+    // a guess. Min-of-two waves each, warmed.
     val wBatches = 8
     def df(w: Int) = wave(w, perCommit).toDF("id", "payload")
     def timeAppends(commit: (Int) => Unit): Double = {

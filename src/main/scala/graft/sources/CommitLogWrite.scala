@@ -2,20 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => ParquetType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types._
 
 import graft.streaming.CommitLogIngest
@@ -40,9 +31,9 @@ import graft.streaming.CommitLogIngest
   *     dropped — the Delta transaction-identifier design.
   *
   * EXECUTOR data path: each task streams its partition straight into a
-  * task-unique parquet file under an invisible writer dir via parquet-mr's
-  * public example writer (Group API; reads go through Spark's own parquet
-  * reader).
+  * task-unique parquet file under an invisible writer dir through Spark's
+  * own parquet `OutputWriter` — the encoder every other commit-log write
+  * uses, as the read side decodes through Spark's own parquet reader.
   * Nothing references the files until the DRIVER commit publishes their
   * add-actions in one atomic rename, so failed/speculative tasks just
   * abort-delete their file and a killed job leaves only unreferenced debris
@@ -95,30 +86,6 @@ class CommitLogWriteBuilder(tableDir: String, info: LogicalWriteInfo)
   }
 }
 
-class CommitLogWrite(tableDir: String, schema: StructType, queryId: String,
-    overwrite: Boolean, statsCol: Option[String],
-    partitionCols: Seq[String],
-    autoCompact: AutoCompact = AutoCompact(false, 10L, 16, 128L << 20),
-    enableCdf: Boolean = false, enableDv: Boolean = false)
-    extends Write {
-
-  override def description(): String =
-    s"graft-commitlog[$tableDir] overwrite=$overwrite " +
-      s"partitionBy=${partitionCols.mkString(",")}"
-
-  override def toBatch: BatchWrite =
-    new CommitLogBatchWrite(tableDir, schema, overwrite, statsCol,
-      partitionCols, enableCdf, enableDv)
-
-  override def toStreaming: StreamingWrite = {
-    require(!overwrite,
-      "graft-commitlog streaming sink supports append output mode only " +
-        "(complete/update would truncate the log every epoch)")
-    new CommitLogStreamingWrite(tableDir, schema, queryId, statsCol,
-      partitionCols, autoCompact, enableCdf, enableDv)
-  }
-}
-
 /** Auto-compaction policy for the streaming sink: every epoch lands ≥ 1
   * file, so a long-running sink manufactures exactly the small-file
   * problem OPTIMIZE exists to fix — with `autoCompact.enabled`, a
@@ -151,50 +118,61 @@ object AutoCompact {
   }
 }
 
-/** One WriterCommitMessage per task: the file it wrote (none when the
-  * partition was empty) plus its row count. */
-case class CommitLogWriterCommit(files: Seq[String], rows: Long)
+/** One WriterCommitMessage per task: the files it wrote (none when the
+  * partition was empty). */
+case class CommitLogWriterCommit(files: Seq[String])
     extends WriterCommitMessage
 
-class CommitLogBatchWrite(tableDir: String, schema: StructType,
+class CommitLogWrite(tableDir: String, schema: StructType, queryId: String,
     overwrite: Boolean, statsCol: Option[String],
     partitionCols: Seq[String] = Seq.empty,
+    autoCompact: AutoCompact = AutoCompact(false, 10L, 16, 128L << 20),
     enableCdf: Boolean = false, enableDv: Boolean = false)
-    extends BatchWrite {
+    extends Write with BatchWrite with StreamingWrite {
 
   private val dataDir =
     s"$tableDir/data/w-${java.util.UUID.randomUUID().toString.take(12)}"
 
+  private[graft] def epochDir(epochId: Long) = s"$dataDir/e$epochId"
+
+  override def description(): String =
+    s"graft-commitlog[$tableDir] overwrite=$overwrite " +
+      s"partitionBy=${partitionCols.mkString(",")}"
+
+  override def toBatch: BatchWrite = this
+
+  override def toStreaming: StreamingWrite = {
+    require(!overwrite,
+      "graft-commitlog streaming sink supports append output mode only " +
+        "(complete/update would truncate the log every epoch)")
+    this
+  }
+
+  override def useCommitCoordinator(): Boolean = true
+
+  /** Spark's parquet writer set-up for the physical write schema, reused
+    * by every epoch while that schema holds. */
+  private var writers: (StructType, String => OutputWriter) = _
+
+  /** Files always carry PHYSICAL column names (identity when the table has
+    * no column mapping); the commit records the LOGICAL schema, with the
+    * mapping merged in by the schema-action choke point. */
+  private def writerFactory: CommitLogWriterFactory = {
+    val physical = CommitLogIngest.physicalWriteSchema(tableDir, schema)
+    if (writers == null || writers._1 != physical) writers =
+      (physical, Shim.parquetWriters(CommitLogPlanning.session, physical))
+    new CommitLogWriterFactory(dataDir, physical, partitionCols, writers._2)
+  }
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    // files always carry PHYSICAL column names (identity when the table
-    // has no column mapping); the commit below records the LOGICAL
-    // schema, with the mapping merged in by the schema-action choke point
-    new CommitLogWriterFactory(dataDir,
-      CommitLogIngest.physicalWriteSchema(tableDir, schema), partitionCols)
+      : DataWriterFactory = writerFactory
+
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : StreamingDataWriterFactory = writerFactory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = CommitLogWriteCommit.filesOf(messages)
-    // refusals first: a refused write must leave no trace, so every
-    // check runs before the switches flip or the layout is recorded
-    if (overwrite)
-      // truncate-to-empty would leave a version with no live files, which
-      // the append-only read contract treats as retention loss — refuse
-      // loudly rather than brick the table
-      require(files.nonEmpty,
-        "graft-commitlog: overwrite with an empty dataset is not " +
-          "supported (the table would have no live files)")
-    else if (files.nonEmpty)
-      // an append RECORDS its schema as the table's latest — refuse one
-      // that would narrow it (hide established columns) or change a type
-      CommitLogIngest.requireAppendCompatible(tableDir, schema)
-    // declare the layout with the commit that first uses it (a mismatch
-    // with an already-declared layout refuses here, before the switches),
-    // then flip the requested switches — at commit, never at planning
-    if (partitionCols.nonEmpty && files.nonEmpty)
-      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
-    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
-    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
+    val files = filesOf(messages)
+    prologue(files)
     if (overwrite) {
       CommitLogIngest.commitOverwrite(CommitLogPlanning.session, tableDir,
         adds = files, statsCol = statsCol, statsDir = Some(dataDir),
@@ -208,40 +186,17 @@ class CommitLogBatchWrite(tableDir: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    CommitLogWriteCommit.deleteAll(messages, dataDir)
-}
+    LayoutDirs.deleteQuiet(dataDir)
 
-/** Exactly-once streaming sink: every epoch is one commit carrying its
-  * files AND its ("txn", "queryId:epochId") marker; empty epochs still
-  * commit the txn marker (a metadata-only version — readers skip it) so
-  * the replay guard stays monotonic across idle triggers. */
-class CommitLogStreamingWrite(tableDir: String, schema: StructType,
-    queryId: String, statsCol: Option[String],
-    partitionCols: Seq[String] = Seq.empty,
-    autoCompact: AutoCompact = AutoCompact(false, 10L, 16, 128L << 20),
-    enableCdf: Boolean = false, enableDv: Boolean = false)
-    extends StreamingWrite {
-
-  private val dataDir =
-    s"$tableDir/data/q-${java.util.UUID.randomUUID().toString.take(12)}"
-
-  private[graft] def epochDir(epochId: Long) = s"$dataDir/e$epochId"
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    new CommitLogStreamingWriterFactory(dataDir,
-      CommitLogIngest.physicalWriteSchema(tableDir, schema), partitionCols)
-
+  /** Exactly-once streaming sink: every epoch is one commit carrying its
+    * files AND its ("txn", "queryId:epochId") marker; empty epochs still
+    * commit the txn marker (a metadata-only version — readers skip it) so
+    * the replay guard stays monotonic across idle triggers. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
     val spark = CommitLogPlanning.session
-    val files = CommitLogWriteCommit.filesOf(messages)
-    if (files.nonEmpty)
-      CommitLogIngest.requireAppendCompatible(tableDir, schema)
-    if (partitionCols.nonEmpty && files.nonEmpty)
-      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
-    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
-    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
+    val files = filesOf(messages)
+    prologue(files)
     // the txn replay guard lives INSIDE the claim loop (commitEpoch) so a
     // zombie instance of this query racing us cannot double-commit the
     // epoch — whichever instance wins the version claim, the other sees
@@ -254,7 +209,6 @@ class CommitLogStreamingWrite(tableDir: String, schema: StructType,
     if (!committed) {
       // replayed epoch after a restart (or a lost zombie race): the log
       // already has this epoch's commit — these files are orphans
-      files.foreach(p => Files.deleteIfExists(Paths.get(p)))
       LayoutDirs.deleteQuiet(epochDir(epochId))
     } else if (autoCompact.enabled) maybeCompact(spark, epochId, files.size)
   }
@@ -285,87 +239,93 @@ class CommitLogStreamingWrite(tableDir: String, schema: StructType,
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit =
-    CommitLogWriteCommit.deleteAll(messages, epochDir(epochId))
-}
+    LayoutDirs.deleteQuiet(epochDir(epochId))
 
-private[sources] object CommitLogWriteCommit {
-  def filesOf(messages: Array[WriterCommitMessage]): Seq[String] =
+  private def filesOf(messages: Array[WriterCommitMessage]): Seq[String] =
     messages.toSeq.collect {
       case m: CommitLogWriterCommit => m.files
     }.flatten.sorted
 
-  def deleteAll(messages: Array[WriterCommitMessage], dir: String): Unit = {
-    filesOf(messages).foreach(p => Files.deleteIfExists(Paths.get(p)))
-    LayoutDirs.deleteQuiet(dir)
+  /** What both commits do before they publish `files`. Refusals come
+    * first: a refused write must leave no trace, so every check runs
+    * before the switches flip or the layout is recorded. */
+  private def prologue(files: Seq[String]): Unit = {
+    if (overwrite)
+      // truncate-to-empty would leave a version with no live files, which
+      // the append-only read contract treats as retention loss — refuse
+      // loudly rather than brick the table
+      require(files.nonEmpty,
+        "graft-commitlog: overwrite with an empty dataset is not " +
+          "supported (the table would have no live files)")
+    else if (files.nonEmpty)
+      // an append RECORDS its schema as the table's latest — refuse one
+      // that would narrow it (hide established columns) or change a type
+      CommitLogIngest.requireAppendCompatible(tableDir, schema)
+    // declare the layout with the commit that first uses it (a mismatch
+    // with an already-declared layout refuses here, before the switches),
+    // then flip the requested switches — at commit, never at planning
+    if (partitionCols.nonEmpty && files.nonEmpty)
+      CommitLogIngest.recordPartitionCols(tableDir, partitionCols)
+    if (enableCdf) CommitLogIngest.setCdfEnabled(tableDir)
+    if (enableDv) CommitLogIngest.setDvEnabled(tableDir)
   }
 }
 
+/** Both DSv2 writes' executor side: a batch task writes under `dataDir`,
+  * a streaming task under its epoch's `e<epochId>` subdir. */
 class CommitLogWriterFactory(dataDir: String, schema: StructType,
-    partitionCols: Seq[String] = Seq.empty)
-    extends DataWriterFactory {
+    partitionCols: Seq[String], parquet: String => OutputWriter)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GroupRowWriter(dataDir, schema, s"part-$partitionId-$taskId",
-      partitionCols)
-}
+    new CommitLogDataWriter(dataDir, s"part-$partitionId-$taskId", schema,
+      partitionCols, parquet)
 
-class CommitLogStreamingWriterFactory(dataDir: String, schema: StructType,
-    partitionCols: Seq[String] = Seq.empty)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new GroupRowWriter(s"$dataDir/e$epochId", schema,
-      s"part-$partitionId-$taskId", partitionCols)
+    new CommitLogDataWriter(s"$dataDir/e$epochId",
+      s"part-$partitionId-$taskId", schema, partitionCols, parquet)
 }
 
-/** InternalRow → parquet Group: public parquet-mr API only, task-unique
-  * files, opened LAZILY so an empty partition writes nothing (no zero-row
-  * file debris). Speculative / retried attempts are distinguished by the
-  * uuid suffix and reclaimed by `abort`.
+/** InternalRow → Spark's parquet `OutputWriter`: task-unique files,
+  * opened LAZILY so an empty partition writes nothing (no zero-row file
+  * debris). Speculative / retried attempts are distinguished by the uuid
+  * suffix and reclaimed by `abort`.
   *
   * With `partitionCols`, rows route to one file per partition VALUE under
   * hive-style `col=value` dirs (the read side dir-prunes on them), and the
   * partition columns STAY in the file — the path layout is a pruning
   * accelerator, never where the data lives, so every existing reader
   * composes unchanged. */
-object GroupRowWriter {
+object CommitLogDataWriter {
   /** Per-task ceiling on simultaneously-open partition-value writers. */
   val MaxOpenWriters = 128
 }
 
-class GroupRowWriter(dir: String, schema: StructType, stem: String,
-    partitionCols: Seq[String] = Seq.empty)
+class CommitLogDataWriter(dir: String, stem: String, schema: StructType,
+    partitionCols: Seq[String], parquet: String => OutputWriter)
     extends DataWriter[InternalRow] {
 
-  private val parquetSchema: MessageType = CommitLogParquet.messageType(schema)
   private val partIdx: Array[Int] =
     partitionCols.map(schema.fieldIndex).toArray
   private val open =
-    scala.collection.mutable.LinkedHashMap.empty[String, ParquetWriter[Group]]
-  private val files = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var rows = 0L
+    scala.collection.mutable.LinkedHashMap.empty[String, OutputWriter]
 
-  private def writerFor(sub: String): ParquetWriter[Group] =
+  private def writerFor(sub: String): OutputWriter =
     open.getOrElseUpdate(sub, {
-      // every open ParquetWriter buffers its own row group: unbounded
+      // every open writer buffers its own row group: unbounded
       // per-value writers on a high-cardinality partition column is an
       // executor OOM, not a slow path — fail loudly with the remedy
       // (Spark's native dynamic-partition writer avoids this by sorting;
       // a repartition/sort by the partition columns gives each task few
       // simultaneous values)
-      require(open.size < GroupRowWriter.MaxOpenWriters,
+      require(open.size < CommitLogDataWriter.MaxOpenWriters,
         s"graft-commitlog: task opened ${open.size} partition-value " +
           "writers — the partition column's per-task cardinality is too " +
           "high; repartition (or sortWithinPartitions) by the partition " +
           "columns before writing, or partition by a coarser column")
-      val f = s"$dir$sub/$stem-" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      files += f
-      ExampleParquetWriter.builder(new HadoopPath(f))
-        .withType(parquetSchema)
-        .withConf(new Configuration())
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
+      parquet(s"$dir$sub/$stem-" +
+        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet")
     })
 
   override def write(row: InternalRow): Unit = {
@@ -382,23 +342,20 @@ class GroupRowWriter(dir: String, schema: StructType, stem: String,
         }
         sb.toString
       }
-    val g = new SimpleGroup(parquetSchema)
-    CommitLogParquet.writeStruct(g, schema, row)
-    writerFor(sub).write(g)
-    rows += 1
+    writerFor(sub).write(row)
   }
 
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_.close())
-    CommitLogWriterCommit(files.toSeq, rows)
+    CommitLogWriterCommit(open.values.map(_.path()).toSeq)
   }
 
   override def abort(): Unit = {
-    open.values.foreach(w => try w.close() catch { case _: Exception => })
-    files.foreach { f =>
-      val p = Paths.get(f)
+    open.values.foreach { w =>
+      try w.close() catch { case _: Exception => }
+      val p = Paths.get(w.path())
       Files.deleteIfExists(p)
-      // parquet-mr leaves a .crc sidecar on the local fs
+      // the local file system leaves a .crc sidecar
       Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
     }
   }
@@ -488,80 +445,4 @@ object PartitionPaths {
     * (empty for an unpartitioned file). */
   def segmentsOf(path: String): String =
     belowData(path).filter(_.contains('=')).mkString("/")
-}
-
-/** Spark ↔ parquet-mr type bridge shared by the writer: StructType →
-  * MessageType (standard 3-level LIST, annotated strings/timestamps/dates)
-  * and SpecializedGetters → Group values. Unsupported types fail loudly at
-  * schema-build time, before any file exists. */
-private[sources] object CommitLogParquet {
-
-  def messageType(schema: StructType): MessageType =
-    schema.fields.foldLeft(
-      Types.buildMessage(): Types.GroupBuilder[MessageType]) { (b, f) =>
-      b.addField(field(f.name, f.dataType))
-    }.named("spark_schema")
-
-  private def field(name: String, dt: DataType): ParquetType = dt match {
-    case LongType => Types.optional(INT64).named(name)
-    case TimestampType => Types.optional(INT64)
-      .as(LogicalTypeAnnotation.timestampType(true,
-        LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-    case IntegerType | ShortType | ByteType =>
-      Types.optional(INT32).named(name)
-    case DateType => Types.optional(INT32)
-      .as(LogicalTypeAnnotation.dateType()).named(name)
-    case DoubleType => Types.optional(DOUBLE).named(name)
-    case FloatType => Types.optional(FLOAT).named(name)
-    case BooleanType => Types.optional(BOOLEAN).named(name)
-    case StringType => Types.optional(BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named(name)
-    case BinaryType => Types.optional(BINARY).named(name)
-    case st: StructType =>
-      st.fields.foldLeft(Types.optionalGroup()) { (b, f) =>
-        b.addField(field(f.name, f.dataType))
-      }.named(name)
-    case ArrayType(elem, _) =>
-      Types.optionalList().element(field("element", elem)).named(name)
-    case other => throw new UnsupportedOperationException(
-      s"graft-commitlog writer: unsupported Spark type $other " +
-        s"for column $name")
-  }
-
-  def writeStruct(g: Group, st: StructType, row: InternalRow): Unit = {
-    var i = 0
-    while (i < st.length) {
-      if (!row.isNullAt(i)) add(g, i, st(i).dataType, row, i)
-      i += 1
-    }
-  }
-
-  private def add(g: Group, idx: Int, dt: DataType,
-      src: SpecializedGetters, ord: Int): Unit = dt match {
-    case LongType | TimestampType => g.add(idx, src.getLong(ord))
-    case IntegerType => g.add(idx, src.getInt(ord))
-    case ShortType => g.add(idx, src.getShort(ord).toInt)
-    case ByteType => g.add(idx, src.getByte(ord).toInt)
-    case DateType => g.add(idx, src.getInt(ord))
-    case DoubleType => g.add(idx, src.getDouble(ord))
-    case FloatType => g.add(idx, src.getFloat(ord))
-    case BooleanType => g.add(idx, src.getBoolean(ord))
-    case StringType => g.add(idx,
-      Binary.fromConstantByteArray(src.getUTF8String(ord).getBytes))
-    case BinaryType => g.add(idx,
-      Binary.fromConstantByteArray(src.getBinary(ord)))
-    case st: StructType =>
-      writeStruct(g.addGroup(idx), st, src.getStruct(ord, st.length))
-    case ArrayType(elem, _) =>
-      val list = g.addGroup(idx)
-      val arr = src.getArray(ord)
-      var k = 0
-      while (k < arr.numElements()) {
-        val entry = list.addGroup(0)
-        if (!arr.isNullAt(k)) add(entry, 0, elem, arr, k)
-        k += 1
-      }
-    case other => throw new UnsupportedOperationException(
-      s"graft-commitlog writer: unsupported Spark type $other")
-  }
 }

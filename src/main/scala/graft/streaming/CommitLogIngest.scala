@@ -816,7 +816,13 @@ object CommitLogIngest {
     * stats". */
   private def writeIndexRows(spark: SparkSession, tableDir: String,
       dataDir: String, k: String, version: Long): Unit = {
-    val df = spark.read.option("recursiveFileLookup", "true").parquet(dataDir)
+    // one commit's files share one write schema: read it from a footer,
+    // since a schema-less read would run an inference job
+    val schema = org.apache.spark.sql.graft.Shim.parquetFileSchema(spark,
+      LayoutDirs.dataFiles(dataDir).headOption.getOrElse(
+        throw new IllegalStateException(s"no data files under $dataDir")))
+    val df = spark.read.schema(schema)
+      .option("recursiveFileLookup", "true").parquet(dataDir)
     val integral = df.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.LongType ||
           f.dataType == org.apache.spark.sql.types.IntegerType ||

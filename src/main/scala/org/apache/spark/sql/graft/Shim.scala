@@ -1,12 +1,17 @@
 package org.apache.spark.sql.graft
 
-import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
@@ -17,8 +22,8 @@ import org.apache.spark.util.SerializableConfiguration
   * LogicalPlan↔DataFrame converters — the supported way for an extension
   * library to lift a custom Catalyst `Expression` / `LogicalPlan` into the
   * public API without a function registry, and to hand a connector
-  * Spark's own parquet reader. (This package placement is the standard
-  * Spark-extension idiom.) */
+  * Spark's own parquet reader and writer. (This package placement is the
+  * standard Spark-extension idiom.) */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -68,5 +73,40 @@ object Shim {
       SerializableConfiguration.broadcast(session.sparkContext, hc),
       readSchema, readSchema, partitionSchema, filters, None,
       new ParquetOptions(Map.empty[String, String], sql))
+  }
+
+  /** The Spark schema of the local parquet `file`, read from its footer
+    * on the driver by the rule Spark's schema inference applies to a
+    * file (`ParquetFileFormat.readSchemaFromFooter`) — without the job
+    * a schema-less `spark.read.parquet` runs for it. */
+  def parquetFileSchema(spark: SparkSession, file: String): StructType = {
+    val r = ParquetFileReader.open(
+      new LocalInputFile(java.nio.file.Paths.get(file)))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new Path(file), r.getFooter),
+      new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[classic.SparkSession].sessionState.conf))
+    finally r.close()
+  }
+
+  /** Spark's own parquet file writer for `dataSchema`, set up on the
+    * driver the way a file-source write sets it up
+    * (`ParquetFileFormat.prepareWrite` over the session's hadoop conf and
+    * parquet options). The job conf is broadcast: inside the task
+    * binary, its ~100 KB would be deserialized again by every task. The
+    * returned function, called in a task, creates the file at the given
+    * path. A type parquet cannot hold fails here, before any file
+    * exists. */
+  def parquetWriters(spark: SparkSession, dataSchema: StructType)
+      : String => OutputWriter = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val format = new ParquetFileFormat
+    DataSourceUtils.verifySchema(format, dataSchema)
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(session, job, Map.empty, dataSchema)
+    val conf = SerializableConfiguration.broadcast(session.sparkContext,
+      job.getConfiguration)
+    path => factory.newInstance(path, dataSchema,
+      new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID()))
   }
 }

@@ -69,6 +69,18 @@ class CommitLogJobCountSpec extends SparkSuite {
       s"jobs per epoch: ${perEpoch.toSeq.sorted}")
   }
 
+  test("a commitAppend with a statsCol runs three jobs, none to infer a schema") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("stats")
+    val df = (0L until 40L).map(k => (k, s"p$k")).toDF("id", "p")
+    val (v, jobs) =
+      jobsOf(CommitLogIngest.commitAppend(df, table, statsCol = Some("id")))
+    assert(v == 0L)
+    assert(jobs.size == 3, s"${jobs.size} job(s)")
+    assert(CommitLogIngest.snapshot(s, table).filter($"id" === 7L).count() == 1)
+  }
+
   test("resolving a new version's live set, schema and txn epoch runs no job") {
     val s = spark
     import s.implicits._

@@ -2,11 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 
-import graft.sources.{CommitLogStreamingWrite, CommitLogWriterCommit, LayoutDirs}
+import graft.sources.{CommitLogDataWriter, CommitLogWrite, CommitLogWriterCommit, LayoutDirs}
 import graft.streaming.CommitLogIngest
 
 /** The DataSource V2 WRITE contract of `graft-commitlog`: batch append and
@@ -29,13 +33,19 @@ class CommitLogWriteSpec extends SparkSuite {
       (1L, 7, 1.5, 2.5f, true, "alpha", Array[Byte](1, 2),
         java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456"),
         java.sql.Date.valueOf("2026-01-02"),
-        Seq(10L, 20L), Seq("x", "y"), (42L, "nested")),
+        Seq(10L, 20L), Seq("x", "y"), (42L, "nested"),
+        BigDecimal("12345.6789"), Map("k" -> 1L, "j" -> 2L),
+        java.time.LocalDateTime.parse("2026-01-02T03:04:05.123456")),
       (2L, -7, -1.5, -2.5f, false, "beta", Array[Byte](3),
         java.sql.Timestamp.valueOf("1999-12-31 23:59:59.0"),
         java.sql.Date.valueOf("1999-12-31"),
-        Seq.empty[Long], Seq.empty[String], (43L, "deep"))))
+        Seq.empty[Long], Seq.empty[String], (43L, "deep"),
+        BigDecimal("-0.0001"), Map.empty[String, Long],
+        java.time.LocalDateTime.parse("1999-12-31T23:59:59"))))
       .toDF("l", "i", "d", "f", "b", "str", "bin", "ts", "dt",
-        "al", "as", "st")
+        "al", "as", "st", "dec", "m", "ntz")
+      .withColumn("dec", col("dec").cast("decimal(18,4)"))
+    assert(df.schema("ntz").dataType == TimestampNTZType)
     CommitLogIngest.createTable(table, df.schema)
     df.write.format("graft-commitlog").option("path", table)
       .mode("append").save()
@@ -54,9 +64,62 @@ class CommitLogWriteSpec extends SparkSuite {
     }
     // and the V2 batch reader decodes the writer's files
     val v2 = s.read.format("graft-commitlog").option("path", table).load()
-      .select("l", "str", "al", "st").orderBy("l").collect()
-    assert(v2(0) == Row(1L, "alpha", Seq(10L, 20L), Row(42L, "nested")))
-    assert(v2(1) == Row(2L, "beta", Seq.empty[Long], Row(43L, "deep")))
+      .select("l", "str", "al", "st", "dec", "m", "ntz").orderBy("l")
+      .collect()
+    assert(v2(0) == Row(1L, "alpha", Seq(10L, 20L), Row(42L, "nested"),
+      new java.math.BigDecimal("12345.6789"), Map("k" -> 1L, "j" -> 2L),
+      java.time.LocalDateTime.parse("2026-01-02T03:04:05.123456")))
+    assert(v2(1) == Row(2L, "beta", Seq.empty[Long], Row(43L, "deep"),
+      new java.math.BigDecimal("-0.0001"), Map.empty[String, Long],
+      java.time.LocalDateTime.parse("1999-12-31T23:59:59")))
+  }
+
+  test("a partitioned append past the open-writer ceiling fails and leaves no files") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("ceiling")
+    val n = CommitLogDataWriter.MaxOpenWriters + 1
+    // one task meets n distinct partition values
+    val df = (0 until n).map(i => (i.toLong, i.toLong)).toDF("id", "day")
+      .coalesce(1)
+    val e = intercept[Exception] {
+      df.write.format("graft-commitlog").option("path", table)
+        .option("partitionCols", "day").mode("append").save()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(m =>
+        m.contains("partition-value writers") && m.contains("repartition"))),
+      e.toString)
+    assert(CommitLogIngest.latestVersion(table) == -1L,
+      "a failed write landed a version")
+    val data = Paths.get(table, "data")
+    val left =
+      if (!Files.exists(data)) Seq.empty
+      else {
+        val w = Files.walk(data)
+        try w.iterator().asScala.map(_.getFileName.toString)
+          .filter(f => f.endsWith(".parquet") || f.endsWith(".crc")).toList
+        finally w.close()
+      }
+    assert(left.isEmpty, s"a failed write left $left")
+  }
+
+  test("streaming sink writes a decimal column") {
+    val s = spark
+    import s.implicits._
+    val table = tmp("sink-dec") + "/t"
+    val in = MemoryStream[(Long, BigDecimal)](s)
+    val q = in.toDF().toDF("id", "amount")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp("sink-dec-ck"))
+      .start()
+    try {
+      in.addData((1L, BigDecimal("1.25")), (2L, BigDecimal("-3.5")))
+      q.processAllAvailable()
+    } finally q.stop()
+    val back = CommitLogIngest.snapshot(s, table).orderBy("id").collect()
+      .map(r => (r.getLong(0), BigDecimal(r.getDecimal(1)))).toSeq
+    assert(back == Seq((1L, BigDecimal("1.25")), (2L, BigDecimal("-3.5"))))
   }
 
   test("appends are atomic versions; overwrite truncates but old versions time-travel") {
@@ -163,12 +226,12 @@ class CommitLogWriteSpec extends SparkSuite {
     val schema = Seq((0L, "")).toDF("id", "p").schema
     CommitLogIngest.createTable(table, schema)
     val qid = "q-replay-test"
-    val sw = new CommitLogStreamingWrite(table, schema, qid, None)
-    // a restarted query run constructs a NEW StreamingWrite (fresh
+    val sw = new CommitLogWrite(table, schema, qid, overwrite = false, None)
+    // a restarted query run constructs a NEW write (fresh
     // writer-unique data dir) — replays come through sw2, never sw
-    val sw2 = new CommitLogStreamingWrite(table, schema, qid, None)
+    val sw2 = new CommitLogWrite(table, schema, qid, overwrite = false, None)
 
-    def fileFor(w: CommitLogStreamingWrite, epoch: Long, ids: Seq[Long])
+    def fileFor(w: CommitLogWrite, epoch: Long, ids: Seq[Long])
         : Seq[String] = {
       val dir = w.epochDir(epoch)
       ids.map(i => (i, s"p$i")).toDF("id", "p")
@@ -178,7 +241,8 @@ class CommitLogWriteSpec extends SparkSuite {
 
     // 12 committed epochs → the checkpoint at version 9 has passed
     (0L until 12L).foreach { e =>
-      sw.commit(e, Array(CommitLogWriterCommit(fileFor(sw, e, Seq(e)), 1)))
+      sw.commit(e, Array[WriterCommitMessage](
+        CommitLogWriterCommit(fileFor(sw, e, Seq(e)))))
     }
     assert(CommitLogIngest.latestVersion(table) == 11L)
     assert(CommitLogIngest.lastTxnEpoch(s, table, qid) == 11L)
@@ -186,7 +250,8 @@ class CommitLogWriteSpec extends SparkSuite {
     // REPLAY of epoch 5 (restart raced the engine's offset commit): its
     // rewritten files must be dropped, no version landed
     val replayFiles = fileFor(sw2, 5L, Seq(999L))
-    sw2.commit(5L, Array(CommitLogWriterCommit(replayFiles, 1)))
+    sw2.commit(5L,
+      Array[WriterCommitMessage](CommitLogWriterCommit(replayFiles)))
     assert(CommitLogIngest.latestVersion(table) == 11L,
       "replayed epoch must not land a new version")
     assert(replayFiles.forall(p => !Files.exists(Paths.get(p))),
@@ -202,7 +267,7 @@ class CommitLogWriteSpec extends SparkSuite {
     assert(CommitLogIngest.lastTxnEpoch(s, table, qid) == 11L,
       "txn guard must survive log retention via the checkpoint")
     val replay2 = fileFor(sw2, 3L, Seq(888L))
-    sw2.commit(3L, Array(CommitLogWriterCommit(replay2, 1)))
+    sw2.commit(3L, Array[WriterCommitMessage](CommitLogWriterCommit(replay2)))
     assert(CommitLogIngest.latestVersion(table) == 11L)
     assert(replay2.forall(p => !Files.exists(Paths.get(p))))
   }
