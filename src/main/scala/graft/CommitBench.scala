@@ -66,13 +66,15 @@ object CommitBench {
     def wave(w: Int, n: Int): Seq[(Long, String)] =
       (0 until n).map(i => (w.toLong * n + i, s"payload-$w-$i"))
 
-    // triggerSec=0 so the timed window measures the commit path, not a
-    // trigger cadence.
+    // no trigger interval, so the timed window measures the commit path,
+    // not a trigger cadence
     def run(table: String, ckpt: String, ws: Int, n: Int)
         : (Double, Double) = {
       val stream = MemoryStream[(Long, String)]
-      val q = CommitLogIngest.start(
-        stream.toDF().toDF("id", "payload"), table, ckpt, triggerSec = 0)
+      val q = stream.toDF().toDF("id", "payload")
+        .writeStream.format("graft-commitlog").option("path", table)
+        .option("checkpointLocation", ckpt)
+        .start()
       try {
         var early = -1.0
         var probeNs = 0L

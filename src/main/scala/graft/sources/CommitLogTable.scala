@@ -1352,7 +1352,7 @@ object CommitLogOffset {
 }
 
 /** Driver-side planning helpers shared by the batch and streaming scans. */
-private[sources] object CommitLogPlanning {
+private[graft] object CommitLogPlanning {
 
   /** Filter value as an exact Long — INTEGRAL widths only (truncating a
     * fractional value would STRENGTHEN a bound and prune matching

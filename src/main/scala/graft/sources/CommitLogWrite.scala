@@ -201,11 +201,14 @@ class CommitLogWrite(tableDir: String, schema: StructType, queryId: String,
     // zombie instance of this query racing us cannot double-commit the
     // epoch — whichever instance wins the version claim, the other sees
     // its txn row and reclaims these files as orphans
+    // an empty epoch records no schema: the append check above skipped
+    // it, so a narrower stream's idle epoch must not narrow the table
     val committed = CommitLogIngest.commitEpoch(spark, tableDir,
       adds = files,
       statsCol = statsCol.filter(_ => files.nonEmpty),
       statsDir = Some(epochDir(epochId)).filter(_ => files.nonEmpty),
-      schemaOf = Some(schema), queryId = queryId, epochId = epochId)
+      schemaOf = Some(schema).filter(_ => files.nonEmpty),
+      queryId = queryId, epochId = epochId)
     if (!committed) {
       // replayed epoch after a restart (or a lost zombie race): the log
       // already has this epoch's commit — these files are orphans

@@ -15,11 +15,10 @@ import graft.streaming.CommitLogIngest
   * AS OF version V" from the log (checkpoints carry the latest schema row,
   * so resolution survives retention like the live file set does).
   *
-  * The registry face ingests documents in two generations through the
-  * STREAMING commit path: generation 1 (even doc_id) commits
-  * (doc_id, source, n_chars); generation 2 (odd doc_id) adds a `quality`
-  * column mid-stream. The census reads the LATEST snapshot — generation-1
-  * rows must surface `quality` as NULL, generation-2 rows their real
+  * The registry face appends documents in two generations, four
+  * versions: generation 1 (even doc_id) commits (doc_id, source,
+  * n_chars); generation 2 (odd doc_id) adds a `quality` column. The
+  * census reads the LATEST snapshot — generation-1 rows must surface `quality` as NULL, generation-2 rows their real
   * values, with the NULL placement exact per generation. The DuckDB
   * oracle replays the generation rule from the original documents, so a
   * reader that dropped the new column, null-filled the wrong generation,
@@ -110,17 +109,14 @@ object CommitSchemaEvolution {
       val gen2 = docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("source"), col("n_chars"),
           (col("n_chars") % QualityMod).as("quality"))
-      // four commits through the streaming path (batchId-addressed):
-      // versions 0-1 are generation 1, the schema action rides the
-      // generation-2 commit at version 2
-      CommitLogIngest.commitOnce(
-        gen1.filter(col("doc_id") % 4 === 0), table, 0L)
-      CommitLogIngest.commitOnce(
-        gen1.filter(col("doc_id") % 4 === 2), table, 1L)
-      CommitLogIngest.commitOnce(
-        gen2.filter(col("doc_id") % 4 === 1), table, 2L)
-      CommitLogIngest.commitOnce(
-        gen2.filter(col("doc_id") % 4 === 3), table, 3L)
+      // four appends on the fresh table land as versions 0-3: versions
+      // 0-1 are generation 1, the schema action rides the generation-2
+      // commit at version 2
+      Seq(gen1.filter(col("doc_id") % 4 === 0),
+        gen1.filter(col("doc_id") % 4 === 2),
+        gen2.filter(col("doc_id") % 4 === 1),
+        gen2.filter(col("doc_id") % 4 === 3))
+        .foreach(CommitLogIngest.commitAppend(_, table))
       table
     }
 

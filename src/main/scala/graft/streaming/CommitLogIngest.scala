@@ -4,32 +4,29 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.LayoutDirs
 
-/** Streaming ingest INTO the commit-log table format (the write path;
-  * `sources/CommitLogReads` registers its reads): each micro-batch lands
-  * as ONE table version — the batch's rows are written to a fresh
-  * immutable file set, then add-actions for those files are committed as
-  * the log partition `log/version=N`. Readers compose unchanged: "the
-  * table at version V" is the log's last-action-wins path set, so a reader
-  * pinned at V is isolated from every later commit, and the latest
-  * snapshot is always a consistent prefix of the stream — the
-  * lakehouse contract a 100-TB pipeline lands raw data under.
+/** Commit-log table WRITES (`sources/CommitLogReads` registers its
+  * reads): every version is one atomic claim — data files land in a
+  * writer-unique dir nothing references yet, the version's actions are
+  * staged under a dot-prefixed dir, and a rename to `log/version=N` makes
+  * them visible whole. Readers compose unchanged: "the table at version
+  * V" is the log's last-action-wins path set, so a reader pinned at V is
+  * isolated from every later commit, and the latest snapshot is always a
+  * consistent prefix of the writes — the lakehouse contract a 100-TB
+  * pipeline lands raw data under. Batch appends go through
+  * [[commitAppend]]; streams go through the `graft-commitlog` DSv2 sink
+  * (`sources/CommitLogWrite`), one version per epoch.
   *
-  * Replay safety (at-least-once foreachBatch): the LOG is the source of
-  * truth, not the marker. A replayed batch first checks its log
-  * partition — if the version is already committed, only the fast-path
-  * marker is repaired; if not, the data dir is rewritten (clobbering any
-  * partial files a crash left, which nothing references yet) and the
-  * log partition written. VISIBILITY is a rename: every log partition is
-  * staged under a dot-prefixed dir and moved into place whole, so
-  * neither a crash-replay nor a concurrent offset poll can mistake an
-  * in-flight version for a committed one. On a real object store the
-  * per-version log commit needs put-if-absent (the Delta
-  * `_delta_log/N.json` contention rule); a local filesystem test gets
-  * atomicity from the rename.
+  * Replay safety: each sink epoch commits a ("txn", "queryId:epochId")
+  * action in the same version as its files, and [[commitEpoch]] checks
+  * that guard against the version it is about to claim, so a replayed or
+  * zombie epoch commits nothing. A crash between the data write and the
+  * claim leaves only files no version references, which [[vacuum]]
+  * reclaims. On a real object store the per-version claim needs
+  * put-if-absent (the Delta `_delta_log/N.json` contention rule); a local
+  * filesystem gets atomicity from the rename.
   *
   * METADATA is [[LogReplay]]'s job, on the driver with no Spark job:
   * action files are read and written directly, and one memo per table
@@ -50,25 +47,11 @@ object CommitLogIngest {
   /** Checkpoint after versions CheckpointEvery−1, 2·CheckpointEvery−1, … */
   val CheckpointEvery = 10L
 
-  private def markerPath(dir: String) = Paths.get(dir, "_last_batch")
-  private def ckptMarkerPath(dir: String) = Paths.get(dir, "_last_ckpt")
   private def schemaMarkerPath(dir: String) = Paths.get(dir, "_schema")
 
-  private[graft] def lastCommitted(dir: String): Long =
-    try new String(Files.readAllBytes(markerPath(dir)), "UTF-8").trim.toLong
-    catch { case _: Exception => -1L }
-
+  /** The newest checkpoint on disk, −1 when none. */
   private[graft] def lastCheckpoint(dir: String): Long =
-    try new String(Files.readAllBytes(ckptMarkerPath(dir)), "UTF-8")
-      .trim.toLong
-    catch { case _: Exception => -1L }
-
-  private def writeMarker(path: java.nio.file.Path, v: Long): Unit = {
-    Files.createDirectories(path.getParent)
-    Files.write(path, v.toString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-      StandardOpenOption.TRUNCATE_EXISTING)
-  }
+    LogReplay.checkpoints(dir).lastOption.getOrElse(-1L)
 
   // ---- schema as a log action ---------------------------------------------
 
@@ -209,56 +192,6 @@ object CommitLogIngest {
   def schemaAt(spark: SparkSession, tableDir: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
     LogReplay.resolve(tableDir, version).schemaType
-
-  /** Persist the state at `upTo` as `log_ckpt/c=<upTo>` (the Delta rule:
-    * the new checkpoint is the previous one plus the tail, so retention
-    * of old log partitions never costs live files), then advance the
-    * marker. */
-  private def writeLogCheckpoint(tableDir: String, upTo: Long): Unit = {
-    LogReplay.writeCheckpoint(tableDir, upTo)
-    writeMarker(ckptMarkerPath(tableDir), upTo)
-  }
-
-  /** Commit one micro-batch as table version `batchId`, exactly once.
-    * With `statsCol` set, per-file min/max/count stats over that column
-    * are captured AT COMMIT TIME into `index/version=N` — the streaming
-    * half of the E-123 story (the batch side is [[commitAppend]]):
-    * index rows are keyed by immutable path, written in the same
-    * idempotence unit as the log version, so the index can never refer
-    * to a version the log doesn't have. */
-  private[graft] def commitOnce(batch: DataFrame, tableDir: String,
-      batchId: Long, statsCol: Option[String] = None): Unit = {
-    if (batchId <= lastCommitted(tableDir)) return
-    requireIndexColMatch(tableDir, statsCol)
-    val spark = batch.sparkSession
-    val versionDir = s"$tableDir/log/version=$batchId"
-    if (batch.isEmpty) {
-      // EMPTY batch → a data-free TOMBSTONE version (action "empty"), not
-      // a skipped version number: with every batchId materialized on disk,
-      // a missing version dir always means retention — `changes` can fail
-      // loudly on a pruned range instead of mistaking it for an idle
-      // trigger (readers ignore any action other than add/remove).
-      if (!LayoutDirs.hasParquetData(versionDir))
-        LogReplay.writeVersion(tableDir, batchId, Seq(("empty", "")))
-    } else if (!LayoutDirs.hasParquetData(versionDir)) {
-      val dataDir = s"$tableDir/data/b$batchId"
-      toPhysical(batch, tableDir).write.mode("overwrite").parquet(dataDir)
-      statsCol.foreach(k => writeIndexRows(spark, tableDir, dataDir, k,
-        batchId))
-      // the mapping-merged json BEFORE the marker overwrite, used for both
-      val mergedJson = withMapping(batch.schema, tableDir).json
-      LogReplay.writeVersion(tableDir, batchId,
-        LayoutDirs.dataFiles(dataDir).map(("add", _)) ++
-          schemaActionFor(tableDir, batch.schema))
-      writeSchemaMarker(tableDir, mergedJson)
-    }
-    // the marker guard makes a crash-replay of a completed checkpoint a
-    // no-op instead of a second resolve-and-overwrite of the same dir
-    if ((batchId + 1) % CheckpointEvery == 0 &&
-        lastCheckpoint(tableDir) < batchId)
-      writeLogCheckpoint(tableDir, batchId)
-    writeMarker(markerPath(tableDir), batchId)
-  }
 
   /** The stats-indexed column's name, recorded beside the index so a
     * READER (the DSv2 scan's file-skipping path) can recognize which
@@ -557,20 +490,19 @@ object CommitLogIngest {
       // durable event — no crash window in either direction (a lost
       // race deletes the stage, marker included)
       retire.foreach { phys =>
-        Files.write(stage.resolve(RetireMarkerPrefix + phys),
+        Files.write(stage.log.resolve(RetireMarkerPrefix + phys),
           Array.emptyByteArray,
           StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       }
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
+      if (tryClaimVersion(tableDir, stage.log, latest + 1)) {
         // eager side-file mirror (the cache retiredCols self-heals from
         // markers anyway; this just keeps the common path scan-free)
         retire.foreach(retireCol(tableDir, _))
         if (cdfEnabled(tableDir)) writeCdfEmpty(tableDir, latest + 1)
-        postWin(spark, tableDir, latest + 1, statsCol = None,
-          statsDir = None, schemaOf = Some(newSt))
+        postWin(spark, tableDir, latest + 1, stage, schemaOf = Some(newSt))
         return latest + 1
       }
-      LayoutDirs.deleteQuiet(stage.toString)
+      stage.drop()
     }
     -1L // unreachable
   }
@@ -632,10 +564,7 @@ object CommitLogIngest {
     *
     * Versions stay CONTIGUOUS: a writer can only win v after observing
     * v-1 committed (its first attempt is latest+1, and every retry moves
-    * to a version whose predecessor just beat it). A table is written
-    * EITHER through this path (version = claim order) or through the
-    * streaming [[commitOnce]] path (version = batchId) — mixing the two
-    * addressing disciplines on one table is a caller error.
+    * to a version whose predecessor just beat it).
     *
     * Returns the committed version. */
   def commitAppend(batch: DataFrame, tableDir: String,
@@ -664,9 +593,10 @@ object CommitLogIngest {
       txn: Option[String] = None)
       : Long = {
     requireIndexColMatch(tableDir, statsCol)
-    val stage = stageActions(spark, tableDir, adds, removes, schemaOf, txn)
-    val v = claimVersion(tableDir, stage)
-    postWin(spark, tableDir, v, statsCol, statsDir, schemaOf)
+    val stage = stageActions(spark, tableDir, adds, removes, schemaOf, txn,
+      statsCol = statsCol, statsDir = statsDir)
+    val v = claimVersion(tableDir, stage.log)
+    postWin(spark, tableDir, v, stage, schemaOf)
     v
   }
 
@@ -727,14 +657,14 @@ object CommitLogIngest {
       txn: Option[String], op: Option[String],
       extra: Seq[(String, String)] = Nil,
       onWin: Long => Unit = _ => ()): Boolean = {
-    val stage =
-      stageActions(spark, tableDir, adds, removes, schemaOf, txn, op, extra)
-    if (tryClaimVersion(tableDir, stage, readAt + 1)) {
+    val stage = stageActions(spark, tableDir, adds, removes, schemaOf, txn,
+      op, extra, statsCol, statsDir)
+    if (tryClaimVersion(tableDir, stage.log, readAt + 1)) {
       onWin(readAt + 1)
-      postWin(spark, tableDir, readAt + 1, statsCol, statsDir, schemaOf)
+      postWin(spark, tableDir, readAt + 1, stage, schemaOf)
       true
     } else {
-      LayoutDirs.deleteQuiet(stage.toString)
+      stage.drop()
       false
     }
   }
@@ -750,11 +680,24 @@ object CommitLogIngest {
     * overwrite do O(table) work on the commit path). */
   private[graft] val LayoutOps = Set("optimize", "zorder", "cluster")
 
+  /** A staged commit: the log partition a claim renames into place, and
+    * the commit's index rows (with their stats column), staged before the
+    * claim so they are published right after it — a reader that sees the
+    * version finds its stats. */
+  private final case class Staged(log: java.nio.file.Path,
+      index: Option[(java.nio.file.Path, String)]) {
+    def drop(): Unit =
+      (log +: index.map(_._1).toSeq).foreach(p =>
+        LayoutDirs.deleteQuiet(p.toString))
+  }
+
   private def stageActions(spark: SparkSession, tableDir: String,
       adds: Seq[String], removes: Seq[String],
       schemaOf: Option[org.apache.spark.sql.types.StructType],
       txn: Option[String], op: Option[String] = None,
-      extra: Seq[(String, String)] = Nil): java.nio.file.Path = {
+      extra: Seq[(String, String)] = Nil,
+      statsCol: Option[String] = None,
+      statsDir: Option[String] = None): Staged = {
     // CHECK constraints gate every commit of NEW rows (append, overwrite,
     // DML rewrites — including the DV update's re-appended post-images)
     // right here — the one choke point every path stages through.
@@ -764,26 +707,32 @@ object CommitLogIngest {
         op.contains("update-dv")))
       enforceConstraints(spark, tableDir, adds,
         schemaOf.orElse(declaredSchema(tableDir)))
-    LogReplay.stageVersion(tableDir,
+    val index = for (k <- statsCol; d <- statsDir)
+      yield (writeIndexRows(spark, tableDir, d, k), k)
+    Staged(LogReplay.stageVersion(tableDir,
       removes.map(("remove", _)) ++ adds.map(("add", _)) ++
         schemaOf.toSeq.flatMap(st => schemaActionFor(tableDir, st)) ++
-        txn.map(("txn", _)) ++ op.map(("op", _)) ++ extra)
+        txn.map(("txn", _)) ++ op.map(("op", _)) ++ extra), index)
   }
 
-  /** Post-claim bookkeeping: v is exclusively ours now, so the index and
-    * checkpoint writes race nobody (index rows are keyed by immutable
-    * path and versioned dirs are unique per claim). */
+  /** Post-claim bookkeeping: v is exclusively ours now, so publishing
+    * the staged index rows as `index/version=v` and the checkpoint write
+    * race nobody (index rows are keyed by immutable path and versioned
+    * dirs are unique per claim). */
   private def postWin(spark: SparkSession, tableDir: String, v: Long,
-      statsCol: Option[String], statsDir: Option[String],
+      stage: Staged,
       schemaOf: Option[org.apache.spark.sql.types.StructType]): Unit = {
+    stage.index.foreach { case (rows, k) =>
+      val target = Paths.get(tableDir, "index", s"version=$v")
+      LayoutDirs.deleteQuiet(target.toString) // a rebuilt table's leftover
+      Files.move(rows, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      recordIndexCol(tableDir, k)
+    }
     // the marker must carry the SAME json the schema action recorded
     // (withMapping merges the declared column mapping; the pre-overwrite
     // marker is still the old generation here, so the merge sees it)
     schemaOf.foreach(st =>
       writeSchemaMarker(tableDir, withMapping(st, tableDir).json))
-    statsCol.foreach { k =>
-      statsDir.foreach(d => writeIndexRows(spark, tableDir, d, k, v))
-    }
     maybeCheckpoint(spark, tableDir, v)
   }
 
@@ -815,7 +764,7 @@ object CommitLogIngest {
     * evolution); readers merge-read and treat a missing field as "no
     * stats". */
   private def writeIndexRows(spark: SparkSession, tableDir: String,
-      dataDir: String, k: String, version: Long): Unit = {
+      dataDir: String, k: String): java.nio.file.Path = {
     // one commit's files share one write schema: read it from a footer,
     // since a schema-less read would run an inference job
     val schema = org.apache.spark.sql.graft.Shim.parquetFileSchema(spark,
@@ -873,12 +822,13 @@ object CommitLogIngest {
       (if (!integral.contains(k)) Seq.empty
        else Seq(org.apache.spark.sql.graft.BloomAgg.of(
          col(k).cast("long")).as("bloom")))
+    val stage = Paths.get(tableDir, "index",
+      s".stage-${java.util.UUID.randomUUID().toString.take(12)}")
     df.groupBy(input_file_name().as("path"))
       .agg(aggCols.head, aggCols.tail: _*)
       .withColumn("path", LayoutDirs.plainPath(col("path")))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$tableDir/index/version=$version")
-    recordIndexCol(tableDir, k)
+      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    stage
   }
 
   /** The highest epoch a ("txn", "queryId:epoch") action records for
@@ -909,7 +859,7 @@ object CommitLogIngest {
       schemaOf: Option[org.apache.spark.sql.types.StructType],
       queryId: String, epochId: Long): Boolean = {
     requireIndexColMatch(tableDir, statsCol)
-    var stage: java.nio.file.Path = null
+    var stage: Staged = null
     while (true) {
       // pin the claim version FIRST, then evaluate the guard: the guard
       // then covers all table state <= latest, and a twin's commit landing
@@ -919,14 +869,15 @@ object CommitLogIngest {
       // read would let a twin's commit slip between the two.)
       val latest = latestVersion(tableDir)
       if (lastTxnEpoch(spark, tableDir, queryId) >= epochId) {
-        if (stage != null) LayoutDirs.deleteQuiet(stage.toString)
+        if (stage != null) stage.drop()
         return false
       }
       if (stage == null)
         stage = stageActions(spark, tableDir, adds, Seq.empty, schemaOf,
-          txn = Some(s"$queryId:$epochId"))
-      if (tryClaimVersion(tableDir, stage, latest + 1)) {
-        postWin(spark, tableDir, latest + 1, statsCol, statsDir, schemaOf)
+          txn = Some(s"$queryId:$epochId"), statsCol = statsCol,
+          statsDir = statsDir)
+      if (tryClaimVersion(tableDir, stage.log, latest + 1)) {
+        postWin(spark, tableDir, latest + 1, stage, schemaOf)
         return true
       }
       // conflict: someone landed latest+1 — loop re-checks the guard
@@ -1009,15 +960,16 @@ object CommitLogIngest {
     }
   }
 
-  /** Checkpoint trigger shared by both commit paths. JVM-level lock so
-    * concurrent writers crossing different boundaries don't interleave
-    * marker writes (the marker is monotonic fast-path only — resolution
-    * always lists checkpoint dirs). */
+  /** Persist the state at `v` as `log_ckpt/c=<v>` every
+    * [[CheckpointEvery]] versions (the Delta rule: the previous checkpoint
+    * plus the tail, so retention of old log partitions never costs live
+    * files). The write keeps a checkpoint already on disk; the JVM-level
+    * lock keeps this process's writers from building the same one twice. */
   private val ckptLock = new Object
   private def maybeCheckpoint(spark: SparkSession, tableDir: String,
       v: Long): Unit =
     if ((v + 1) % CheckpointEvery == 0) ckptLock.synchronized {
-      if (lastCheckpoint(tableDir) < v) writeLogCheckpoint(tableDir, v)
+      LogReplay.writeCheckpoint(tableDir, v)
     }
 
   // ---- DML through the log (copy-on-write) --------------------------------
@@ -2458,11 +2410,17 @@ object CommitLogIngest {
       .select("path").collect().headOption.map(_.getString(0))
   }
 
+  /** How long a data file no version references must have sat before
+    * [[vacuum]] treats it as a crashed write's debris (Delta's default
+    * retention, which bounds its untracked-file sweep the same way). */
+  private[graft] val OrphanGraceMs = 7L * 24 * 3600 * 1000
+
   /** Physically delete every data file no retained version (>= retainMin)
     * references — the VACUUM shape: history below the retention floor
-    * becomes unreadable, everything at or above it is untouched. Run
-    * BEFORE pruning the log partitions themselves (reachability is
-    * computed from the log). Returns the deleted paths. */
+    * becomes unreadable, everything at or above it is untouched, and
+    * unclaimed files older than [[OrphanGraceMs]] go too. Run BEFORE
+    * pruning the log partitions themselves (reachability is computed from
+    * the log). Returns the deleted paths. */
   def vacuum(spark: SparkSession, tableDir: String,
       retainMin: Long): Seq[String] = {
     val latest = latestVersion(tableDir)
@@ -2486,52 +2444,46 @@ object CommitLogIngest {
     val drop = (all -- keep).toSeq.sorted
       .filter(p => Paths.get(p).toAbsolutePath.normalize.startsWith(root))
     drop.foreach(p => Files.deleteIfExists(Paths.get(p)))
+    // ORPHANS: files a write landed under data/ but no version ever
+    // claimed (a crash between the data write and the claim). Only those
+    // older than OrphanGraceMs go — a younger one may belong to a write
+    // still on its way to its claim (the Delta untracked-file rule).
+    // Paths compare as real paths, so a symlinked table root can never
+    // make a referenced file look unreferenced.
+    def real(p: String) =
+      try Paths.get(p).toRealPath() catch {
+        case _: java.io.IOException => Paths.get(p).toAbsolutePath.normalize
+      }
+    val referenced = (all ++ keep).map(real)
+    val cutoff = System.currentTimeMillis() - OrphanGraceMs
+    val orphans =
+      if (!Files.isDirectory(Paths.get(tableDir, "data"))) Seq.empty[String]
+      else LayoutDirs.dataFiles(s"$tableDir/data")
+        .filterNot(p => referenced(real(p)))
+        .filter(p =>
+          Files.getLastModifiedTime(Paths.get(p)).toMillis < cutoff)
+    orphans.foreach(p => Files.deleteIfExists(Paths.get(p)))
     // stored change data obeys the SAME retention horizon (round-12
     // ADVICE: update-heavy CDF tables leaked cdf/version=v dirs without
     // bound) — a version below the floor is unreadable, so its change
     // rows are unreadable too
-    val cdfRoot = Paths.get(tableDir, "cdf")
-    val cdfDropped =
-      if (!Files.exists(cdfRoot)) Seq.empty[String]
-      else {
-        val s = Files.list(cdfRoot)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("version="))
-            .filter { p =>
-              val v = p.getFileName.toString.stripPrefix("version=").toLong
-              v < math.max(retainMin, 0L)
-            }
-            .map { p => LayoutDirs.deleteQuiet(p.toString); p.toString }
-            .toSeq
-        } finally s.close()
-      }
+    val cdfDropped = versionDirs(Paths.get(tableDir, "cdf")).collect {
+      case (v, p) if v < math.max(retainMin, 0L) =>
+        LayoutDirs.deleteQuiet(p.toString); p.toString
+    }
     // deletion-vector masks are CURRENT STATE, not history, so their
     // reclaim rule is liveness, not age: a dv/version=N dir is dead
     // exactly when NO retained version's live set contains any path it
     // masks (each mask is self-describing — its own rows name the files
     // it covers; a mask below the floor whose file is still live must
     // survive, or every retained snapshot resurrects the deleted rows)
-    val dvRoot = Paths.get(tableDir, "dv")
-    val dvDropped =
-      if (!Files.exists(dvRoot)) Seq.empty[String]
-      else {
-        val s = Files.list(dvRoot)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("version="))
-            .filter { p =>
-              spark.read.parquet(p.toString)
-                .select("path").distinct().collect()
-                .forall(r => !keep.contains(r.getString(0)))
-            }
-            .map { p => LayoutDirs.deleteQuiet(p.toString); p.toString }
-            .toSeq
-        } finally s.close()
-      }
-    drop ++ cdfDropped ++ dvDropped
+    val dvDropped = versionDirs(Paths.get(tableDir, "dv")).collect {
+      case (_, p) if spark.read.parquet(p.toString)
+          .select("path").distinct().collect()
+          .forall(r => !keep.contains(r.getString(0))) =>
+        LayoutDirs.deleteQuiet(p.toString); p.toString
+    }
+    drop ++ orphans ++ cdfDropped ++ dvDropped
   }
 
   /** TIME-BASED retention (the production face of [[vacuum]]): reclaim
@@ -2563,26 +2515,14 @@ object CommitLogIngest {
     require(latest >= 0, s"$tableDir has no committed version")
     val cutoffMs =
       System.currentTimeMillis() - (retentionHours * 3600000.0).toLong
-    val d = Paths.get(s"$tableDir/log")
-    val survivors =
-      if (!Files.exists(d)) Seq.empty[Long]
-      else {
-        val s = Files.list(d)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("version="))
-            .flatMap { p =>
-              val v = p.getFileName.toString.stripPrefix("version=").toLong
-              // same commit clock as timestampAsOf (claim-time marker,
-              // mtime fallback) — the two surfaces must agree on when a
-              // version committed or retention could reclaim a version
-              // timestampAsOf still resolves to
-              val ts = commitTimeOf(p).getOrElse(Long.MaxValue)
-              if (ts >= cutoffMs) Some(v) else None
-            }.toSeq
-        } finally s.close()
-      }
+    val survivors = versionDirs(Paths.get(tableDir, "log")).collect {
+      // same commit clock as timestampAsOf (claim-time marker, mtime
+      // fallback) — the two surfaces must agree on when a version
+      // committed or retention could reclaim a version timestampAsOf
+      // still resolves to
+      case (v, p) if commitTimeOf(p).getOrElse(Long.MaxValue) >= cutoffMs =>
+        v
+    }
     val floor = math.min(survivors.minOption.getOrElse(latest), latest)
     (floor, vacuum(spark, tableDir, floor))
   }
@@ -2721,19 +2661,10 @@ object CommitLogIngest {
   def versionAt(tableDir: String, tsMillis: Long): Long = {
     val d = Paths.get(s"$tableDir/log")
     require(Files.exists(d), s"$tableDir has no log — nothing committed")
-    val s = Files.list(d)
-    val candidates =
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("version="))
-          .flatMap { p =>
-            val v = p.getFileName.toString.stripPrefix("version=").toLong
-            val ok = commitTimeOf(p).exists(_ <= tsMillis)
-            if (ok && LayoutDirs.hasParquetData(p.toString)) Some(v)
-            else None
-          }.toSeq
-      } finally s.close()
+    val candidates = versionDirs(d).collect {
+      case (v, p) if commitTimeOf(p).exists(_ <= tsMillis) &&
+          LayoutDirs.hasParquetData(p.toString) => v
+    }
     require(candidates.nonEmpty,
       s"timestampAsOf $tsMillis predates every surviving version of " +
         s"$tableDir (earliest surviving commit is newer, or retention " +
@@ -2820,12 +2751,12 @@ object CommitLogIngest {
     }
     val matAdds = outDir.map(LayoutDirs.dataFiles).getOrElse(Seq.empty)
     val stage = stageActions(spark, dstDir, clean ++ matAdds, Seq.empty,
-      schemaOf = schema, txn = None, op = Some("clone"))
-    require(tryClaimVersion(dstDir, stage, 0L),
-      s"shallowClone: $dstDir version 0 appeared mid-clone")
-    postWin(spark, dstDir, 0L,
+      schemaOf = schema, txn = None, op = Some("clone"),
       statsCol = indexedCol(dstDir).filter(_ => matAdds.nonEmpty),
-      statsDir = outDir, schemaOf = schema)
+      statsDir = outDir)
+    require(tryClaimVersion(dstDir, stage.log, 0L),
+      s"shallowClone: $dstDir version 0 appeared mid-clone")
+    postWin(spark, dstDir, 0L, stage, schemaOf = schema)
     0L
   }
 
@@ -2960,33 +2891,32 @@ object CommitLogIngest {
 
   /** Highest COMMITTED version. One driver-side dir listing, then a
     * committed-data probe from the HIGHEST version downward — the first
-    * hit answers (a lone in-flight dir is the max one under a sequential
-    * writer), so a poll costs O(1) probes, not O(commits) walks. A
-    * version dir exists from the moment its write STARTS (the
-    * committer's _temporary phase), so only dirs whose part file has
-    * landed (= the log write's job commit, the atomic rename) count.
-    * After retention deleted every log partition, the checkpoint marker
-    * still names the version it captured. */
-  def latestVersion(tableDir: String): Long = {
-    val d = Paths.get(s"$tableDir/log")
-    val fromDirs =
-      if (!Files.exists(d)) -1L
-      else {
-        val s = Files.list(d)
-        val versions =
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.map(_.getFileName.toString)
-              .collect { case n if n.startsWith("version=") =>
-                n.stripPrefix("version=").toLong }
-              .toSeq.sorted(Ordering.Long.reverse)
-          } finally s.close()
-        versions
-          .find(v => LayoutDirs.hasParquetData(s"$tableDir/log/version=$v"))
-          .getOrElse(-1L)
+    * hit answers, so a poll costs O(1) probes, not O(commits) walks (a
+    * version dir only appears by the claim rename, with its action file
+    * inside). After retention deleted every log partition, the newest
+    * checkpoint names the version it captured. */
+  def latestVersion(tableDir: String): Long =
+    versionDirs(Paths.get(tableDir, "log")).sortBy(-_._1)
+      .collectFirst {
+        case (v, p) if LayoutDirs.hasParquetData(p.toString) => v
       }
-    math.max(fromDirs, lastCheckpoint(tableDir))
-  }
+      .getOrElse(lastCheckpoint(tableDir))
+
+  /** The `version=N` children of `dir` as (N, path), empty when `dir` is
+    * missing — the listing every log, cdf and dv scan starts from. */
+  private def versionDirs(dir: java.nio.file.Path)
+      : Seq[(Long, java.nio.file.Path)] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(p => (p, p.getFileName.toString))
+          .collect { case (p, n) if n.startsWith("version=") =>
+            (n.stripPrefix("version=").toLong, p) }
+          .toList
+      } finally s.close()
+    }
 
   /** The live file set at `version` (see [[liveState]]). */
   private[graft] def liveFiles(spark: SparkSession, tableDir: String,
@@ -3049,16 +2979,18 @@ object CommitLogIngest {
   }
 
   /** Point lookup at the latest version through log + commit-time index:
-    * live paths from the log, overlap prune from the index, then a scan
-    * over only the matching files with the key filter pushed down. A key
-    * outside every file's range is an EMPTY result, not an error. */
+    * live paths from the log, the V2 scan's index consult (min/max and
+    * bloom) to prune them, then a scan over only the matching files with
+    * the key filter pushed down. A key outside every file's range is an
+    * EMPTY result, not an error. */
   def pointRead(spark: SparkSession, tableDir: String, statsCol: String,
       key: Long): DataFrame = {
     if (!LayoutDirs.hasParquetData(s"$tableDir/index"))
       throw new IllegalStateException(
         s"$tableDir was ingested without statsCol — no commit-time index " +
           "exists, so pointRead has nothing to prune with (pass " +
-          "statsCol to start/commitOnce, or scan snapshot() instead)")
+          "statsCol to commitAppend or the graft-commitlog writer, or " +
+          "scan snapshot() instead)")
     val latest = latestVersion(tableDir)
     val (live, dvs) = liveState(spark, tableDir, latest)
     // both reads go under the declared schema as of `latest`: on a
@@ -3070,23 +3002,9 @@ object CommitLogIngest {
     def readAs(paths: Seq[String]): DataFrame =
       readWithDv(spark, tableDir, paths, dvs,
         schemaAt(spark, tableDir, latest))
-    // mergeSchema: index rows from pre-bloom versions lack the sketch
-    // column — the merged read null-fills them, and a NULL sketch keeps
-    // its file (prune is a speedup, never a correctness dependency)
-    val idx = spark.read.option("mergeSchema", "true")
-      .parquet(s"$tableDir/index")
-      .filter(col("path").isin(live: _*))
-      .filter(col("min_key") <= key && col("max_key") >= key)
-    // BLOOM consult (E-177): on a high-cardinality interleaved key the
-    // [min,max] overlap keeps most files; the per-file sketch cuts the
-    // survivors to the true containers (± fpp). Judged executor-side —
-    // sketch bytes never reach the driver, only paths do.
-    val files = (if (idx.schema.fieldNames.contains("bloom"))
-        idx.filter(col("bloom").isNull ||
-          org.apache.spark.sql.graft.BloomAgg.mightContainAny(
-            col("bloom"), Seq(key)))
-      else idx)
-      .select("path").collect().map(_.getString(0)).toSeq
+    val files = graft.sources.CommitLogPlanning.pruneByIndex(spark,
+      tableDir, live, Map(statsCol -> ((key, key))),
+      eqKeys = Map(statsCol -> Seq(key)))
     if (files.isEmpty)
       // empty result, O(1): one file supplies the schema, the false
       // filter folds to an empty relation — never plan over the live set
@@ -3107,7 +3025,7 @@ object CommitLogIngest {
       skipChangeCommits)
     val declared = schemaAt(spark, tableDir, toInclusive)
     if (paths.isEmpty) {
-      // the range holds only metadata versions (empty-batch tombstones /
+      // the range holds only metadata versions (empty sink epochs /
       // schema actions) — a legitimate zero-row poll, NOT an error. The
       // schema is the one declared as of `toInclusive` when recorded,
       // else one live file supplies it (folded to an empty relation by
@@ -3403,13 +3321,13 @@ object CommitLogIngest {
     // there is retention past its position, which is data loss for it.
     // retention guard for a MID-STREAM consumer (from >= 0): log
     // partitions at or below the latest checkpoint are deletable, and
-    // empty batches land tombstone versions, so a MISSING dir at or below
+    // every claim lands the next version, so a MISSING dir at or below
     // that floor is always retention that pruned past this consumer's
     // position — data loss for it. Fail loudly instead of silently
     // skipping those versions' rows (above the floor nothing may be
     // pruned, so a missing dir there is just a never-committed id).
     if (fromExclusive >= 0) {
-      val floor = LogReplay.checkpoints(tableDir).lastOption.getOrElse(-1L)
+      val floor = lastCheckpoint(tableDir)
       val pruned = ((fromExclusive + 1) to math.min(toInclusive, floor))
         .filterNot(v => LayoutDirs.hasParquetData(s"$logDir/version=$v"))
       require(pruned.isEmpty,
@@ -3448,21 +3366,5 @@ object CommitLogIngest {
           "consumer fresh from the latest snapshot")
     base ++ tail.filterNot(t => changeVersions.contains(t._1))
       .flatMap(_._2.collect { case ("add", p) => p })
-  }
-
-  /** Start the commit loop. `triggerSec <= 0` drops the processing-time
-    * trigger (micro-batches fire as data lands — the test/bench mode);
-    * `statsCol` turns on commit-time per-file stats capture. */
-  def start(rows: DataFrame, tableDir: String, checkpointDir: String,
-      triggerSec: Int = 1, statsCol: Option[String] = None)
-      : StreamingQuery = {
-    val w = rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitOnce(batch, tableDir, batchId, statsCol)
-      }
-    (if (triggerSec > 0)
-       w.trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
-     else w).start()
   }
 }

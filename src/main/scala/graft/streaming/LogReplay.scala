@@ -81,7 +81,7 @@ private[graft] object LogReplay {
             val q = id.substring(0, i)
             if (t.get(q).forall(_._1 < e)) t = t.updated(q, (e, id, v))
           }
-        case _ => () // dv (below), op, empty: no state
+        case _ => () // dv (below), op, legacy empty tombstones: no state
       }
       rows.foreach {
         case (v, "dv", p) if l.contains(p) =>
@@ -193,9 +193,8 @@ private[graft] object LogReplay {
     readCheckpoint(tableDir, c)._1.collect { case (_, "add", p) => p }
 
   /** Checkpoint versions present on disk (`log_ckpt/c=N` with committed
-    * data), ascending. The `_last_ckpt` marker is only a fast path:
-    * resolution must see a checkpoint whose marker write crashed, and
-    * time travel below the latest checkpoint needs the older ones. */
+    * data), ascending — time travel below the latest checkpoint needs the
+    * older ones. */
   def checkpoints(tableDir: String): Seq[Long] = {
     val d = Paths.get(s"$tableDir/log_ckpt")
     if (!Files.exists(d)) return Seq.empty
@@ -237,16 +236,6 @@ private[graft] object LogReplay {
     stageFile(Paths.get(tableDir, "log"), ActionSchema,
       rows.map { case (a, p) =>
         (g: SimpleGroup) => g.append("action", a).append("path", p); () })
-
-  /** Write version `v`'s rows in place of a missing or uncommitted dir
-    * (the streaming foreachBatch path, whose version is its batch id). */
-  def writeVersion(tableDir: String, v: Long,
-      rows: Seq[(String, String)]): Unit = {
-    val target = Paths.get(versionDir(tableDir, v))
-    val stage = stageVersion(tableDir, rows)
-    LayoutDirs.deleteQuiet(target.toString) // a crashed write's debris
-    Files.move(stage, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** Persist the state at `upTo` as `log_ckpt/c=<upTo>`. A checkpoint
     * already on disk is complete (it appeared by rename) and is a

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CommitLogIngest
@@ -63,6 +64,22 @@ class CheckConstraintSpec extends SparkSuite {
     append(table, Seq((-1L, "ok-now", -10L)).toDF("id", "p", "n"))
     assert(CommitLogIngest.snapshot(s, table)
       .filter(col("id") === -1L).count() == 1L)
+    // a streamed epoch gets the same gate: refused, no version lands
+    val vStream = CommitLogIngest.latestVersion(table)
+    val in = MemoryStream[(Long, String, Long)](s)
+    val q = in.toDF().toDF("id", "p", "n")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp("basic-ck"))
+      .start()
+    try {
+      in.addData((200L, "streamed", 7L))
+      val es = intercept[Exception](q.processAllAvailable())
+      assert(chain(es).exists(_.contains("n_scaled")), es.toString)
+    } finally q.stop()
+    assert(CommitLogIngest.latestVersion(table) == vStream,
+      "a refused streamed epoch must not commit")
+    assert(CommitLogIngest.snapshot(s, table)
+      .filter(col("id") === 200L).isEmpty)
   }
 
   test("ADD scans existing data and refuses; unresolvable expression " +

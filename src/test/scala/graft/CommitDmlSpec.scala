@@ -304,10 +304,12 @@ class CommitDmlSpec extends SparkSuite {
     // v6: OPTIMIZE moved bytes, changed nothing
     assert(feed.count(_._1 == 6L) == 0,
       "a pure layout commit must contribute no change rows")
-    // a metadata-only range (an empty-batch tombstone) is a zero-row
-    // poll with the feed's schema intact, not an error
-    CommitLogIngest.commitOnce(
-      Seq.empty[(Long, String)].toDF("id", "src"), table, 7L)
+    // a metadata-only range (an empty sink epoch: its txn action only) is
+    // a zero-row poll with the feed's schema intact, not an error
+    assert(CommitLogIngest.commitEpoch(s, table, adds = Seq.empty,
+      statsCol = None, statsDir = None, schemaOf = None,
+      queryId = "idle", epochId = 0L))
+    assert(CommitLogIngest.latestVersion(table) == 7L)
     val idle = CommitLogIngest.changeFeed(s, table, 6L, 7L)
     assert(idle.count() == 0 &&
       idle.columns.contains("_change_type") &&

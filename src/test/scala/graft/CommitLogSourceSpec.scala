@@ -34,8 +34,10 @@ class CommitLogSourceSpec extends SparkSuite {
     // writer: commit two waves before the reader exists (schema inference
     // needs a committed version)
     val in = MemoryStream[(Long, String)]
-    val writer = CommitLogIngest.start(
-      in.toDF().toDF("id", "payload"), table, writerCkpt, triggerSec = 0)
+    val writer = in.toDF().toDF("id", "payload")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", writerCkpt)
+      .start()
     def wave(w: Int): Unit = {
       in.addData((0 until 50).map(i => (w * 50L + i, s"p$w-$i")))
       writer.processAllAvailable()
@@ -91,10 +93,11 @@ class CommitLogSourceSpec extends SparkSuite {
           (i % 13) / 2.0, "{}")
       }
     val in = MemoryStream[(Long, Long, Long, String, Double, String)]
-    val writer = CommitLogIngest.start(
-      in.toDF().toDF("event_id", "ts", "user_id", "event_type", "value",
-        "props"),
-      table, tmp("loop-wck"), triggerSec = 0)
+    val writer = in.toDF()
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp("loop-wck"))
+      .start()
     try {
       in.addData(wave(0)); writer.processAllAvailable()
       val consumer = graft.sources.IncrementalRollup.start(

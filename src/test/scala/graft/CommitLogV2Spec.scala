@@ -26,9 +26,9 @@ class CommitLogV2Spec extends SparkSuite {
     val table = tmp("admission")
     // 6 committed versions of 10 rows each BEFORE any reader exists
     (0 until 6).foreach { v =>
-      CommitLogIngest.commitOnce(
+      assert(CommitLogIngest.commitAppend(
         (0 until 10).map(i => (v * 10L + i, s"p$v-$i")).toDF("id", "p"),
-        table, v.toLong)
+        table) == v.toLong)
     }
     val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
     val q = s.readStream.format("graft-commitlog")
@@ -62,7 +62,8 @@ class CommitLogV2Spec extends SparkSuite {
           Array.tabulate(4)(d => (v + i + d) / 3.0f),
           java.sql.Timestamp.valueOf(s"2024-01-0${v + 1} 00:00:${i % 60}"))
       }.toDF("id", "name", "score", "flag", "emb", "ts")
-    (0 until 3).foreach(v => CommitLogIngest.commitOnce(wave(v), table, v.toLong))
+    (0 until 3).foreach(v =>
+      assert(CommitLogIngest.commitAppend(wave(v), table) == v.toLong))
 
     def canon(df: DataFrame): Seq[Row] =
       df.select("id", "name", "score", "flag", "emb", "ts")
@@ -88,9 +89,9 @@ class CommitLogV2Spec extends SparkSuite {
     val table = tmp("pushdown")
     // 8 versions with disjoint id ranges, stats-indexed on id
     (0 until 8).foreach { v =>
-      CommitLogIngest.commitOnce(
+      assert(CommitLogIngest.commitAppend(
         (0 until 100).map(i => (v * 100L + i, s"p$v-$i")).toDF("id", "p"),
-        table, v.toLong, statsCol = Some("id"))
+        table, statsCol = Some("id")) == v.toLong)
     }
     val live = CommitLogIngest
       .liveFiles(s, table, CommitLogIngest.latestVersion(table))
@@ -129,7 +130,8 @@ class CommitLogV2Spec extends SparkSuite {
     def wave(v: Int): DataFrame =
       (0 until 100).map(i => (v * 100L + i, s"p$v-$i")).toDF("id", "p")
         .repartitionByRange(4, col("id"))
-    CommitLogIngest.commitOnce(wave(0), table, 0L, statsCol = Some("id"))
+    assert(CommitLogIngest.commitAppend(wave(0), table,
+      statsCol = Some("id")) == 0L)
 
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     CommitLogReadTracker.enable()
@@ -147,8 +149,8 @@ class CommitLogV2Spec extends SparkSuite {
     try {
       q.processAllAvailable()
       (1 until 3).foreach { v =>
-        CommitLogIngest.commitOnce(wave(v), table, v.toLong,
-          statsCol = Some("id"))
+        assert(CommitLogIngest.commitAppend(wave(v), table,
+          statsCol = Some("id")) == v.toLong)
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -175,9 +177,9 @@ class CommitLogV2Spec extends SparkSuite {
     val s = spark
     import s.implicits._
     val table = tmp("prune")
-    CommitLogIngest.commitOnce(
+    assert(CommitLogIngest.commitAppend(
       (0 until 50).map(i => (i.toLong, s"p$i", i / 3.0)).toDF("id", "p", "v"),
-      table, 0L)
+      table) == 0L)
     val df = s.read.format("graft-commitlog").option("path", table)
       .load().select("id")
     assert(df.as[Long].collect().sorted.toSeq == (0L until 50L))
@@ -192,8 +194,8 @@ class CommitLogV2Spec extends SparkSuite {
     }
     // pruning composes with schema generations: project a column that
     // only the NEWER generation's files carry
-    CommitLogIngest.commitOnce(
-      Seq((100L, "x", 1.0, 7L)).toDF("id", "p", "v", "extra"), table, 1L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((100L, "x", 1.0, 7L)).toDF("id", "p", "v", "extra"), table) == 1L)
     val evolved = s.read.format("graft-commitlog").option("path", table)
       .load().select("id", "extra")
     val got = evolved.collect()
@@ -208,12 +210,12 @@ class CommitLogV2Spec extends SparkSuite {
     import s.implicits._
     val table = tmp("rowgroup")
     // generation 1: (id, p); generation 2 adds a double score
-    CommitLogIngest.commitOnce(
+    assert(CommitLogIngest.commitAppend(
       (0 until 50).map(i => (i.toLong, s"p${i % 5}")).toDF("id", "p"),
-      table, 0L)
-    CommitLogIngest.commitOnce(
+      table) == 0L)
+    assert(CommitLogIngest.commitAppend(
       (50 until 100).map(i => (i.toLong, s"p${i % 5}", i / 10.0))
-        .toDF("id", "p", "score"), table, 1L)
+        .toDF("id", "p", "score"), table) == 1L)
     val df = s.read.format("graft-commitlog").option("path", table).load()
 
     def ids(q: org.apache.spark.sql.DataFrame): Seq[Long] =
@@ -249,12 +251,12 @@ class CommitLogV2Spec extends SparkSuite {
     // stats column is a DOUBLE: GreaterThan(score, 5.5) truncated to a
     // long bound would wrongly prune a file whose keys live in (5, 6) —
     // the reader must open it and return its matching rows
-    CommitLogIngest.commitOnce(
-      Seq((1L, 5.6), (2L, 5.9)).toDF("id", "score"), table, 0L,
-      statsCol = Some("score"))
-    CommitLogIngest.commitOnce(
-      Seq((3L, 9.0)).toDF("id", "score"), table, 1L,
-      statsCol = Some("score"))
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, 5.6), (2L, 5.9)).toDF("id", "score"), table,
+      statsCol = Some("score")) == 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((3L, 9.0)).toDF("id", "score"), table,
+      statsCol = Some("score")) == 1L)
     val got = s.read.format("graft-commitlog").option("path", table).load()
       .filter(col("score") > 5.5).select("id")
       .as[Long].collect().sorted.toSeq
@@ -280,9 +282,9 @@ class CommitLogV2Spec extends SparkSuite {
     import s.implicits._
     val table = tmp("availnow")
     (0 until 6).foreach { v =>
-      CommitLogIngest.commitOnce(
+      assert(CommitLogIngest.commitAppend(
         (0 until 10).map(i => (v * 10L + i, s"p$i")).toDF("id", "p"),
-        table, v.toLong)
+        table) == v.toLong)
     }
     val batches = scala.collection.mutable.ArrayBuffer.empty[Int]
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -300,8 +302,8 @@ class CommitLogV2Spec extends SparkSuite {
     // a commit landing AFTER the run started is NOT part of "available
     // now" — the drain must stop at the frozen end offset
     assert(q.awaitTermination(60000), "AvailableNow query must self-stop")
-    CommitLogIngest.commitOnce(
-      Seq((999L, "late")).toDF("id", "p"), table, 6L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((999L, "late")).toDF("id", "p"), table) == 6L)
     assert(seen.synchronized(seen.sorted.toSeq) == (0L until 60L),
       s"drain must deliver exactly the startup backlog")
     assert(batches.synchronized(batches.count(_ > 0)) == 3,
@@ -313,8 +315,8 @@ class CommitLogV2Spec extends SparkSuite {
     val s = spark
     import s.implicits._
     val table = tmp("declared")
-    CommitLogIngest.commitOnce(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table, 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table) == 0L)
     val declared = StructType(Seq(
       StructField("p", StringType), // reordered on purpose
       StructField("id", LongType),

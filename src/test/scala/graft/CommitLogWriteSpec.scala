@@ -325,5 +325,31 @@ class CommitLogWriteSpec extends SparkSuite {
           _.contains("changes column type"))), e.toString)
     } finally q.stop()
     assertNoTrace(table)
+    // a second stream with a NARROWER frame: its idle epoch commits only
+    // its txn action, its first rows are refused, and the column it lacks
+    // still reads
+    val narrow = MemoryStream[Long](s)
+    val q2 = narrow.toDF().toDF("id")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp("narrow-stream-ck"))
+      .start()
+    try {
+      narrow.addData()
+      q2.processAllAvailable()
+      assert(CommitLogIngest.latestVersion(table) == 1L)
+      assert(CommitLogIngest.declaredSchema(table)
+        .exists(_.fieldNames.toSeq == Seq("id", "day")),
+        "an idle epoch of a narrower stream narrowed the table")
+      narrow.addData(3L, 4L)
+      val e = intercept[Exception](q2.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(
+          _.contains("lacks table column(s) day"))), e.toString)
+    } finally q2.stop()
+    assert(CommitLogIngest.latestVersion(table) == 1L,
+      "a refused append landed a version")
+    val snap = CommitLogIngest.snapshot(s, table)
+    assert(snap.columns.toSeq == Seq("id", "day"))
+    assert(snap.select("day").as[Long].collect().toSeq == Seq(1L))
   }
 }

@@ -21,11 +21,11 @@ class CommitSchemaSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     val table = tmp("asof")
-    CommitLogIngest.commitOnce(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table, 0L)
-    CommitLogIngest.commitOnce(
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table) == 0L)
+    assert(CommitLogIngest.commitAppend(
       Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("id", "p", "extra"),
-      table, 1L)
+      table) == 1L)
 
     assert(CommitLogIngest.schemaAt(s, table, 0L).get.fieldNames.toSeq ==
       Seq("id", "p"))
@@ -53,8 +53,8 @@ class CommitSchemaSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     val table = tmp("stream")
-    CommitLogIngest.commitOnce(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table, 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table) == 0L)
 
     // reader started BEFORE the evolution: schema fixed at start — later
     // generations project down to it (no crash, no phantom column)
@@ -70,9 +70,9 @@ class CommitSchemaSpec extends SparkSuite {
       .start()
     try {
       qOld.processAllAvailable()
-      CommitLogIngest.commitOnce(
+      assert(CommitLogIngest.commitAppend(
         Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("id", "p", "extra"),
-        table, 1L)
+        table) == 1L)
       qOld.processAllAvailable()
     } finally qOld.stop()
     assert(oldGen.synchronized(oldGen.sorted.toList) ==
@@ -103,12 +103,12 @@ class CommitSchemaSpec extends SparkSuite {
     val table = tmp("retention")
     val every = CommitLogIngest.CheckpointEvery.toInt
     // generation 1 at v0, evolution at v1, then data past the checkpoint
-    CommitLogIngest.commitOnce(
-      Seq((0L, "g1")).toDF("id", "p"), table, 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((0L, "g1")).toDF("id", "p"), table) == 0L)
     (1 until every + 2).foreach { v =>
-      CommitLogIngest.commitOnce(
+      assert(CommitLogIngest.commitAppend(
         Seq((v.toLong, s"g2-$v", v * 10L)).toDF("id", "p", "extra"),
-        table, v.toLong)
+        table) == v.toLong)
     }
     val c = CommitLogIngest.lastCheckpoint(table)
     assert(c == every - 1L)

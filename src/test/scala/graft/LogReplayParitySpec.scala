@@ -75,7 +75,6 @@ class LogReplayParitySpec extends SparkSuite {
         } finally st.close()
       }
     }
-    Files.copy(Paths.get(table, "_last_ckpt"), Paths.get(dst, "_last_ckpt"))
     dst
   }
 
@@ -177,11 +176,18 @@ class LogReplayParitySpec extends SparkSuite {
     assert(want(want.keys.max).txns.size == 3,
       s"expected three query ids: ${want(want.keys.max).txns}")
 
-    // the foreachBatch path's empty batches land ("empty", "") tombstones
+    // logs written before every version came from a claim hold
+    // ("empty", "") tombstone versions: stage and rename them by hand
     val fb = tmp("fb") + "/t"
     (0L until 22L).foreach { b =>
-      val rows = if (b % 3 == 1) Seq.empty[(Long, String)] else Seq((b, "x"))
-      CommitLogIngest.commitOnce(rows.toDF("id", "p"), fb, b)
+      if (b % 3 == 1) {
+        Files.move(LogReplay.stageVersion(fb, Seq(("empty", ""))),
+          Paths.get(fb, "log", s"version=$b"))
+        if ((b + 1) % CommitLogIngest.CheckpointEvery == 0)
+          LogReplay.writeCheckpoint(fb, b)
+      } else
+        assert(CommitLogIngest.commitAppend(Seq((b, "x")).toDF("id", "p"),
+          fb) == b)
     }
     checkParity(fb)
 

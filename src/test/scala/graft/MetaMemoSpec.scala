@@ -22,8 +22,8 @@ class MetaMemoSpec extends SparkSuite {
     import s.implicits._
     val table = Files.createTempDirectory("graft-memospec").toString + "/t"
 
-    CommitLogIngest.commitOnce(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table, 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), table) == 0L)
     // resolve (and memoize) v0 while it is latest
     val live0 = CommitLogIngest.liveState(spark, table, 0L)._1
     assert(live0.nonEmpty)
@@ -31,8 +31,8 @@ class MetaMemoSpec extends SparkSuite {
 
     // v1: append — the same-version re-read must come from the memo's
     // key space without seeing v1's files, and v1 must see both commits
-    CommitLogIngest.commitOnce(
-      Seq((3L, "c")).toDF("id", "p"), table, 1L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((3L, "c")).toDF("id", "p"), table) == 1L)
     assert(CommitLogIngest.liveState(spark, table, 0L)._1 == live0,
       "v0's live set changed after a later commit (stale/leaky memo)")
     val live1 = CommitLogIngest.liveState(spark, table, 1L)._1
@@ -43,8 +43,8 @@ class MetaMemoSpec extends SparkSuite {
     // v2: schema-evolving append — schemaAt(v1) was never resolved
     // before this commit; schemaAt must still answer per-version, not
     // per-table
-    CommitLogIngest.commitOnce(
-      Seq((4L, "d", 40L)).toDF("id", "p", "extra"), table, 2L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((4L, "d", 40L)).toDF("id", "p", "extra"), table) == 2L)
     val s1 = CommitLogIngest.schemaAt(spark, table, 1L)
     val s2 = CommitLogIngest.schemaAt(spark, table, 2L)
     assert(s2.exists(_.fieldNames.contains("extra")),

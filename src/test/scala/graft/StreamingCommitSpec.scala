@@ -1,18 +1,42 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.sources.{CommitLogWrite, LayoutDirs}
 import graft.streaming.CommitLogIngest
 
-/** The commit loop's contract: one version per micro-batch, snapshot
-  * isolation for pinned readers, replay/crash idempotence with the log
-  * as the source of truth, and checkpoint-restart continuity. */
+/** The streaming commit contract of the `graft-commitlog` sink: one
+  * version per epoch, snapshot isolation for pinned readers, the txn
+  * guard that makes a replayed epoch a no-op, unclaimed files left for
+  * vacuum, and checkpoint-restart continuity. */
 class StreamingCommitSpec extends SparkSuite {
 
   private def tmp(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-commit-$prefix")
     d.toFile.deleteOnExit()
     d.toString
+  }
+
+  /** A `graft-commitlog` sink stream of `stream` as (id, payload). */
+  private def sink(stream: MemoryStream[(Long, String)], table: String,
+      ckpt: String, statsCol: Option[String] = None): StreamingQuery = {
+    val w = stream.toDF().toDF("id", "payload")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", ckpt)
+    statsCol.fold(w)(k => w.option("statsCol", k)).start()
+  }
+
+  /** Files written into `w`'s dir for `epoch` and never committed: what
+    * a sink task leaves when the driver dies before the claim. */
+  private def unclaimed(w: CommitLogWrite, epoch: Long,
+      rows: DataFrame): Seq[String] = {
+    rows.coalesce(1).write.mode("overwrite").parquet(w.epochDir(epoch))
+    LayoutDirs.dataFiles(w.epochDir(epoch))
   }
 
   test("commits isolate pinned readers, heal both crash windows, survive restart") {
@@ -22,10 +46,8 @@ class StreamingCommitSpec extends SparkSuite {
     val table = tmp("table")
     val ckpt = tmp("ckpt")
     val stream = MemoryStream[(Long, String)]
-    def start() = CommitLogIngest.start(
-      stream.toDF().toDF("id", "payload"), table, ckpt, triggerSec = 0)
 
-    val q1 = start()
+    val q1 = sink(stream, table, ckpt)
     val pinned =
       try {
         stream.addData(Seq((1L, "a"), (2L, "b")))
@@ -41,30 +63,48 @@ class StreamingCommitSpec extends SparkSuite {
         pin
       } finally q1.stop()
 
-    // replayed batchId (marker fast path): a poison batch must be a no-op
-    val last = CommitLogIngest.lastCommitted(table)
+    // a replayed (queryId, epoch): the txn guard commits nothing
+    val qid = q1.id.toString
+    val last = CommitLogIngest.latestVersion(table)
     assert(last > pinned)
-    CommitLogIngest.commitOnce(
-      Seq((99L, "poison")).toDF("id", "payload"), table, last)
-    assert(CommitLogIngest.snapshot(s, table).count() == 3,
-      "a replayed batchId re-committed through the marker fast path")
+    val epoch = CommitLogIngest.lastTxnEpoch(s, table, qid)
+    assert(epoch >= 1L)
+    val poison = Seq((99L, "poison")).toDF("id", "payload")
+    def write() =
+      new CommitLogWrite(table, poison.schema, qid, overwrite = false, None)
+    assert(!CommitLogIngest.commitEpoch(s, table,
+      unclaimed(write(), epoch, poison), statsCol = None, statsDir = None,
+      schemaOf = Some(poison.schema), queryId = qid, epochId = epoch),
+      "a replayed epoch committed")
+    assert(CommitLogIngest.latestVersion(table) == last,
+      "a replayed epoch landed a version")
+    assert(CommitLogIngest.snapshot(s, table).count() == 3)
 
-    // crash between log-append and marker: wipe the marker and replay —
-    // the log already has the version, so only the marker is repaired
-    java.nio.file.Files.delete(java.nio.file.Paths.get(table, "_last_batch"))
-    val logRows = s.read.parquet(s"$table/log").count()
-    CommitLogIngest.commitOnce(
-      Seq((99L, "poison")).toDF("id", "payload"), table, last)
-    assert(s.read.parquet(s"$table/log").count() == logRows,
-      "marker-crash replay appended a duplicate log version")
+    // a crash between the data write and the claim: no version references
+    // the epoch's files, so no read sees them; vacuum keeps them while a
+    // claim could still be on its way, and reclaims them after that
+    val orphans = unclaimed(write(), epoch + 1, poison)
+    val added = s.read.parquet(s"$table/log")
+      .filter(col("action") === "add").select("path").as[String]
+      .collect().toSet
+    assert(orphans.nonEmpty && !orphans.exists(added))
     assert(CommitLogIngest.snapshot(s, table)
       .filter(col("payload") === "poison").isEmpty,
-      "marker-crash replay rewrote committed data")
-    assert(CommitLogIngest.lastCommitted(table) == last,
-      "marker was not repaired")
+      "an unclaimed file reached a read")
+    assert(!CommitLogIngest.vacuum(s, table, 0L).exists(orphans.contains),
+      "vacuum reclaimed a write younger than the orphan grace")
+    val crashedAt = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - CommitLogIngest.OrphanGraceMs - 60000L)
+    orphans.foreach(p => Files.setLastModifiedTime(Paths.get(p), crashedAt))
+    val reclaimed = CommitLogIngest.vacuum(s, table, 0L)
+    assert(orphans.forall(reclaimed.contains) &&
+      orphans.forall(p => !Files.exists(Paths.get(p))),
+      s"vacuum left unclaimed files: $reclaimed")
+    assert(CommitLogIngest.snapshot(s, table).count() == 3,
+      "vacuum touched a committed file")
 
-    // restart from the same checkpoint: batchIds continue, no duplicates
-    val q2 = start()
+    // restart from the same checkpoint: epochs continue, no duplicates
+    val q2 = sink(stream, table, ckpt)
     try {
       stream.addData(Seq((4L, "d")))
       q2.processAllAvailable()
@@ -90,21 +130,26 @@ class StreamingCommitSpec extends SparkSuite {
     assert(e0.getMessage.contains("no committed version"))
 
     // two data commits, no statsCol: pointRead names the missing index
-    CommitLogIngest.commitOnce(Seq((1L, "a")).toDF("id", "p"), table, 0L)
-    CommitLogIngest.commitOnce(Seq((2L, "b")).toDF("id", "p"), table, 1L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((1L, "a")).toDF("id", "p"), table) == 0L)
+    assert(CommitLogIngest.commitAppend(
+      Seq((2L, "b")).toDF("id", "p"), table) == 1L)
     val e1 = intercept[IllegalStateException] {
       CommitLogIngest.pointRead(s, table, "id", 1L).count()
     }
     assert(e1.getMessage.contains("without statsCol"))
 
-    // an EMPTY batch lands a tombstone version: the id is materialized on
-    // disk (no gap), counts as committed, and adds no rows to any read
-    CommitLogIngest.commitOnce(
-      Seq.empty[(Long, String)].toDF("id", "p"), table, 2L)
+    // an EMPTY sink epoch lands a version with its txn action only: the
+    // version is on disk (no gap), counts as committed, and adds no rows
+    // to any read
+    assert(CommitLogIngest.commitEpoch(s, table, adds = Seq.empty,
+      statsCol = None, statsDir = None,
+      schemaOf = Some(Seq((0L, "")).toDF("id", "p").schema),
+      queryId = "idle", epochId = 0L))
     assert(graft.sources.LayoutDirs.hasParquetData(s"$table/log/version=2"))
     assert(CommitLogIngest.latestVersion(table) == 2L)
     assert(CommitLogIngest.snapshot(s, table).count() == 2)
-    // a poll covering ONLY the tombstone is a zero-row batch with the
+    // a poll covering ONLY the empty epoch is a zero-row batch with the
     // table's schema, not an error
     val only = CommitLogIngest.changes(s, table, 1L, 2L)
     assert(only.isEmpty && only.columns.toSeq == Seq("id", "p"))
@@ -113,8 +158,8 @@ class StreamingCommitSpec extends SparkSuite {
     // boundary, prune a version at the floor, then poll across it
     val every = CommitLogIngest.CheckpointEvery.toInt
     (3 until every + 2).foreach { v =>
-      CommitLogIngest.commitOnce(
-        Seq((v.toLong, s"v$v")).toDF("id", "p"), table, v.toLong)
+      assert(CommitLogIngest.commitAppend(
+        Seq((v.toLong, s"v$v")).toDF("id", "p"), table) == v.toLong)
     }
     assert(CommitLogIngest.lastCheckpoint(table) == every - 1)
     graft.sources.LayoutDirs.deleteQuiet(s"$table/log/version=5")
@@ -126,7 +171,7 @@ class StreamingCommitSpec extends SparkSuite {
     // a fresh consumer is unaffected: it composes from the checkpoint,
     // which still references v5's DATA file (dropping the log partition
     // is metadata retention, not data deletion) — 11 one-row data
-    // versions (0..11 minus the tombstone at 2)
+    // versions (0..11 minus the empty epoch at 2)
     assert(CommitLogIngest.changes(s, table, -1L, every.toLong + 1)
       .count() == every.toLong + 1)
   }
@@ -156,9 +201,7 @@ class StreamingCommitSpec extends SparkSuite {
     val table = tmp("stats-table")
     val ckpt = tmp("stats-ckpt")
     val stream = MemoryStream[(Long, String)]
-    val q = CommitLogIngest.start(
-      stream.toDF().toDF("id", "payload"), table, ckpt, triggerSec = 0,
-      statsCol = Some("id"))
+    val q = sink(stream, table, ckpt, statsCol = Some("id"))
     try {
       (0 until 8).foreach { w =>
         stream.addData((0 until 100).map(i => (w * 100L + i, s"p$w-$i")))
@@ -213,8 +256,7 @@ class StreamingCommitSpec extends SparkSuite {
     val table = tmp("ckpt-table")
     val ckpt = tmp("ckpt-ckpt")
     val stream = MemoryStream[(Long, String)]
-    val q = CommitLogIngest.start(
-      stream.toDF().toDF("id", "payload"), table, ckpt, triggerSec = 0)
+    val q = sink(stream, table, ckpt)
     val waves = (CommitLogIngest.CheckpointEvery + 2).toInt
     try {
       (0 until waves).foreach { i =>
@@ -261,8 +303,7 @@ class StreamingCommitSpec extends SparkSuite {
     // checkpoint + tail (the Delta rule) — a full-log re-replay over the
     // pruned history would silently drop every pre-retention file
     val every = CommitLogIngest.CheckpointEvery.toInt
-    val q2 = CommitLogIngest.start(
-      stream.toDF().toDF("id", "payload"), table, ckpt, triggerSec = 0)
+    val q2 = sink(stream, table, ckpt)
     try {
       (waves until 2 * every).foreach { i =>
         stream.addData(Seq((i.toLong, s"w$i")))
@@ -294,22 +335,23 @@ class StreamingCommitSpec extends SparkSuite {
     }
     assert(ex.getMessage.contains("retention"),
       s"below-floor read failed for the wrong reason: ${ex.getMessage}")
-    // crash-replay of a completed checkpoint boundary: wipe the batch
-    // marker (the crash window after writeLogCheckpoint) and replay the
-    // checkpoint batch — the guard must not resolve-and-overwrite the
-    // checkpoint it would be reading from
+    // a replay of the checkpoint epoch commits nothing, so it cannot
+    // rewrite the checkpoint it would be reading from
     val ckptDir = s"$table/log_ckpt/c=${2 * every - 1}"
     val before2 = graft.sources.LayoutDirs.dataFiles(ckptDir)
-      .map(p => p -> java.nio.file.Files.size(
-        java.nio.file.Paths.get(p))).toMap
-    java.nio.file.Files.delete(java.nio.file.Paths.get(table, "_last_batch"))
-    CommitLogIngest.commitOnce(
-      Seq((999L, "poison")).toDF("id", "payload"), table, 2L * every - 1)
-    assert(CommitLogIngest.lastCommitted(table) == 2L * every - 1,
-      "marker was not repaired after the checkpoint-boundary replay")
+      .map(p => p -> Files.size(Paths.get(p))).toMap
+    val poison = Seq((999L, "poison")).toDF("id", "payload")
+    val qid = q2.id.toString
+    assert(CommitLogIngest.lastTxnEpoch(s, table, qid) == 2L * every - 1)
+    assert(!CommitLogIngest.commitEpoch(s, table,
+      unclaimed(new CommitLogWrite(table, poison.schema, qid,
+        overwrite = false, None), 2L * every - 1, poison),
+      statsCol = None, statsDir = None, schemaOf = Some(poison.schema),
+      queryId = qid, epochId = 2L * every - 1),
+      "the checkpoint-boundary replay committed")
+    assert(CommitLogIngest.latestVersion(table) == 2L * every - 1)
     val after2 = graft.sources.LayoutDirs.dataFiles(ckptDir)
-      .map(p => p -> java.nio.file.Files.size(
-        java.nio.file.Paths.get(p))).toMap
+      .map(p => p -> Files.size(Paths.get(p))).toMap
     assert(after2 == before2,
       "checkpoint-boundary replay rewrote the checkpoint it reads from")
     assert(CommitLogIngest.snapshot(s, table).count() == 2L * every)

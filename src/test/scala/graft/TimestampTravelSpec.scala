@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CommitLogIngest
@@ -65,6 +66,22 @@ class TimestampTravelSpec extends SparkSuite {
         .option("versionAsOf", "1").load().count()
     }
     assert(chain(e2).exists(_.contains("mutually exclusive")))
+    // a streamed epoch resolves by its _commit_ms stamp: with its dir's
+    // mtime pushed an hour ahead, the stamp still answers
+    import s.implicits._
+    val in = MemoryStream[(Long, Long)](s)
+    val q = in.toDF().toDF("id", "n")
+      .writeStream.format("graft-commitlog").option("path", table)
+      .option("checkpointLocation", tmp())
+      .start()
+    try { in.addData((20L, 40L)); q.processAllAvailable() } finally q.stop()
+    val t2 = System.currentTimeMillis()
+    assert(CommitLogIngest.latestVersion(table) == 2L)
+    java.nio.file.Files.setLastModifiedTime(
+      java.nio.file.Paths.get(table, "log", "version=2"),
+      java.nio.file.attribute.FileTime.fromMillis(t2 + 3600000L))
+    assert(CommitLogIngest.versionAt(table, t2) == 2L,
+      "a streamed version resolved by its dir mtime, not its stamp")
   }
 
   test("the dv mask join broadcasts the mask side (no data-side shuffle)") {
